@@ -37,11 +37,7 @@ object AnnCurve {
     val k = args.lift(3).map(_.toInt).getOrElse(16)
     val nlist = args.lift(4).map(_.toInt).getOrElse(0)
     val replicas = args.lift(5).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .appName("graft-ann-curve").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = Engine.session()
     try run(spark, sfDir, candK, m, k, nlist, replicas)
     finally spark.stop()
   }
@@ -109,6 +105,6 @@ object AnnCurve {
       println(f"nprobe=$nprobe%2d  adc: mean=$adcMean%.3f min=$adcMin%.2f" +
         f"   rerank$candK: mean=$rrMean%.3f min=$rrMin%.2f")
     }
-    Pins.flush()
+    Engine.release(spark)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): run every registry query on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query times
   * (integer centiseconds, keyed by query number — see the stdout-budget
@@ -37,35 +35,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      // sized for interleaved sweeps: the default generated-class cache
-      // (100 entries) holds ~15 queries' codegen units, so with ~90
-      // queries per sweep every class is evicted before the SAME query's
-      // next sample and each timed pass re-pays Janino compilation + JIT
-      // — the cost the warm-up sweep exists to absorb (measured: +32%
-      // on the registry total when this was left at default)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // allow shuffled-hash join where Spark's size conditions hold
-      // (guide §3.1/§9: SHJ skips both sides' sorts). The fallback to SMJ
-      // is decided from STATS ESTIMATES (canBuildLocalHashMap), not
-      // runtime sizes — a misestimated build side builds a non-spilling
-      // hash map (ADVICE r16) — so the r17 audit enumerated every query
-      // whose strategy changes under this flag (20; PLANS.md round 17):
-      // each SHJ builds on a unique-key id-universe frame (no hot key
-      // can concentrate one build map) and the measured A/B delta at
-      // sf0.1 is a wash (median ratio 0.997). The env knob is the
-      // recovery path if an SHJ build-side OOM ever appears at scale.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session()
 
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()
@@ -78,22 +49,10 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
-      // helper caches (postings, signatures) built during one run would
-      // otherwise satisfy the NEXT run's identical plan fragments via the
-      // cache manager — the warm-up is for JIT/codegen, not data; each
-      // timed run must pay its own materialization cost. Also bounds
-      // executor storage across the queries x passes. localCheckpoint'd
-      // frames (Budget/RowIds/CC) bypass the CacheManager and need their
-      // own unpersist. Untimed: cleanup cost is harness bookkeeping, not
-      // query work.
-      try {
-        graft.pipeline.Pins.flush()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      } catch { case e: Throwable => // cleanup must never abort the bench
-        System.err.println(s"[bench] cleanup after $name: ${e.getMessage}")
-      }
+      // each timed run must pay its own materialization cost: the
+      // warm-up is for JIT/codegen, not data. Untimed: cleanup cost is
+      // harness bookkeeping, not query work.
+      Engine.release(spark)
       if (sec >= 0) System.err.println(f"[bench] $name%-28s $sec%8.2f s")
       sec
     }

@@ -2,25 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Parity-lane engine dumps (tools/parity.py). Each lane's body lives in
-  * a `run(spark, ...)` method; the per-lane mains remain for ad-hoc use,
-  * and [[ParityAll]] executes a whole MANIFEST of lanes in ONE
-  * SparkSession — the parity harness used to pay full sbt + Spark
-  * startup (~70s) per lane, ~8 launches per run; one JVM cuts the lane
-  * wall time to roughly the sum of the actual stage work. */
-private[graft] object ParitySession {
-  def build(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-}
+// Parity-lane engine dumps (tools/parity.py). Each lane's body lives in
+// a `run(spark, ...)` method ending in the run-end [[Engine.release]]; the
+// per-lane mains remain for ad-hoc use, and [[ParityAll]] executes a whole
+// MANIFEST of lanes in ONE SparkSession — the parity harness used to pay
+// full sbt + Spark startup (~70s) per lane, ~8 launches per run; one JVM
+// cuts the lane wall time to roughly the sum of the actual stage work.
 
 /** Clean + golden-record + validation dump over one master TSV, so the
   * Python harness can diff them field-by-field against the output of the
@@ -50,12 +37,12 @@ object ParityDump {
     pipeline.JsonAudit.writeArray(
       pipeline.Validate.referenceReport(goldenBack),
       s"$outPrefix.validation.json")
-    pipeline.Pins.flush()
+    Engine.release(spark)
   }
 
   def main(args: Array[String]): Unit = {
     val Array(inTsv, outPrefix) = args
-    val spark = ParitySession.build()
+    val spark = Engine.session("WARN")
     run(spark, inTsv, outPrefix)
     spark.stop()
   }
@@ -88,13 +75,12 @@ object ParityFillDump {
       s"$outPrefix.filled.tsv", singleFile = true)
     pipeline.Tsv.write(r.changeLog, s"$outPrefix.filllog.tsv",
       singleFile = true)
-    r.unpersist()
-    pipeline.Pins.flush()
+    Engine.release(spark)
   }
 
   def main(args: Array[String]): Unit = {
     val Array(masterTsv, sourcesDir, outPrefix) = args
-    val spark = ParitySession.build()
+    val spark = Engine.session("WARN")
     run(spark, masterTsv, sourcesDir, outPrefix)
     spark.stop()
   }
@@ -117,12 +103,12 @@ object ParityRunDump {
         s"$outDir/cleaned_contacts.tsv",
         s"$outDir/fill_missing_log.json",
         s"$outDir/validation_errors.json")))
-    pipeline.Pins.flush()
+    Engine.release(spark)
   }
 
   def main(args: Array[String]): Unit = {
     val Array(masterTsv, sourcesDir, outDir) = args
-    val spark = ParitySession.build()
+    val spark = Engine.session("WARN")
     run(spark, masterTsv, sourcesDir, outDir)
     spark.stop()
   }
@@ -151,12 +137,12 @@ object ParityMailchimpDump {
       filled.drop("_name", "_email", "_phone")
         .orderBy(org.apache.spark.sql.functions.col("row_id").cast("long")),
       s"$outPrefix.mcfilled.tsv", singleFile = true)
-    pipeline.Pins.flush()
+    Engine.release(spark)
   }
 
   def main(args: Array[String]): Unit = {
     val Array(masterTsv, mailchimpTsv, outPrefix) = args
-    val spark = ParitySession.build()
+    val spark = Engine.session("WARN")
     run(spark, masterTsv, mailchimpTsv, outPrefix)
     spark.stop()
   }
@@ -177,7 +163,7 @@ object ParityAll {
     val Array(manifest) = args
     val lines = scala.io.Source.fromFile(manifest, "UTF-8")
       .getLines().map(_.trim).filter(_.nonEmpty).toList
-    val spark = ParitySession.build()
+    val spark = Engine.session("WARN")
     for (line <- lines) {
       val parts = line.split('\t')
       System.err.println(s"[parity-all] ${parts.mkString(" ")}")

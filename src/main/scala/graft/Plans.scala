@@ -1,25 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `explain("formatted")` for selected registry queries
   * so broadcast choices, pushed filters, read schemas, and whole-stage
   * codegen spans can be reviewed (and regressions spotted) without a
   * debugger. Usage: runMain graft.Plans [queryName ...]
   *
   * With `--metrics` as the first argument the queries are EXECUTED instead
-  * (noop materialization) and per-query stage-metric totals are printed —
-  * shuffle bytes read/written, records shuffled, disk spill. "Minimize
-  * shuffles" is this engine's central scale claim; these counters are the
-  * measured form of it (e.g. q72's sketch pass must shuffle KILOBYTES where
-  * an exact word count shuffles the vocabulary). */
+  * (noop materialization) and per-query totals are printed — shuffle bytes
+  * read/written, records shuffled, disk spill, Spark jobs, tasks, summed
+  * task run time and task CPU time. "Minimize shuffles" is this engine's
+  * central scale claim; these counters are the measured form of it (e.g.
+  * q72's sketch pass must shuffle KILOBYTES where an exact word count
+  * shuffles the vocabulary), and the job/task columns show where a query's
+  * wall time goes when it is bound by per-job overhead, not data work. */
 object Plans {
 
   private class StageMetrics extends org.apache.spark.scheduler.SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val written = new java.util.concurrent.atomic.AtomicLong
-    val records = new java.util.concurrent.atomic.AtomicLong
-    val spilled = new java.util.concurrent.atomic.AtomicLong
+    import java.util.concurrent.atomic.AtomicLong
+    val read, written, records, spilled = new AtomicLong
+    val jobs, tasks, runMs, cpuNs = new AtomicLong
+    override def onJobStart(
+        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
     override def onStageCompleted(
         s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
       val m = s.stageInfo.taskMetrics
@@ -27,54 +29,45 @@ object Plans {
       written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
       records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
       spilled.addAndGet(m.diskBytesSpilled)
+      tasks.addAndGet(s.stageInfo.numTasks)
+      runMs.addAndGet(m.executorRunTime)
+      cpuNs.addAndGet(m.executorCpuTime)
     }
-    def reset(): Unit = Seq(read, written, records, spilled).foreach(_.set(0))
+    def reset(): Unit = Seq(read, written, records, spilled, jobs, tasks,
+      runMs, cpuNs).foreach(_.set(0))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val metricsMode = args.headOption.contains("--metrics")
     val qargs = if (metricsMode) args.drop(1).toSeq else args.toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // same timezone as the graded Verify/Bench sessions — timezone-aware
-      // expression folding (timestamp casts in pushed filters, date_format)
-      // must audit the plan the driver actually runs
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror Bench/Verify's join-strategy posture (see Bench.scala) so
-      // the audited plans ARE the benched plans; SPARK_GRAFT_PREFER_SMJ=true
-      // A/Bs the SMJ-always default for the r17 join-strategy audit
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the graded posture, so the audited plans ARE the benched plans
+    val spark = Engine.session()
     val names = if (qargs == Seq("--all")) SparkEntry.queries.keys.toSeq.sorted
       else if (qargs.nonEmpty) qargs
       else if (metricsMode) SparkEntry.queries.keys.toSeq.sorted
       else Seq("q1_pricing_summary", "q2_revenue_filter", "q3_top_orders",
         "q9_part_text", "q21_ann_topk", "q28_embed_neardup")
-    val listener = new StageMetrics
+    val l = new StageMetrics
     if (metricsMode) {
-      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.addSparkListener(l)
       println(f"${"query"}%-28s ${"shuf_read_mb"}%12s ${"shuf_write_mb"}%13s " +
-        f"${"shuf_rows"}%10s ${"spill_mb"}%9s")
+        f"${"shuf_rows"}%10s ${"spill_mb"}%9s ${"jobs"}%5s ${"tasks"}%6s " +
+        f"${"task_s"}%8s ${"cpu_s"}%8s")
     }
     def mb(b: Long): String = f"${b / 1048576.0}%.2f"
     try
       for (n <- names) {
         SparkEntry.queries.get(n) match {
           case Some(q) if metricsMode =>
-            listener.reset()
+            l.reset()
             q(spark, sfDir).write.format("noop").mode("overwrite").save()
             org.apache.spark.graft.Listeners.drain(spark.sparkContext)
-            println(f"$n%-28s ${mb(listener.read.get)}%12s " +
-              f"${mb(listener.written.get)}%13s ${listener.records.get}%10d " +
-              f"${mb(listener.spilled.get)}%9s")
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = false))
+            println(f"$n%-28s ${mb(l.read.get)}%12s ${mb(l.written.get)}%13s " +
+              f"${l.records.get}%10d ${mb(l.spilled.get)}%9s " +
+              f"${l.jobs.get}%5d ${l.tasks.get}%6d " +
+              f"${l.runMs.get / 1e3}%8.2f ${l.cpuNs.get / 1e9}%8.2f")
+            Engine.release(spark)
           case Some(q) =>
             println(s"\n========== $n ==========")
             q(spark, sfDir).explain("formatted")

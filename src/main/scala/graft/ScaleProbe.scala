@@ -262,17 +262,7 @@ object ScaleProbe {
     val outDir = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session()
 
     replicate(spark, baseDir, outDir, replicas)
 
@@ -288,14 +278,7 @@ object ScaleProbe {
         case e: Exception =>
           System.err.println(s"[scale] $name FAILED at $dir: ${e.getMessage}")
           -1.0
-      } finally {
-        try {
-          graft.pipeline.Pins.flush()
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        } catch { case _: Throwable => () }
-      }
+      } finally Engine.release(spark)
     }
 
     // one warm-up + min-of-N at each scale, base first (JIT warm for both)

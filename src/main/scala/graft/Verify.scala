@@ -1,23 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror Bench's join-strategy posture so the oracle-verified plans
-      // are the benched plans (see Bench.scala)
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("WARN")
     new java.io.File(outDir).mkdirs()
     def deleteRecursively(f: java.io.File): Unit = {
       Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
@@ -44,14 +32,9 @@ object Verify {
         failed += name
         deleteRecursively(target)
       }
-      finally {
-        // bound storage across the registry run: operator helper caches and
-        // localCheckpoint'd frames are per-query scratch, not shared state
-        graft.pipeline.Pins.flush()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      // bound storage across the registry run: operator helper caches and
+      // localCheckpoint'd frames are per-query scratch, not shared state
+      finally Engine.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

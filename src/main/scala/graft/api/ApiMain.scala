@@ -1,7 +1,5 @@
 package graft.api
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.ContactsApp
 
 /** Runnable REST control surface (the backend_api.py equivalent):
@@ -16,14 +14,7 @@ object ApiMain {
   def main(args: Array[String]): Unit = {
     val Array(masterPath, sourcesDir, outDir) = args.take(3)
     val port = args.lift(3).map(_.toInt).getOrElse(8097)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("WARN")
     new java.io.File(outDir).mkdirs()
 
     def artifacts = ContactsApp.Artifacts(
@@ -31,26 +22,10 @@ object ApiMain {
       s"$outDir/fill_missing_log.json",
       s"$outDir/validation_errors.json")
 
-    // helper caches built inside operators (postings, signatures, exploded
-    // lines) are scoped to one run; without this they would accumulate in
-    // executor storage for the lifetime of the served session. clearCache
-    // only covers CacheManager entries — localCheckpoint'd frames (Fill's
-    // per-source checkpoints, Budget/RowIds pinned partitionings, the CC
-    // label frame) live as persistent RDDs and need their own unpersist.
-    // CONSTRAINT: this cleanup is correct only because runs are fully
-    // serialized (single-thread run executor) and each stage materializes
-    // its results before returning — a localCheckpoint'd frame has
-    // truncated lineage, so accessing it AFTER unpersist throws
-    // ("checkpoint block not found") rather than recomputing. Keep the
-    // cleanup at run end on the serialized executor; do not widen the pool
-    // or return lazily-consumed frames from stages without revisiting it.
+    // each run ends in the run-end release; see its CONSTRAINT on why
+    // that is safe only on this serialized run executor
     def cleanedUp(f: () => String): () => String =
-      () => try f() finally {
-        graft.pipeline.Pins.flush() // drain the scoped-pin registry too
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      () => try f() finally graft.Engine.release(spark)
 
     val stages: Map[String, () => String] = Map(
       "pipeline" -> cleanedUp(() => {

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI for the full contacts pipeline (the `python cleaning/run.py`
   * equivalent): ContactsMain <masterTsv> <sourcesDir> <outDir>
   *
@@ -12,14 +10,7 @@ import org.apache.spark.sql.SparkSession
 object ContactsMain {
   def main(args: Array[String]): Unit = {
     val Array(masterPath, sourcesDir, outDir) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("WARN")
     new java.io.File(outDir).mkdirs()
 
     val r = ContactsApp.run(spark, masterPath, sourcesDir,

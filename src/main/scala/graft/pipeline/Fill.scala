@@ -27,16 +27,10 @@ object Fill {
   case class ChangeLogEntry(row_id: Long, field: String, old_value: String,
       new_value: String, source_file: String, matched_on: String)
 
-  /** @param pinned the operator's internal persist pins (probe/build
-    *        projections). Call [[unpersist]] once BOTH output frames have
-    *        been consumed — the change log is lazy and still reads through
-    *        the pins. Harness runs (Bench/Verify) release them via
-    *        clearCache instead; long-lived sessions composing many fills
-    *        should release explicitly or the pins accumulate. */
-  case class FillResult(filled: DataFrame, changeLog: DataFrame,
-      pinned: Seq[DataFrame] = Nil) {
-    def unpersist(): Unit = pinned.foreach(_.unpersist(false))
-  }
+  /** Both frames are lazy and read through the operator's probe/build
+    * pins, which the caller's next [[Pins.flush]] releases — flush only
+    * once both have been consumed. */
+  case class FillResult(filled: DataFrame, changeLog: DataFrame)
 
   /** Normalized match keys (P5): _name/_email/_phone shadow columns. */
   def withMatchKeys(df: DataFrame, name: Column, email: Column,
@@ -64,19 +58,16 @@ object Fill {
     // Both projections are PERSIST-PINNED: each feeds all three key-join
     // branches below, and without the pin Spark recomputes the upstream
     // master/source plan once per branch (the r5 bench showed q69 paying
-    // three master scans). MEMORY_AND_DISK because the probe is data-sized;
-    // the pin is a helper cache in the same class as Dedup's postings —
-    // per-query scratch that Bench/Verify cleanup (clearCache) releases.
+    // three master scans). MEMORY_AND_DISK (the Pins default) because the
+    // probe is data-sized; released at the caller's run boundary.
     val needsFill = targetCols.map(c => Cleaning.isMissing(col(c))).reduce(_ || _)
-    val probe = master.filter(needsFill)
+    val probe = Pins.pin(master.filter(needsFill)
       .select((Seq("row_id", "_name", "_email", "_phone") ++ targetCols)
-        .map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .map(col): _*))
 
-    val build = source
+    val build = Pins.pin(source
       .select((Seq("src_order", "_name", "_email", "_phone") ++
-        fieldMap.values.toSeq.distinct).map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        fieldMap.values.toSeq.distinct).map(col): _*))
 
     // Union of three equi-joins = the reference's three hash indexes (J2).
     // Spark plans each as a shuffled/broadcast hash join; the union is the
@@ -150,7 +141,7 @@ object Fill {
         col("__c.old_value").as("old_value"), col("__c.new_value").as("new_value"),
         lit(sourceFile).as("source_file"), col("__matched_on").as("matched_on"))
 
-    FillResult(filled, changeLog, Seq(probe, build))
+    FillResult(filled, changeLog)
   }
 
   /** Sequential multi-source fill (SURVEY.md §7.4.5): fills from file k are
@@ -162,18 +153,14 @@ object Fill {
       minMatches: Int = 2): FillResult = {
     var current = master
     var logs = Vector.empty[DataFrame]
-    var pins = Vector.empty[DataFrame]
     for ((name, src, fieldMap) <- sources) {
       val r = fillFromSource(current, src, fieldMap, name, minMatches)
       current = r.filled.localCheckpoint(eager = true)
       logs :+= r.changeLog
-      // pins stay live until the CALLER consumes the change logs (they
-      // are still lazy here); the aggregate result carries every pin
-      pins ++= r.pinned
     }
     val log = logs.reduceOption(_ unionByName _)
       .getOrElse(master.sparkSession.emptyDataFrame)
-    FillResult(current, log, pins)
+    FillResult(current, log)
   }
 
   /** J1 — the Mailchimp correlated-lookup special case

@@ -17,10 +17,10 @@ import org.apache.spark.storage.StorageLevel
   * executors evict under pressure.
   *
   * Every such internal pin routes through [[pin]], and the run boundaries
-  * (Verify/Bench per-query cleanup, [[Pipeline.RunResult.release]], or any
+  * ([[graft.Engine.release]], [[Pipeline.RunResult.release]], or any
   * library caller at its own batch boundary) call [[flush]] to unpersist
-  * exactly the operator-internal scratch — without `catalog.clearCache()`'s
-  * collateral drop of the caller's OWN cached frames.
+  * exactly the operator-internal scratch — without the catalog-wide cache
+  * clear's collateral drop of the caller's OWN cached frames.
   *
   * Scope: PER DRIVER THREAD. Each flow (a batch run, a streaming query's
   * execution thread) accumulates pins in its own registry, and [[flush]]

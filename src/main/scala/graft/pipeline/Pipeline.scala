@@ -13,19 +13,12 @@ object Pipeline {
 
   case class StageResult(name: String, seconds: Double, rows: Long)
 
-  /** @param pinned internal persist pins (Fill's probe/build projections);
-    *        [[release]] them once the output frames have been written —
-    *        the change log reads through them lazily until then. */
+  /** [[release]] the run's pins (stage boundaries, Fill's probe/build
+    * projections, RowIds' sampled exchange) once the output frames have
+    * been written — the change log reads through them lazily until then. */
   case class RunResult(cleaned: DataFrame, changeLog: DataFrame,
-      validationErrors: DataFrame, stages: Seq[StageResult], passed: Boolean,
-      pinned: Seq[DataFrame] = Nil) {
-    def release(): Unit = {
-      pinned.foreach(_.unpersist(false))
-      // operator-internal pins created during the run (RowIds' sampled
-      // exchange, any composed operator scratch) — the run boundary is
-      // the scoped lifecycle for those too
-      Pins.flush()
-    }
+      validationErrors: DataFrame, stages: Seq[StageResult], passed: Boolean) {
+    def release(): Unit = Pins.flush()
   }
 
   private def timed[T](name: String, out: scala.collection.mutable.Buffer[StageResult])
@@ -71,6 +64,6 @@ object Pipeline {
     val errors = timed("validate", stages)(Validate.errors(deduped))
 
     RunResult(deduped, fillRes.changeLog, errors, stages.toSeq,
-      Validate.passes(errors), fillRes.pinned)
+      Validate.passes(errors))
   }
 }

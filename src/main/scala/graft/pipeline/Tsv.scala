@@ -16,30 +16,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tsv {
 
+  /** The reference's TSV dialect, shared by every reader (batch and
+    * stream) and the sink. CSV fidelity against reference fixtures
+    * (SURVEY.md §7.4.7): embedded-quote fields like """EXO""" use doubled
+    * quotes, and quoted fields span lines (pandas honors both) ->
+    * multiLine. Cost: per-FILE parallelism instead of per-split — fine
+    * for many-file ingest dirs, documented for the single-giant-file
+    * case. multiLine is a read-side option; the writer ignores it. */
+  val Dialect: Map[String, String] = Map(
+    "sep" -> "\t", "header" -> "true",
+    "quote" -> "\"", "escape" -> "\"", "multiLine" -> "true")
+
   /** Typed TSV scan (S1): header + schema inference. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("sep", "\t").option("header", true)
-      .option("inferSchema", true)
-      // CSV fidelity against reference fixtures (SURVEY.md §7.4.7):
-      // embedded-quote fields like """EXO""" use doubled quotes, and
-      // quoted fields span lines (pandas honors both) -> multiLine. Cost:
-      // per-FILE parallelism instead of per-split — fine for many-file
-      // ingest dirs, documented for the single-giant-file case.
-      .option("quote", "\"").option("escape", "\"")
-      .option("multiLine", true)
-      .csv(path)
+    spark.read.options(Dialect).option("inferSchema", true).csv(path)
 
   /** All-string TSV scan (S2): every cell StringType, nulls -> "". */
-  def readAllString(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read
-      .option("sep", "\t").option("header", true)
-      .option("inferSchema", false)
-      .option("quote", "\"").option("escape", "\"")
-      .option("multiLine", true)
-      .csv(path)
-    df.na.fill("")
-  }
+  def readAllString(spark: SparkSession, path: String): DataFrame =
+    spark.read.options(Dialect).option("inferSchema", false).csv(path)
+      .na.fill("")
 
   /** Enumerate `*.tsv` in a directory in deterministic sorted order (S4).
     * The reference iterates `os.listdir` order — platform-dependent; sorted
@@ -68,9 +63,7 @@ object Tsv {
   def write(df: DataFrame, path: String, singleFile: Boolean = false): Unit = {
     val out = if (singleFile) df.coalesce(1) else df
     val target = if (singleFile) path + ".dir" else path
-    out.write.mode("overwrite")
-      .option("sep", "\t").option("header", true)
-      .option("quote", "\"").option("escape", "\"") // doubled-quote escaping, matching the readers
+    out.write.mode("overwrite").options(Dialect)
       .option("emptyValue", "").option("nullValue", "")
       // Spark's CSV WRITER trims cell whitespace by default (the write-side
       // defaults of ignore*WhiteSpace are true, unlike the read side) —

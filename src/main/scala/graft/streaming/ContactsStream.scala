@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -33,9 +34,7 @@ object ContactsStream {
     * instead of one unbounded one). */
   def readContacts(spark: SparkSession, dir: String, schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream
-      .option("sep", "\t").option("header", true)
-      .option("quote", "\"").option("escape", "\"")
+    val r = spark.readStream.options(graft.pipeline.Tsv.Dialect)
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
     r.schema(schema).csv(dir)
   }
@@ -145,22 +144,9 @@ object ContactsStream {
     * legitimate first-batch state). */
   def latestVersionBefore(spark: SparkSession, goldenDir: String,
       beforeBatchId: Long): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(goldenDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries =
-      try fs.listStatus(root).toSeq
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    // strict v=<digits> match: a partial rename or junk dir like v=tmp
-    // must be ignored, not NumberFormatException the micro-batch
-    val candidates = entries
-      .filter(st => st.isDirectory && st.getPath.getName.matches("v=\\d+"))
-      .map(st => (st.getPath.getName.stripPrefix("v=").toLong, st.getPath))
-      .filter(_._1 < beforeBatchId)
-    val committed = candidates.collect {
-      case (v, p) if fs.exists(new Path(p, CommitMarker)) ||
-        fs.exists(new Path(p, "_SUCCESS")) => v
-    }
+    val candidates = snapshots(spark, goldenDir)._2
+      .filter(_.version < beforeBatchId)
+    val committed = candidates.filter(_.committed).map(_.version)
     if (candidates.nonEmpty && committed.isEmpty)
       throw new IllegalStateException(
         s"goldenDir $goldenDir has ${candidates.size} snapshot " +
@@ -170,12 +156,36 @@ object ContactsStream {
     committed.sorted.lastOption
   }
 
+  private case class Snapshot(version: Long, path: Path, committed: Boolean)
+
+  /** Every `v=<digits>` snapshot directory under `goldenDir` with its
+    * commit state (see [[latestVersionBefore]]), plus the filesystem it
+    * lives on. Only a MISSING `goldenDir` lists as empty; any other
+    * filesystem failure raises. The name match is strict: a partial
+    * rename or junk dir like v=tmp is ignored, never a
+    * NumberFormatException in the micro-batch. */
+  private def snapshots(spark: SparkSession,
+      goldenDir: String): (FileSystem, Seq[Snapshot]) = {
+    val root = new Path(goldenDir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val entries =
+      try fs.listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    (fs, entries
+      .filter(st => st.isDirectory && st.getPath.getName.matches("v=\\d+"))
+      .map { st =>
+        val p = st.getPath
+        Snapshot(p.getName.stripPrefix("v=").toLong, p,
+          fs.exists(new Path(p, CommitMarker)) ||
+            fs.exists(new Path(p, "_SUCCESS")))
+      })
+  }
+
   /** Commit-marker filename for golden snapshots (see
     * [[latestVersionBefore]]). */
   val CommitMarker = "_GRAFT_COMMIT"
 
   private def writeCommitMarker(spark: SparkSession, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(dir, CommitMarker)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.create(p, true).close()
@@ -198,26 +208,14 @@ object ContactsStream {
     require(keepLast >= 2,
       s"keepLast must be >= 2 (replay of the newest batch resolves the " +
         s"second-newest committed snapshot); got $keepLast")
-    import org.apache.hadoop.fs.Path
-    val root = new Path(goldenDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries =
-      try fs.listStatus(root).toSeq
-      catch { case _: java.io.FileNotFoundException => return Seq.empty }
-    val versioned = entries // strict v=<digits>: see latestVersionBefore
-      .filter(st => st.isDirectory && st.getPath.getName.matches("v=\\d+"))
-      .map(st => (st.getPath.getName.stripPrefix("v=").toLong, st.getPath))
-    val committed = versioned.collect {
-      case (v, p) if fs.exists(new Path(p, CommitMarker)) ||
-        fs.exists(new Path(p, "_SUCCESS")) => v
-    }.sorted
+    val (fs, versioned) = snapshots(spark, goldenDir)
+    val committed = versioned.filter(_.committed).map(_.version).sorted
     if (committed.size <= keepLast) return Seq.empty
     val keptFloor = committed.takeRight(keepLast).head
-    val doomed = versioned.filter { case (v, p) =>
-      v < keptFloor // committed beyond keepLast, or stale crash artifacts
-    }
-    doomed.foreach { case (_, p) => fs.delete(p, true) }
-    doomed.map(_._1).sorted
+    // committed beyond keepLast, or stale crash artifacts
+    val doomed = versioned.filter(_.version < keptFloor)
+    doomed.foreach(d => fs.delete(d.path, true))
+    doomed.map(_.version).sorted
   }
 
   /** The current golden table (latest committed snapshot), if any. */

@@ -11,7 +11,7 @@ import graft.queries.Queries
   * route through [[Pins]] so a run boundary releases them — a long-lived
   * session composing many operators must not accumulate cache entries.
   * (localCheckpoint'd frames — CC labels, PageRank iterations — are a
-  * separate lifecycle released by the Verify/Bench getPersistentRDDs sweep;
+  * separate lifecycle released by Engine.release's persistent-RDD sweep;
   * the queries below are chosen pin-only.) */
 class PinsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -47,6 +47,34 @@ class PinsSpec extends AnyFunSuite {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty,
       s"net-new persisted RDDs survived Pins.flush: $leaked")
+  }
+
+  test("a pipeline run's release leaves no pin and no cache entry behind") {
+    import spark.implicits._
+    import graft.pipeline.{Fill, Pipeline}
+    Pins.flush()
+    def entries = org.apache.spark.sql.graft.CacheEntries.count(spark)
+    val entriesBefore = entries
+    val m = Seq(
+      ("jo do", "", "5551234567", "2020-01-01 00:00:00"),
+      ("jo do", "jo@x.com", "5551234567", "2021-01-01 00:00:00"),
+      ("bo bi", "bo@y.com", "5550000000", "2020-06-01 00:00:00"))
+      .toDF("FULLNAME", "EMAIL", "MOBILE", "LAST_UPDATED")
+    val src = Fill.withMatchKeys(
+      Seq((1L, "jo do", "jo@x.com", "5551234567"))
+        .toDF("src_order", "name", "email", "phone"),
+      col("name"), col("email"), col("phone"))
+    val r = Pipeline.run(spark,
+      Fill.withMatchKeys(m, col("FULLNAME"), col("EMAIL"), col("MOBILE")),
+      Seq(("s1", src, Map("EMAIL" -> "email"))),
+      orderCols = Seq("FULLNAME", "MOBILE", "EMAIL"))
+    assert(r.changeLog.count() == 1 && r.cleaned.count() == 2)
+    assert(entries > entriesBefore,
+      "expected the run to pin its stages and Fill's probe/build")
+    r.release()
+    assert(Pins.activeCount == 0 && entries == entriesBefore,
+      s"release left ${Pins.activeCount} pin(s) and " +
+        s"${entries - entriesBefore} cache entr(ies)")
   }
 
   test("concurrent flows are isolated per-thread; dead owner's pins are adopted") {

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Queries
 
 /** Physical-plan regression net: the scale properties PLANS.md documents
-  * must survive refactors. Representative registry queries are planned (not
-  * executed) at sf0.001 and their pre-AQE physical plan is string-checked:
+  * must survive refactors. Every registry query is planned (not executed)
+  * once at sf0.001; the registry sweeps walk the optimized plans and the
+  * named checks string-check the pre-AQE physical plans:
   *
   *  - no CartesianProduct / BroadcastNestedLoopJoin anywhere except the two
   *    documented exact verifiers (q21 broadcast-NLJ top-k, q28 quadratic
@@ -17,10 +18,16 @@ class PlanGuardSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val SfDir = "/root/testdata/sf0.001"
 
-  private def planOf(name: String): String = {
-    val df = Queries.all.find(_.name == name).get.spark(spark, SfDir)
-    df.queryExecution.sparkPlan.toString
-  }
+  /** Every registry query built ONCE: name -> (optimized logical plan,
+    * pre-AQE physical plan text). The sweeps and [[planOf]] all read it. */
+  private lazy val plans: Map[String, (org.apache.spark.sql.catalyst.plans
+      .logical.LogicalPlan, String)] =
+    Queries.all.map { q =>
+      val qe = q.spark(spark, SfDir).queryExecution
+      q.name -> (qe.optimizedPlan, qe.sparkPlan.toString)
+    }.toMap
+
+  private def planOf(name: String): String = plans(name)._2
 
   test("registry sweep: no single-task window over a corpus-sized frame") {
     assume(new java.io.File(SfDir).isDirectory)
@@ -44,8 +51,7 @@ class PlanGuardSpec extends AnyFunSuite {
       case other => other.children.forall(reduced)
     }
     val offenders = Queries.all.flatMap { q =>
-      val plan = q.spark(spark, SfDir).queryExecution.optimizedPlan
-      plan.collect {
+      plans(q.name)._1.collect {
         case w: Window if w.partitionSpec.forall(_.foldable)
             && !reduced(w.child) =>
           s"${q.name}: unpartitioned Window over non-reduced input:\n$w"
@@ -110,8 +116,7 @@ class PlanGuardSpec extends AnyFunSuite {
         nonFoldable.forall(_.references.forall(r => lowCard(r.name)))
     }
     val offenders = Queries.all.flatMap { q =>
-      val plan = q.spark(spark, SfDir).queryExecution.optimizedPlan
-      plan.collect {
+      plans(q.name)._1.collect {
         case w: Window if fewKeyWindow(w) && !metaBounded(w.child) =>
           s"${q.name}: few-key window over non-reduced input:\n$w"
       }
@@ -148,8 +153,7 @@ class PlanGuardSpec extends AnyFunSuite {
     // scale change ever degrades their BNLJ to a cartesian)
     val sanctioned = Set("q21_ann_topk", "q28_embed_neardup")
     val offenders = Queries.all.flatMap { q =>
-      val plan = q.spark(spark, SfDir).queryExecution.sparkPlan.toString
-      if (plan.contains("CartesianProduct") && !sanctioned(q.name))
+      if (planOf(q.name).contains("CartesianProduct") && !sanctioned(q.name))
         Some(q.name)
       else None
     }

@@ -171,6 +171,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(!graft.streaming.DocStream.absorbOnce(idx, b2, 1L))
   }
 
+  test("golden upsert stream reads the batch TSV dialect: multi-line and doubled-quote cells") {
+    import java.nio.file.Files
+    import graft.pipeline.{Clean, GoldenRecord, Tsv}
+    import graft.streaming.ContactsStream
+    // a quoted cell spanning two lines must stay ONE row (a split row
+    // would land its second line as a row whose ROW_ID is the cell's
+    // tail), and a doubled quote must unescape as the batch reader does
+    val in = Files.createTempDirectory("gold-dialect-in")
+    val golden = Files.createTempDirectory("gold-dialect-out").toString + "/golden"
+    val ckpt = Files.createTempDirectory("gold-dialect-ckpt").toString
+    val drop = in.resolve("drop.tsv")
+    Files.writeString(drop, "ROW_ID\tFULLNAME\tEMAIL\tNOTES\n" +
+      "1\tann x\tann@x.com\t\"met at the fair\nfollow up in May\"\n" +
+      "2\tbob y\tbob@x.com\t\"goes by \"\"Bobby\"\"\"\n" +
+      "3\tann x\tann@x.com\tprefers email\n")
+    val schema = ContactsStream.schemaOf(spark, drop.toString)
+    ContactsStream.goldenUpsertStream(
+      spark, in.toString, schema, golden, ckpt, "ROW_ID")
+    val got = ContactsStream.currentGolden(spark, golden).get
+    val batch = GoldenRecord.dedupe(
+      Clean(Tsv.readAllString(spark, drop.toString)), "ROW_ID")
+    assert(batch.count() == 2, "ann's two rows merge, bob stands alone")
+    assert(got.count() == batch.count()
+        && got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty,
+      "streamed golden rows diverged from the batch read of the same file")
+  }
+
   test("streaming dedup drops redelivered events (dropDuplicatesWithinWatermark)") {
     val dir = "/root/testdata/sf0.001"
     // simulate at-least-once upstream delivery: the same file lands twice
