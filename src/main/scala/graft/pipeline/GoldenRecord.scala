@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.GoldenMerge
 import graft.functions.Cleaning
 
 /** Golden-record deduplication — the reference's centerpiece operator
@@ -10,37 +11,36 @@ import graft.functions.Cleaning
   * key and, per column, keep the "most complete" value: the longest valid
   * value, ties broken by recency, then by stable row order.
   *
-  * Spark-first design: the whole merge is ONE hash aggregation using the
-  * built-in `max_by` with a *strict* ordering struct — (length, last_updated,
+  * Spark-first design: the whole merge is ONE aggregate,
+  * [[graft.expressions.GoldenMerge]], that picks every column's winner in
+  * one pass per row under a *strict* ordering — (length, last_updated,
   * -row_id) is totally ordered because row_id is unique, so there are no
   * nondeterministic ties (the explicit-determinism requirement of SURVEY.md
   * §4: the reference's pre-sort-then-groupby order cannot survive a shuffle,
-  * so the ordering is folded INTO the aggregate). `max_by` gets partial
-  * aggregation (map-side combine) for free, which is what makes this one
-  * shuffle of group-local winners — not rows — at 100 TB.
+  * so the ordering is folded INTO the aggregate). It plans as an
+  * ObjectHashAggregate with map-side partial aggregation, so the exchange
+  * carries group-local winners, not rows, and no row is sorted below the
+  * hash map's per-task fallback threshold.
   */
 object GoldenRecord {
 
-  /** Ordering struct for mostComplete: null for invalid values so max_by
-    * skips them entirely. Lexicographic struct comparison = longest value,
-    * then latest timestamp, then earliest row. */
-  private def completeness(value: Column, lastUpdated: Column, rowId: Column): Column =
-    when(Cleaning.isPresent(value.cast("string")),
-      struct(
-        length(value.cast("string")).as("len"),
-        // try_cast: an unparseable string ts (raw, un-Cleaned frames)
-        // degrades to the epoch fallback instead of throwing under ANSI
-        coalesce(lastUpdated.try_cast("timestamp"),
-          lit("1970-01-01 00:00:00").cast("timestamp")).as("ts"),
-        (-rowId).as("neg_row")))
-      .otherwise(lit(null))
+  /** The merge over `values` as one struct column (`c0`, `c1`, …): invalid
+    * values (null, blank, sentinel) never win; the recency key is
+    * `lastUpdated` as a timestamp, with the epoch for null or unparseable
+    * values (try_cast: raw, un-Cleaned frames degrade instead of throwing
+    * under ANSI); the row key is `-rowId`, null lowest. */
+  private def merge(values: Seq[Column], lastUpdated: Column, rowId: Column): Column =
+    GoldenMerge.column(
+      coalesce(lastUpdated.try_cast("timestamp"),
+        lit("1970-01-01 00:00:00").cast("timestamp")),
+      -rowId, values)
 
   /** Most-complete value of `value` within the group: longest valid (non-null,
     * non-"", non-sentinel) value; equal lengths -> the most recently updated
     * row; still equal -> the earliest row in stable input order.
     * (clean_contacts.py:204-226 with the O1 recency pre-sort folded in.) */
   def mostComplete(value: Column, lastUpdated: Column, rowId: Column): Column =
-    max_by(value, completeness(value, lastUpdated, rowId))
+    merge(Seq(value), lastUpdated, rowId).getField("c0")
 
   /** Attach the dedup key (clean_contacts.py:164-179): lower(email), falling
     * back to lower(fullname) + "-" + mobile. Case-insensitive role resolution
@@ -72,9 +72,9 @@ object GoldenRecord {
     val keyed = if (df.columns.contains(keyCol)) df else withDedupKey(df, keyCol)
     val ts = lastUpdatedCol.map(col).getOrElse(lit(null).cast("timestamp"))
     val dataCols = keyed.columns.toSeq.filterNot(c => c == keyCol)
-    val aggs = dataCols.map(c =>
-      mostComplete(col(s"`$c`"), ts, col(s"`$rowIdCol`")).as(c))
-    keyed.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*).drop(keyCol)
+    val best = merge(dataCols.map(c => col(s"`$c`")), ts, col(s"`$rowIdCol`"))
+    keyed.groupBy(col(keyCol)).agg(best.as("__golden"))
+      .select(dataCols.indices.map(i => col("__golden").getField(s"c$i").as(dataCols(i))): _*)
   }
 
   /** Incremental golden-record upsert — the daily-ingest shape: instead of

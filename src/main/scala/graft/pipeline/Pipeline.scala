@@ -57,9 +57,11 @@ object Pipeline {
 
     val cleaned = timed("clean", stages)(Clean(filled))
 
+    // row order is explicit (O2): the merge emits rows in hash order, which
+    // moves with the core count, and every sink of the result writes it
     val deduped = timed("dedup", stages)(
       GoldenRecord.dedupe(cleaned, rowIdCol = "row_id",
-        lastUpdatedCol = Roles.exact(cleaned, "LAST_UPDATED")))
+        lastUpdatedCol = Roles.exact(cleaned, "LAST_UPDATED")).orderBy("row_id"))
 
     val errors = timed("validate", stages)(Validate.errors(deduped))
 

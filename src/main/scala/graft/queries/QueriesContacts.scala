@@ -43,8 +43,9 @@ private[queries] object QueriesContacts {
 
     // ---------------------------------------------------------------------
     // q12: the golden-record mostComplete aggregate (A1) — longest value wins,
-    // ties -> earliest row — via the library's max_by-with-strict-order
-    // formulation (partial-agg friendly: one shuffle of per-group winners).
+    // ties -> earliest row — via the library's row-wide GoldenMerge
+    // aggregate (an ObjectHashAggregate with partial aggregation: one
+    // shuffle of per-group winners, no sort of the input rows).
     QueryDef("q12_golden_name",
       (s, dir) => {
         val c = t(s, dir, "customer")

@@ -36,6 +36,10 @@ class DeterminismSpec extends AnyFunSuite {
     def merge(df: DataFrame) = df.groupBy("g")
       .agg(GoldenRecord.mostComplete(col("v"), col("ts"), col("id")).as("best"))
     same(merge(contacts.repartition(1)), merge(contacts.repartition(13)))
+    // the row-wide form: every column's winner from one aggregate
+    def dedupe(df: DataFrame) = GoldenRecord.dedupe(
+      df.withColumn("w", reverse(col("v"))), "id", Some("ts"), keyCol = "g")
+    same(dedupe(contacts.repartition(1)), dedupe(contacts.repartition(13)))
   }
 
   test("exact dedup survivor is partitioning-invariant") {

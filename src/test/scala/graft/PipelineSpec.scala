@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,12 +26,16 @@ class PipelineSpec extends AnyFunSuite {
       ("g1", "the longest value", ts("2019-01-01 00:00:00"), 2L),
       ("g1", "nan", ts("2024-01-01 00:00:00"), 3L),
       ("g2", "", ts("2020-01-01 00:00:00"), 4L),
-      ("g2", "nan", ts("2020-01-01 00:00:00"), 5L))
+      ("g2", "nan", ts("2020-01-01 00:00:00"), 5L),
+      // Spark's trim strips spaces only: a tab is a value, and the
+      // earlier row wins the length tie
+      ("g3", "\t", ts("2020-01-01 00:00:00"), 6L),
+      ("g3", "a", ts("2020-01-01 00:00:00"), 7L))
       .toDF("g", "v", "ts", "id")
     val out = df.groupBy("g")
       .agg(GoldenRecord.mostComplete(col("v"), col("ts"), col("id")).as("best"))
       .orderBy("g").collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    assert(out == Seq(("g1", "the longest value"), ("g2", null)))
+    assert(out == Seq(("g1", "the longest value"), ("g2", null), ("g3", "\t")))
   }
 
   test("mostComplete tie-breaks: equal length -> latest ts -> earliest row") {
@@ -59,18 +64,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(joanna.getAs[String]("MOBILE") == "111") // "" excluded
   }
 
-  test("MostCompleteAgg registers as a SQL UDAF") {
-    spark.udf.register("most_complete", graft.operators.MostCompleteAgg.fn)
-    Seq(("g1", "short", 1L, 1L), ("g1", "the longest", 2L, 2L),
-      ("g1", "nan", 3L, 3L))
-      .toDF("g", "v", "tsu", "id").createOrReplaceTempView("mc_in")
-    val r = spark.sql(
-      "SELECT g, most_complete(v, tsu, id) AS best FROM mc_in GROUP BY g")
-      .head()
-    assert(r.getString(1) == "the longest")
-  }
+  /** The per-column `max_by` formulation of the merge: an ordering struct
+    * (length, ts, -row id) that is null for a missing value. The reference
+    * the row-wide aggregate is checked against. */
+  private def maxByReference(value: Column, lastUpdated: Column,
+      rowId: Column): Column =
+    max_by(value, when(Cleaning.isPresent(value.cast("string")), struct(
+      length(value.cast("string")).as("len"),
+      coalesce(lastUpdated.try_cast("timestamp"),
+        lit("1970-01-01 00:00:00").cast("timestamp")).as("ts"),
+      (-rowId).as("neg_row"))))
 
-  test("MostCompleteAgg (custom Aggregator) agrees with the max_by fast path") {
+  test("mostComplete agrees with the max_by reference") {
     val rnd = new scala.util.Random(11)
     val sentinels = Seq(null, "", "nan", "None", "NaN", " ")
     val rows = (1 to 400).map { i =>
@@ -84,11 +89,71 @@ class PipelineSpec extends AnyFunSuite {
     val fast = df.groupBy("g")
       .agg(GoldenRecord.mostComplete(col("v"), col("ts"), col("id")).as("best"))
     val exact = df.groupBy("g")
-      .agg(graft.operators.MostCompleteAgg(col("v"),
-        unix_micros(col("ts")), col("id")).as("best"))
+      .agg(maxByReference(col("v"), col("ts"), col("id")).as("best"))
     val d1 = fast.exceptAll(exact); val d2 = exact.exceptAll(fast)
     assert(d1.isEmpty && d2.isEmpty,
-      s"fast path and Aggregator disagree: ${d1.collect().toSeq} ${d2.collect().toSeq}")
+      s"mostComplete and max_by disagree: ${d1.collect().toSeq} ${d2.collect().toSeq}")
+  }
+
+  test("dedupe == per-column max_by on random groups, through partial, " +
+      "merge, serialize and sort fallback") {
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val rnd = new scala.util.Random(29)
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    // short values so lengths tie often; every sentinel, padded too; blank
+    // cells that trim() keeps (tab, NBSP); supplementary code points, whose
+    // length is 1 code point but 2 UTF-16 units
+    val blanks = Cleaning.MissingSentinels.flatMap(m => Seq(m, s"  $m ")) ++
+      Seq(null, "   ", "\t", "\u00a0", " \t\n ")
+    val odd = Seq("\uD83D\uDE00", "a\uD83D\uDE00", "\uD835\uDC9Cb", "ab", "é")
+    def str(): String = rnd.nextInt(10) match {
+      case 0 | 1 | 2 => pick(blanks)
+      case 3 => pick(odd)
+      case _ => rnd.alphanumeric.take(1 + rnd.nextInt(3)).mkString
+    }
+    // few distinct timestamps: ts ties; null and unparseable -> epoch
+    val lus = Seq(null, "garbage", "2020-01-01 00:00:00", "2021-06-01 12:00:00",
+      "2021-06-01 12:00:00")
+    val stamps = Seq(null, ts("2020-01-01 00:00:00"), ts("2020-01-01 00:00:01"),
+      ts("1999-12-31 23:59:59"))
+    val groups = 600
+    val seen = scala.collection.mutable.Set.empty[Int]
+    val rows = (1 to 3000).map { i =>
+      val g = rnd.nextInt(groups)
+      // at most one null row id per group: two null ids with equal length
+      // and ts are a full tie, which both forms resolve by input order
+      val id: java.lang.Long =
+        if (seen.add(g) && rnd.nextDouble() < 0.3) null else Long.box(i.toLong)
+      (s"g$g", s"g$g", id, pick(lus), str(), pick(stamps),
+        if (rnd.nextInt(5) == 0) null else Long.box(rnd.nextInt(2001) - 1000L),
+        if (rnd.nextInt(5) == 0) null
+        else Double.box(pick(Seq(1.5, -2.25, 10.0, Double.NaN,
+          Double.PositiveInfinity, rnd.nextInt(100) / 4.0))))
+    }
+    // 3 partitions, every one holding more than 128 of the 600 keys: the
+    // partial and the final aggregate both fall back to sorting
+    val df = rows.toDF("g", "gk", "id", "lu", "v", "t", "l", "d").repartition(3)
+    val dataCols = df.columns.toSeq.filterNot(_ == "g")
+    val golden = GoldenRecord.dedupe(df, "id", Some("lu"), keyCol = "g")
+    val want = df.groupBy("g")
+      .agg(maxByReference(col(dataCols.head), col("lu"), col("id")).as(dataCols.head),
+        dataCols.tail.map(c => maxByReference(col(c), col("lu"), col("id")).as(c)): _*)
+      .select(dataCols.map(col): _*)
+    def byKey(rs: Array[org.apache.spark.sql.Row]) =
+      rs.map(r => r.getString(0) -> r.toSeq).toMap
+    val got = byKey(golden.collect())
+    val exp = byKey(want.collect())
+    assert(got.size == exp.size && got.size == rows.map(_._1).distinct.size)
+    val diff = exp.keys.filter(k => got(k) != exp(k)).toSeq.sorted
+    assert(diff.isEmpty,
+      s"${diff.size} groups differ, e.g. ${diff.take(3).map(k => (got(k), exp(k)))}")
+    val aggs = new AdaptiveSparkPlanHelper {}.collect(
+      golden.queryExecution.executedPlan) { case a: ObjectHashAggregateExec => a }
+    assert(aggs.size == 2 &&
+      aggs.forall(_.metrics("numTasksFallBacked").value > 0),
+      s"both aggregate phases should fall back to sorting: " +
+        aggs.map(_.metrics("numTasksFallBacked").value))
   }
 
   test("incremental upsert == full re-dedupe") {

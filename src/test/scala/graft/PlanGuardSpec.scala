@@ -316,6 +316,21 @@ class PlanGuardSpec extends AnyFunSuite {
       s"candidate filter must not shuffle the token stream:\n$plan")
   }
 
+  test("golden-record merge plans as ObjectHashAggregate, never SortAggregate") {
+    import spark.implicits._
+    val df = Seq((1L, "a@x.com", "Jo", "111"), (2L, "A@X.COM", "Joanna", ""),
+      (3L, "b@y.com", "Bo", "222")).toDF("row_id", "EMAIL", "FULLNAME", "MOBILE")
+    val golden = graft.pipeline.GoldenRecord.dedupe(df, "row_id")
+    golden.collect()
+    val plan = golden.queryExecution.executedPlan.toString
+    // one object-buffer aggregate for every column, partial + final; a
+    // SortAggregate here sorts every row on both sides of the exchange
+    assert(plan.contains("ObjectHashAggregate"),
+      s"the golden merge should plan as ObjectHashAggregate:\n$plan")
+    assert(!plan.contains("SortAggregate"),
+      s"the golden merge must not plan a SortAggregate:\n$plan")
+  }
+
   test("q112/q114/q118: the round-8 curation queries keep their shapes") {
     assume(new java.io.File(SfDir).isDirectory)
     // q112 NB: the vocab table is pinned (InMemoryRelation), so the
