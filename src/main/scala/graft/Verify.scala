@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.api.RestServer.jsonStr
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -36,29 +39,17 @@ object Verify {
       // localCheckpoint'd frames are per-query scratch, not shared state
       finally Engine.release(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Registry manifest for the gate: every attempted query plus the ones
     // that threw. check_oracle.py fails the gate on any `failed` entry and
     // on any registry name with no dump — so a query with no SQL twin
     // (rows-only check driver-side) still cannot ship unexecuted.
     val manifest = s"""{"queries": [${queries.keys.toSeq.sorted
-        .map(q).mkString(", ")}], "failed": [${failed.sorted
-        .map(q).mkString(", ")}]}"""
+        .map(jsonStr).mkString(", ")}], "failed": [${failed.sorted
+        .map(jsonStr).mkString(", ")}]}"""
     Files.writeString(Paths.get(s"$outDir/registry.json"), manifest)
     spark.stop()
   }

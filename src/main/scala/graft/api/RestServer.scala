@@ -39,6 +39,7 @@ class RestServer(port: Int, outputDir: String,
     runTimeoutMs: Long = 300000L,
     onRunStart: String => Unit = _ => (),
     onRunTimeout: String => Unit = _ => ()) {
+  import RestServer.jsonStr
 
   private val runSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -66,17 +67,6 @@ class RestServer(port: Int, outputDir: String,
     ex.getResponseBody.write(bytes)
     ex.close()
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   def start(): Unit = {
     // "/" is also the fallback context for unmatched paths; only the exact
@@ -182,4 +172,19 @@ class RestServer(port: Int, outputDir: String,
   }
 
   def boundPort: Int = server.getAddress.getPort
+}
+
+object RestServer {
+
+  /** JSON string literal: quote, backslash and ALL control chars (< 0x20)
+    * escaped — a tab or CR left raw makes a strict JSON reader fail. */
+  def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

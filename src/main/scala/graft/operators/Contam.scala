@@ -14,8 +14,8 @@ import graft.pipeline.Pins
   * set for every ingest batch, so the benchmark's grams must persist
   * pre-bucketed on the join key and never re-shuffle.
   *
-  * Layout under `path` ([[IndexGen]] discipline — generations, commit
-  * markers, tombstones, shared with the LSH and ANN indexes):
+  * Layout under `path` (the [[IndexGen]] lifecycle — generations,
+  * manifests, tombstones and lease, shared with the LSH and ANN indexes):
   *   - `{name}_grams` (gram BIGINT, id BIGINT): the benchmark's DISTINCT
   *     per-document N-gram digests, bucketed by gram into `numBuckets`
   *     files — the probe join's index side scans pre-partitioned on
@@ -36,7 +36,12 @@ object Contam {
       gen: Int = 0) {
     def gramsTable: String = s"${name}_grams"
     def gramsDir: String = IndexGen.dirFor(path, "grams", gen)
+    private[graft] def spec: IndexGen.Spec =
+      IndexGen.Spec(name, path, meta.numBuckets, gen, NgramTables)
   }
+
+  private val NgramTables =
+    Seq(IndexGen.Table("grams", "id BIGINT, gram BIGINT", Seq("gram")))
 
   /** DISTINCT (id, gram-digest) rows for a document frame. */
   private[graft] def gramDigests(df: DataFrame, idCol: String,
@@ -46,46 +51,28 @@ object Contam {
       .select(col("id"), Text.md5Long(col("__g")).as("gram"))
       .distinct()
 
-  /** Build (or overwrite) the index from the benchmark frame. */
+  /** Build (or overwrite) the index from the benchmark frame
+    * ([[IndexGen.create]]). */
   def writeNgramIndex(benchmark: DataFrame, idCol: String, textCol: String,
       path: String, name: String, n: Int = 13,
       numBuckets: Int = 32): NgramIndex = {
-    require(benchmark.schema(benchmark.schema.fieldIndex(idCol)).dataType ==
-      org.apache.spark.sql.types.LongType,
-      "persisted index ids must be BIGINT (cross-session DDL)")
-    val spark = benchmark.sparkSession
-    val meta = NgramIndexMeta(n, numBuckets)
-    val idx = NgramIndex(name, path, meta)
-    spark.sql(s"DROP TABLE IF EXISTS ${idx.gramsTable}")
-    IndexGen.cleanAll(spark, path, Seq("grams"))
-    gramDigests(benchmark, idCol, textCol, n)
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "gram")
-      .option("path", idx.gramsDir)
-      .saveAsTable(idx.gramsTable)
-    IndexGen.commitManifest(spark, idx.gramsDir)
-    writeMeta(spark, s"$path/meta.json", meta)
+    IndexGen.requireBigint(benchmark, idCol)
+    val idx = NgramIndex(name, path, NgramIndexMeta(n, numBuckets))
+    IndexGen.create(idx.spec, Seq(gramDigests(benchmark, idCol, textCol, n)),
+      Seq("n" -> n, "numBuckets" -> numBuckets))
     idx
   }
 
   /** Open a persisted index at its newest COMMITTED generation and
-    * register the bucketed external table in THIS session's catalog. */
+    * register the bucketed external table in THIS session's catalog
+    * ([[IndexGen.open]]). */
   def readNgramIndex(spark: SparkSession, path: String,
       name: String): NgramIndex = {
-    val idx = NgramIndex(name, path, readMeta(spark, s"$path/meta.json"),
-      gen = IndexGen.resolveGen(spark, path))
-    // open-time recovery: drop a torn batch append's leftover files
-    IndexGen.repairToManifest(spark, idx.gramsDir)
-    registerTable(spark, idx)
-    idx
+    val f = IndexGen.readMeta(spark, path)
+    val idx = NgramIndex(name, path,
+      NgramIndexMeta(f("n").toInt, f("numBuckets").toInt))
+    idx.copy(gen = IndexGen.open(spark, idx.spec))
   }
-
-  private def registerTable(spark: SparkSession, idx: NgramIndex): Unit =
-    IndexGen.ensureTable(spark, idx.gramsTable, idx.gramsDir,
-      s"""CREATE TABLE ${idx.gramsTable} (id BIGINT, gram BIGINT)
-         |USING parquet
-         |CLUSTERED BY (gram) INTO ${idx.meta.numBuckets} BUCKETS
-         |LOCATION '${idx.gramsDir}'""".stripMargin)
 
   /** Per-document contamination of `batch` against the indexed benchmark:
     * (idCol, n_grams, n_hits, n_sources) — distinct grams, distinct grams
@@ -148,104 +135,35 @@ object Contam {
   }
 
   /** Absorb NEW benchmark documents (e.g. a fresh eval suite) into the
-    * index. Bucketed append: one file per bucket per append — the probe
-    * keeps its exchange-free shape; [[maybeCompactNgramIndex]] bounds the
-    * file growth. Caller contract: appended ids disjoint from indexed.
-    * Holds the [[IndexGen.withWriterLock]] lease — a concurrent append's
-    * half-written files would otherwise be legitimized by this one's
-    * manifest commit.
-    *
-    * `batchTag` makes a RETRIED append exactly-once (tag committed
-    * atomically with the manifest; a retry whose tag already heads the
-    * newest manifest appends nothing). Unlike the LSH/ANN families this
-    * is a size/scan concern only: [[probeNgramIndex]] aggregates with
-    * countDistinct on both the gram and the source id, so duplicated
-    * gram rows cannot change any probe answer — the tag just keeps a
-    * replay from doubling the benchmark's physical footprint. */
+    * index: a bucketed append, one file per bucket — the probe keeps its
+    * exchange-free shape; [[maybeCompactNgramIndex]] bounds the file
+    * growth. Caller contract: appended ids disjoint from indexed. Leased,
+    * manifest-committed and exactly-once under `batchTag`
+    * ([[IndexGen.append]]); here the tag is a size concern only, since
+    * [[probeNgramIndex]] aggregates with countDistinct on both the gram
+    * and the source id, so duplicated gram rows cannot change an answer. */
   def appendToNgramIndex(index: NgramIndex, benchmark: DataFrame,
       idCol: String, textCol: String,
-      batchTag: Option[String] = None): Unit = {
-    val spark = benchmark.sparkSession
-    IndexGen.withWriterLock(spark, index.path) {
-      // manifest protocol (IndexGen): a torn append's files are repaired
-      // at the next open/append; commit only after the data write
-      // completes
-      IndexGen.repairToManifest(spark, index.gramsDir)
-      val done = batchTag.isDefined &&
-        IndexGen.manifestTag(spark, index.gramsDir) == batchTag
-      if (!done) {
-        gramDigests(benchmark, idCol, textCol, index.meta.n)
-          .write.mode("append")
-          .bucketBy(index.meta.numBuckets, "gram")
-          .option("path", index.gramsDir)
-          .saveAsTable(index.gramsTable)
-        IndexGen.commitManifest(spark, index.gramsDir, batchTag)
-      }
-    }
-  }
+      batchTag: Option[String] = None): Unit =
+    IndexGen.append(index.spec,
+      Seq(gramDigests(benchmark, idCol, textCol, index.meta.n)), batchTag)
 
-  /** Retract benchmark documents (id tombstones; probes hide them
-    * immediately, the next compaction folds them into the files).
-    * Leased: a tombstone landing between a compaction's tombstones read
-    * and its clearTombstones would be silently dropped. */
+  /** Retract benchmark documents: id tombstones hide them from probes at
+    * once, the next compaction folds them into the files
+    * ([[IndexGen.retract]]). */
   def retractFromNgramIndex(index: NgramIndex, ids: DataFrame,
       idCol: String): Unit =
-    IndexGen.withWriterLock(ids.sparkSession, index.path) {
-      IndexGen.appendTombstones(index.path, ids, idCol)
-    }
+    IndexGen.retract(index.spec, ids, idCol)
 
   /** Rewrite the grams table into the next generation — one file per
-    * bucket, tombstones applied and cleared. Same crash-safety contract
-    * as [[Dedup.compactLshIndex]] (commit marker, then idempotent
-    * housekeeping). */
+    * bucket, tombstones applied ([[IndexGen.compact]]). */
   def compactNgramIndex(spark: SparkSession, index: NgramIndex)
       : NgramIndex =
-    IndexGen.withWriterLock(spark, index.path) {
-      val bases = Seq("grams")
-      val next = index.copy(
-        gen = IndexGen.nextGen(spark, index.path, bases, index.gen))
-      IndexGen.fs(spark, index.path)
-        .delete(new org.apache.hadoop.fs.Path(next.gramsDir), true)
-      val tombs = IndexGen.tombstones(spark, index.path)
-      IndexGen.rewriteBucketed(spark, index.gramsDir, next.gramsDir,
-        s"${index.name}_grams_compacting", index.meta.numBuckets,
-        Seq("gram"), tombs)
-      IndexGen.writeMarker(spark, index.path, next.gen)
-      spark.sql(s"DROP TABLE IF EXISTS ${index.gramsTable}")
-      registerTable(spark, next)
-      IndexGen.clearTombstones(spark, index.path)
-      IndexGen.sweepOld(spark, index.path, bases, next.gen)
-      next
-    }
+    index.copy(gen = IndexGen.compact(spark, index.spec))
 
   /** Compact when append cadence has fragmented any bucket past the bar. */
   def maybeCompactNgramIndex(spark: SparkSession, index: NgramIndex,
       maxFilesPerBucket: Int): NgramIndex =
-    if (IndexGen.maxFilesPerBucket(spark, index.gramsDir) > maxFilesPerBucket)
-      compactNgramIndex(spark, index)
-    else index
-
-  /** Filesystem resolution through the session conf ([[IndexGen.fs]]) —
-    * the [[readMeta]]/writeAnnMeta contract; a default Configuration()
-    * could write meta.json to a different filesystem than probes read. */
-  private def writeMeta(spark: SparkSession, file: String,
-      m: NgramIndexMeta): Unit = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val out = IndexGen.fs(spark, file).create(p, true)
-    try out.write(
-      s"""{"n":${m.n},"numBuckets":${m.numBuckets}}""".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readMeta(spark: SparkSession, file: String): NgramIndexMeta = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def f(k: String): String =
-      raw.split(s""""$k":""")(1).takeWhile(c => c.isDigit || c == '-')
-    NgramIndexMeta(f("n").toInt, f("numBuckets").toInt)
-  }
+    IndexGen.maybeCompact(spark, index.spec, maxFilesPerBucket)
+      .fold(index)(g => index.copy(gen = g))
 }

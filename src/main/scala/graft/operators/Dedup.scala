@@ -290,18 +290,21 @@ object Dedup {
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxDocFreq: Option[Long] = None): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rows = numHashes / bands
     val cPosts = Pins.pin(
       shinglePostings(corpus, idCol, textCol, shingleSize, maxDocFreq))
     val bPosts = Pins.pin(
       shinglePostings(batch, idCol, textCol, shingleSize, maxDocFreq))
-    def banded(posts: DataFrame) =
-      minhashSignatures(posts, numHashes).select(col("id"),
-        posexplode(bandBuckets(col("sig"), bands, rows))
-          .as(Seq("band", "bucket")))
-    val cb = banded(cPosts)
     // pinned: the batch's banding probes the index AND self-joins
-    val bb = Pins.pin(banded(bPosts))
+    val bb = Pins.pin(banded(bPosts, numHashes, bands))
+    batchPairs(banded(cPosts, numHashes, bands), cPosts, bb, bPosts,
+      threshold)
+  }
+
+  /** The pairs a batch's bands `bb` (postings `bPosts`) introduce against
+    * an indexed side (bands `cb`, postings `cPosts`): batch-vs-index ∪
+    * batch-internal band collisions, exact-rescored. */
+  private def batchPairs(cb: DataFrame, cPosts: DataFrame, bb: DataFrame,
+      bPosts: DataFrame, threshold: Double): DataFrame = {
     val vsIndex = bb.as("a").join(cb.as("b"),
       col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket")
         && col("a.id") =!= col("b.id"))
@@ -325,28 +328,45 @@ object Dedup {
       numBuckets: Int, maxDocFreq: Option[Long])
 
   /** Handle to a persisted LSH index: two BUCKETED tables in the session
-    * catalog + the meta. `bandsTable` (id, band, bucket) is bucketed by
-    * (band, bucket) so an ingest probe joins it with NO exchange on the
-    * index side; `postsTable` (id, shingle) is bucketed by id for the
-    * rescore joins.
-    *
-    * `gen` is the compaction generation: generation 0 lives at
-    * `$path/bands` / `$path/posts` (the writer's layout), generation N > 0
-    * at `$path/bands.cN` / `$path/posts.cN`, committed by the
-    * `$path/_compact_cN` marker file ([[compactLshIndex]] — the
-    * ContactsStream snapshot discipline: a generation without its marker
-    * is a torn write and is never resolved). Appends land in the CURRENT
-    * generation's directories; [[readLshIndex]] resolves the newest
-    * committed generation and re-points stale catalog entries. */
+    * catalog + the meta, under the [[IndexGen]] lifecycle (generations,
+    * manifests, tombstones, lease). `bandsTable` (id, band, bucket) is
+    * bucketed by (band, bucket) so an ingest probe joins it with NO
+    * exchange on the index side; `postsTable` (id, shingle) is bucketed by
+    * id for the rescore joins. `gen` is the compaction generation. */
   case class LshIndex(name: String, path: String, meta: LshIndexMeta,
       gen: Int = 0) {
     def bandsTable: String = s"${name}_bands"
     def postsTable: String = s"${name}_posts"
-    def bandsDir: String =
-      if (gen == 0) s"$path/bands" else s"$path/bands.c$gen"
-    def postsDir: String =
-      if (gen == 0) s"$path/posts" else s"$path/posts.c$gen"
-    def tombstonesDir: String = s"$path/tombstones"
+    def bandsDir: String = IndexGen.dirFor(path, "bands", gen)
+    def postsDir: String = IndexGen.dirFor(path, "posts", gen)
+    private[graft] def spec: IndexGen.Spec =
+      IndexGen.Spec(name, path, meta.numBuckets, gen, LshTables)
+  }
+
+  // bands commit before posts: the posts tag proves a whole append
+  // committed, and a crash between the two leaves only ghost band rows
+  private val LshTables = Seq(
+    IndexGen.Table("bands", "id BIGINT, band INT, bucket BIGINT",
+      Seq("band", "bucket"), dedupOnCompact = true),
+    IndexGen.Table("posts", "id BIGINT, shingle BIGINT", Seq("id")))
+
+  /** (id, band, bucket) rows of the postings' minhash signatures. */
+  private def banded(posts: DataFrame, numHashes: Int,
+      bands: Int): DataFrame =
+    minhashSignatures(posts, numHashes).select(col("id"),
+      posexplode(bandBuckets(col("sig"), bands, numHashes / bands))
+        .as(Seq("band", "bucket")))
+
+  /** Run `body` on the (bands, posts) frames of `docs` under `m`. The
+    * postings are persisted locally, NOT through Pins: the writes are
+    * actions completing inside this call, and a Pins.flush here would
+    * release the CALLER's pins. */
+  private def lshFrames[T](docs: DataFrame, idCol: String, textCol: String,
+      m: LshIndexMeta)(body: (DataFrame, DataFrame) => T): T = {
+    val posts = shinglePostings(docs, idCol, textCol, m.shingleSize,
+      m.maxDocFreq).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(banded(posts, m.numHashes, m.bands), posts)
+    finally posts.unpersist(blocking = false)
   }
 
   /** Build and PERSIST the corpus side of the incremental-dedup index —
@@ -365,127 +385,40 @@ object Dedup {
     *
     * Tables register in the session catalog as EXTERNAL at `path` (plain
     * parquet + bucket metadata; no Hive required). Overwrites any prior
-    * index of the same name. */
+    * index at `path` ([[IndexGen.create]]). */
   def writeLshIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, name: String, shingleSize: Int = 3, numHashes: Int = 64,
       bands: Int = 16, numBuckets: Int = 32,
       maxDocFreq: Option[Long] = None): LshIndex = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    require(corpus.schema(corpus.schema.fieldIndex(idCol)).dataType ==
-      org.apache.spark.sql.types.LongType,
-      s"persisted index ids must be BIGINT (cross-session DDL), got " +
-        corpus.schema(corpus.schema.fieldIndex(idCol)).dataType)
-    val spark = corpus.sparkSession
-    val rows = numHashes / bands
-    // local persist, NOT Pins: both writes are actions completing inside
-    // this call, and a Pins.flush here would release the CALLER's pins
-    val posts = shinglePostings(corpus, idCol, textCol, shingleSize,
-      maxDocFreq).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val banded = minhashSignatures(posts, numHashes).select(col("id"),
-        posexplode(bandBuckets(col("sig"), bands, rows))
-          .as(Seq("band", "bucket")))
-      val meta = LshIndexMeta(shingleSize, numHashes, bands, numBuckets,
-        maxDocFreq)
-      val idx = LshIndex(name, path, meta)
-      spark.sql(s"DROP TABLE IF EXISTS ${idx.bandsTable}")
-      spark.sql(s"DROP TABLE IF EXISTS ${idx.postsTable}")
-      // "overwrites any prior index": stale compaction generations,
-      // markers, tombstones, and streaming absorb markers
-      // (DocStream.absorbOnce) of a previous index at this path must not
-      // shadow, filter, or skip-absorb against the fresh generation-0 write
-      IndexGen.cleanAll(spark, path, Seq("bands", "posts"))
-      // The two table writes are independent jobs over the same pinned
-      // postings, and a FRESH build has no ordering contract (the index
-      // only becomes visible when meta.json lands below — contrast
-      // appendToLshIndex, whose bands-before-posts order IS the crash
-      // protocol). Overlapping them backfills each job's straggler tail
-      // with the other's tasks (guide §2.6). Materialize the pin first so
-      // the two jobs don't both compute the postings partitions.
+    IndexGen.requireBigint(corpus, idCol)
+    val idx = LshIndex(name, path, LshIndexMeta(shingleSize, numHashes,
+      bands, numBuckets, maxDocFreq))
+    lshFrames(corpus, idCol, textCol, idx.meta) { (bandRows, posts) =>
+      // the two table writes run concurrently: compute the postings once
       posts.count()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        // repartition on the bucket columns BEFORE the bucketed write:
-        // bucketed writes emit one file per (task, bucket), and the
-        // banded frame arrives partitioned by id (the minhash agg), so
-        // every task held every bucket — ~numBuckets² tiny files per
-        // build (measured: 1,283 files under q202's bands dir), paid
-        // again by every probe's file-open/footer pass (guide §6 small
-        // files). The repartition uses bucketing's own murmur3-pmod
-        // hash (the IndexGen.rewriteBucketed precedent), so each task
-        // holds exactly one bucket: numBuckets files, not numBuckets².
-        val fb = scala.concurrent.Future {
-          banded.repartition(numBuckets, col("band"), col("bucket"))
-            .write.mode("overwrite")
-            .bucketBy(numBuckets, "band", "bucket")
-            .option("path", idx.bandsDir)
-            .saveAsTable(idx.bandsTable)
-        }
-        val fp = scala.concurrent.Future {
-          posts.repartition(numBuckets, col("id"))
-            .write.mode("overwrite")
-            .bucketBy(numBuckets, "id")
-            .option("path", idx.postsDir)
-            .saveAsTable(idx.postsTable)
-        }
-        import scala.concurrent.duration.Duration
-        // await BOTH futures even when the first throws (ADVICE r16):
-        // pool.shutdown() does not cancel an in-flight write job, and
-        // returning while one still runs would let the outer finally
-        // unpersist the postings under it and leave a committed table
-        // registered behind the exception. Await.ready never throws on
-        // failure, so both jobs are quiesced before the first error
-        // (if any) is rethrown by Await.result.
-        scala.concurrent.Await.ready(fb, Duration.Inf)
-        scala.concurrent.Await.ready(fp, Duration.Inf)
-        scala.concurrent.Await.result(fb, Duration.Inf)
-        scala.concurrent.Await.result(fp, Duration.Inf)
-      } finally pool.shutdown()
-      IndexGen.commitManifest(spark, idx.bandsDir)
-      IndexGen.commitManifest(spark, idx.postsDir)
-      writeMeta(spark, s"$path/meta.json", meta)
-      idx
-    } finally posts.unpersist(blocking = false)
-  }
-
-  /** Open a persisted LSH index from `path`, resolving the newest
-    * COMMITTED compaction generation (marker files `_compact_cN`; a
-    * generation without its marker is a torn [[compactLshIndex]] write and
-    * is never resolved) and registering the bucketed external tables in
-    * THIS session's catalog — creating them when absent, RE-POINTING them
-    * when a stale entry targets a superseded generation's location (the
-    * cross-session ingest path: build once, compact anywhere, probe from
-    * any later job). The bucket spec in the DDL must match the writer's
-    * for exchange-free probes — both come from the same meta.json. */
-  def readLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      name: String): LshIndex = {
-    val meta = readMeta(spark, s"$path/meta.json")
-    val idx = LshIndex(name, path, meta,
-      gen = IndexGen.resolveGen(spark, path))
-    // open-time recovery: drop any torn batch append's leftover files
-    // (files the generation's manifests do not name) before probes scan
-    IndexGen.repairToManifest(spark, idx.bandsDir)
-    IndexGen.repairToManifest(spark, idx.postsDir)
-    registerTables(spark, idx)
+      IndexGen.create(idx.spec, Seq(bandRows, posts), Seq(
+        "shingleSize" -> shingleSize, "numHashes" -> numHashes,
+        "bands" -> bands, "numBuckets" -> numBuckets,
+        "maxDocFreq" -> maxDocFreq.getOrElse(-1L)))
+    }
     idx
   }
 
-  /** Create (or re-point) the index's catalog tables at ITS generation's
-    * locations ([[IndexGen.ensureTable]] semantics). */
-  private def registerTables(spark: org.apache.spark.sql.SparkSession,
-      idx: LshIndex): Unit = {
-    IndexGen.ensureTable(spark, idx.bandsTable, idx.bandsDir,
-      s"""CREATE TABLE ${idx.bandsTable} (id BIGINT, band INT, bucket BIGINT)
-         |USING parquet
-         |CLUSTERED BY (band, bucket) INTO ${idx.meta.numBuckets} BUCKETS
-         |LOCATION '${idx.bandsDir}'""".stripMargin)
-    IndexGen.ensureTable(spark, idx.postsTable, idx.postsDir,
-      s"""CREATE TABLE ${idx.postsTable} (id BIGINT, shingle BIGINT)
-         |USING parquet
-         |CLUSTERED BY (id) INTO ${idx.meta.numBuckets} BUCKETS
-         |LOCATION '${idx.postsDir}'""".stripMargin)
+  /** Open a persisted LSH index from `path` at its newest committed
+    * generation ([[IndexGen.open]]), registering the bucketed external
+    * tables in THIS session's catalog — the cross-session ingest path:
+    * build once, compact anywhere, probe from any later job. The bucket
+    * spec comes from the same meta.json the writer wrote, so probes stay
+    * exchange-free. */
+  def readLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      name: String): LshIndex = {
+    val f = IndexGen.readMeta(spark, path)
+    val mdf = f("maxDocFreq").toLong
+    val idx = LshIndex(name, path, LshIndexMeta(f("shingleSize").toInt,
+      f("numHashes").toInt, f("bands").toInt, f("numBuckets").toInt,
+      if (mdf < 0) None else Some(mdf)))
+    idx.copy(gen = IndexGen.open(spark, idx.spec))
   }
 
   /** Near-dup pairs introduced by a new `batch` against a PERSISTED index
@@ -498,197 +431,62 @@ object Dedup {
     * disjoint from indexed ids.
     *
     * RETRACTED ids ([[retractFromLshIndex]]) are filtered out of both
-    * index-side tables via a BROADCAST anti-join — tombstones are
-    * retraction-batch-sized metadata until [[compactLshIndex]] folds them
-    * into the files, and a broadcast anti preserves the index side's
-    * bucketed partitioning, so the no-index-side-exchange plan shape is
+    * index-side tables via a BROADCAST anti-join ([[IndexGen.live]]),
+    * which preserves the bucketed partitioning, so the plan shape is
     * unchanged (LshIndexSpec pins both states). When no tombstones exist
     * the plan is bit-identical to the pre-retraction one. */
   def probeLshIndex(index: LshIndex, batch: DataFrame, idCol: String,
       textCol: String, threshold: Double = 0.5): DataFrame = {
     val spark = batch.sparkSession
     val m = index.meta
-    val rows = m.numHashes / m.bands
     val tombs = IndexGen.tombstones(spark, index.path)
     val cb = IndexGen.live(spark.table(index.bandsTable), tombs)
     val cPosts = IndexGen.live(spark.table(index.postsTable), tombs)
     val bPosts = Pins.pin(
       shinglePostings(batch, idCol, textCol, m.shingleSize, m.maxDocFreq))
-    val bb = Pins.pin(
-      minhashSignatures(bPosts, m.numHashes).select(col("id"),
-        posexplode(bandBuckets(col("sig"), m.bands, rows))
-          .as(Seq("band", "bucket"))))
-    val vsIndex = bb.as("a").join(cb.as("b"),
-      col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket")
-        && col("a.id") =!= col("b.id"))
-      .select(least(col("a.id"), col("b.id")).as("id_a"),
-        greatest(col("a.id"), col("b.id")).as("id_b"))
-    val inBatch = bb.as("a").join(bb.as("b"),
-      col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket")
-        && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    val cand = vsIndex.unionByName(inBatch).distinct()
-    jaccardRescore(cand, cPosts.unionByName(bPosts), threshold)
+    val bb = Pins.pin(banded(bPosts, m.numHashes, m.bands))
+    batchPairs(cb, cPosts, bb, bPosts, threshold)
   }
 
   /** Absorb a probed batch INTO the persisted index — the second half of
     * the production ingest loop (probe for pairs, then append the batch's
-    * bands and postings so the NEXT ingest sees it). Appends bucketed
-    * files with the index's own bucket spec: a bucket then holds one file
-    * per append, which Spark's bucketed scan groups back into the same
-    * partition, so probe plans keep their no-index-side-exchange shape
-    * (LshIndexSpec pins probe-after-append == an index rebuilt from
+    * bands and postings so the NEXT ingest sees it). A bucket then holds
+    * one file per append, which Spark's bucketed scan groups back into
+    * the same partition, so probe plans keep their no-index-side-exchange
+    * shape (LshIndexSpec pins probe-after-append == an index rebuilt from
     * scratch). Caller contract: appended ids disjoint from indexed ids.
     *
-    * Crash-safe via the [[IndexGen]] manifest protocol: a torn append
-    * (any crash before BOTH manifests re-commit) leaves files that the
-    * next open/append/compaction repairs away — with one benign
-    * asymmetry: bands commit first, so a crash between the two manifest
-    * commits leaves committed "ghost" band rows whose postings were
-    * repaired; ghosts only add candidates the rescore's postings join
-    * drops (probe output as if the append never happened).
-    *
-    * `batchTag` makes a RETRIED append (the streaming replay path)
-    * exactly-once: each manifest commit carries the tag atomically
-    * ([[IndexGen.commitManifest]]), and the retry skips any directory
-    * whose newest manifest already carries it — a bands-committed crash
-    * re-appends only the postings (no duplicated band rows), and a crash
-    * AFTER both commits but before the caller's own replay marker
-    * re-appends nothing at all. That last window matters for
-    * correctness, not just size: duplicated postings double one side of
-    * every jaccard rescore count, so the replayed batch's pair scores
-    * would be WRONG until compaction. Untagged appends keep the
-    * at-least-once behavior (a retry lands the batch's committed
-    * directories twice; [[compactLshIndex]]'s dedup rewrite is the
-    * bounded cleanup).
-    *
-    * Holds the [[IndexGen.withWriterLock]] lease for the whole append:
-    * `commitManifest` snapshots the directory's CURRENT file set, so two
-    * concurrent appends — a violated single-writer contract — would have
-    * each other's half-written files legitimized by whichever commit
-    * lands last, silently defeating the torn-append repair; under the
-    * lease the second append fails loudly instead. */
+    * Leased, manifest-committed, bands before posts, and exactly-once
+    * under `batchTag` ([[IndexGen.append]]). Untagged appends are
+    * at-least-once: a retry lands the batch's committed bands twice, and
+    * [[compactLshIndex]] drops the duplicates. */
   def appendToLshIndex(index: LshIndex, batch: DataFrame, idCol: String,
       textCol: String, batchTag: Option[String] = None): Unit = {
-    val m = index.meta
-    val rows = m.numHashes / m.bands
-    require(batch.schema(batch.schema.fieldIndex(idCol)).dataType ==
-      org.apache.spark.sql.types.LongType,
-      "persisted index ids must be BIGINT")
-    val spark = batch.sparkSession
-    IndexGen.withWriterLock(spark, index.path) {
-      // a retried append must not compound a previous torn one
-      IndexGen.repairToManifest(spark, index.bandsDir)
-      IndexGen.repairToManifest(spark, index.postsDir)
-      def done(dir: String): Boolean =
-        batchTag.isDefined && IndexGen.manifestTag(spark, dir) == batchTag
-      // posts commit LAST: their tag proves the whole append committed
-      if (!done(index.postsDir)) {
-        val posts = shinglePostings(batch, idCol, textCol, m.shingleSize,
-          m.maxDocFreq).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (!done(index.bandsDir)) {
-            val banded = minhashSignatures(posts, m.numHashes)
-              .select(col("id"),
-                posexplode(bandBuckets(col("sig"), m.bands, rows))
-                  .as(Seq("band", "bucket")))
-            // one file per bucket per append, not one per (task, bucket)
-            // — see the writeLshIndex repartition note (guide §6)
-            banded.repartition(m.numBuckets, col("band"), col("bucket"))
-              .write.mode("append")
-              .bucketBy(m.numBuckets, "band", "bucket")
-              .option("path", index.bandsDir)
-              .saveAsTable(index.bandsTable)
-            IndexGen.commitManifest(spark, index.bandsDir, batchTag)
-          }
-          posts.repartition(m.numBuckets, col("id"))
-            .write.mode("append")
-            .bucketBy(m.numBuckets, "id")
-            .option("path", index.postsDir)
-            .saveAsTable(index.postsTable)
-          IndexGen.commitManifest(spark, index.postsDir, batchTag)
-        } finally posts.unpersist(blocking = false)
-      }
+    IndexGen.requireBigint(batch, idCol)
+    lshFrames(batch, idCol, textCol, index.meta) { (bandRows, posts) =>
+      IndexGen.append(index.spec, Seq(bandRows, posts), batchTag)
     }
   }
 
-  /** Retract documents from a persisted index: append their ids as
-    * TOMBSTONES (`$path/tombstones`, plain parquet). Probes hide
-    * tombstoned ids immediately (broadcast anti-join in
-    * [[probeLshIndex]]); the physical rows leave the bucketed files at
-    * the next [[compactLshIndex]], which also clears the tombstones.
-    * Re-adding a retracted id requires a compaction first — an append
-    * while its tombstone is live stays hidden (the tombstone filters by
-    * id, not by file age).
-    *
-    * Holds the [[IndexGen.withWriterLock]] lease: a tombstone append
-    * racing [[compactLshIndex]] between its tombstones read and its
-    * clearTombstones would be silently dropped — the retracted ids
-    * resurfacing in probes after the compaction (a lost update). */
+  /** Retract documents: their ids become TOMBSTONES that probes hide at
+    * once; the rows leave the files at the next [[compactLshIndex]]
+    * ([[IndexGen.retract]]). Re-adding a retracted id requires a
+    * compaction first — the tombstone filters by id, not by file age. */
   def retractFromLshIndex(index: LshIndex, ids: DataFrame,
       idCol: String): Unit =
-    IndexGen.withWriterLock(ids.sparkSession, index.path) {
-      IndexGen.appendTombstones(index.path, ids, idCol)
-    }
+    IndexGen.retract(index.spec, ids, idCol)
 
-  /** Compact a persisted index: rewrite both bucketed tables into the
-    * NEXT generation's directories with the SAME bucket spec — one file
-    * per bucket (the repartition below uses bucketing's own hash, so each
-    * task holds exactly one bucket) — applying and then clearing any
-    * tombstones. [[appendToLshIndex]] writes one file per bucket per
-    * append, so a streaming-cadence ingest
+  /** Compact: rewrite both tables into the next generation, one file per
+    * bucket, tombstones applied and band duplicates dropped
+    * ([[IndexGen.compact]]). [[appendToLshIndex]] writes one file per
+    * bucket per append, so a streaming-cadence ingest
     * ([[graft.streaming.DocStream.ingestDedupStream]]) grows each
     * bucket's file count without bound; this rewrite is the periodic
-    * counter-move that keeps the exchange-free probe scan from drowning
-    * in small files.
-    *
-    * Crash-safe by the ContactsStream snapshot discipline: the new
-    * generation is written COMPLETELY, then committed with a
-    * `_compact_cN` marker, and only then do the catalog re-point,
-    * tombstone clear, and old-generation retention sweep run. A crash
-    * before the marker leaves the current generation authoritative (the
-    * torn directories are swept by the next compaction); a crash after it
-    * leaves a committed generation that [[readLshIndex]] resolves, with
-    * the remaining steps idempotent (re-applying cleared tombstones to
-    * already-filtered data is a no-op anti-join). Single-writer contract,
-    * like append: don't compact concurrently with appends — and since r14
-    * the contract is ENFORCED for compactions by the
-    * [[IndexGen.withWriterLock]] lease (a second concurrent compaction
-    * throws instead of silently corrupting; a crashed holder's lease
-    * expires by age).
-    *
-    * Returns the handle at the new generation (the session's catalog
-    * tables are re-pointed in place, so existing probe code keeps
-    * working). */
+    * counter-move. Returns the handle at the new generation (the
+    * session's catalog tables are re-pointed in place). */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
       index: LshIndex): LshIndex =
-    IndexGen.withWriterLock(spark, index.path) {
-    val m = index.meta
-    val bases = Seq("bands", "posts")
-    val next = index.copy(
-      gen = IndexGen.nextGen(spark, index.path, bases, index.gen))
-    val fs = IndexGen.fs(spark, index.path)
-    fs.delete(new org.apache.hadoop.fs.Path(next.bandsDir), true)
-    fs.delete(new org.apache.hadoop.fs.Path(next.postsDir), true)
-
-    val tombs = IndexGen.tombstones(spark, index.path)
-    // dedup = true: a crash-retried append leaves the batch's band rows
-    // twice (see appendToLshIndex); compaction is their bounded cleanup
-    IndexGen.rewriteBucketed(spark, index.bandsDir, next.bandsDir,
-      s"${index.name}_bands_compacting", m.numBuckets,
-      Seq("band", "bucket"), tombs, dedup = true)
-    IndexGen.rewriteBucketed(spark, index.postsDir, next.postsDir,
-      s"${index.name}_posts_compacting", m.numBuckets, Seq("id"), tombs)
-
-    // COMMIT: everything below is post-commit housekeeping
-    IndexGen.writeMarker(spark, index.path, next.gen)
-    spark.sql(s"DROP TABLE IF EXISTS ${index.bandsTable}")
-    spark.sql(s"DROP TABLE IF EXISTS ${index.postsTable}")
-    registerTables(spark, next)
-    IndexGen.clearTombstones(spark, index.path)
-    IndexGen.sweepOld(spark, index.path, bases, next.gen)
-    next
-    }
+    index.copy(gen = IndexGen.compact(spark, index.spec))
 
   /** Compact only when an append cadence has actually fragmented the
     * index: if either table's fullest bucket holds more than
@@ -696,49 +494,11 @@ object Dedup {
     * the handle unchanged. The streaming ingest loop
     * ([[graft.streaming.DocStream.ingestDedupStream]]) calls this after
     * each absorb so a long-running stream bounds its own small-file
-    * growth instead of waiting for an operator to notice. */
+    * growth. */
   def maybeCompactLshIndex(spark: org.apache.spark.sql.SparkSession,
-      index: LshIndex, maxFilesPerBucket: Int): LshIndex = {
-    val worst = math.max(
-      IndexGen.maxFilesPerBucket(spark, index.bandsDir),
-      IndexGen.maxFilesPerBucket(spark, index.postsDir))
-    if (worst > maxFilesPerBucket) compactLshIndex(spark, index) else index
-  }
-
-  /** meta.json codec — fixed field order, no JSON library needed. The
-    * filesystem resolves through the SESSION's hadoopConfiguration
-    * ([[IndexGen.fs]]), same as [[readMeta]] and every other index-file
-    * touch: a default `new Configuration()` would ignore a Spark-conf-only
-    * `fs.defaultFS`/object-store credential and write the meta to a
-    * DIFFERENT filesystem than the one probes read it from. */
-  private def writeMeta(spark: org.apache.spark.sql.SparkSession,
-      file: String, m: LshIndexMeta): Unit = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val out = IndexGen.fs(spark, file).create(p, true)
-    try out.write(
-      (s"""{"shingleSize":${m.shingleSize},"numHashes":${m.numHashes},""" +
-        s""""bands":${m.bands},"numBuckets":${m.numBuckets},""" +
-        s""""maxDocFreq":${m.maxDocFreq.getOrElse(-1L)}}""")
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readMeta(spark: org.apache.spark.sql.SparkSession,
-      file: String): LshIndexMeta = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def field(k: String): Long =
-      raw.split(s""""$k":""")(1).takeWhile(c => c.isDigit || c == '-').toLong
-    val mdf = field("maxDocFreq")
-    LshIndexMeta(field("shingleSize").toInt, field("numHashes").toInt,
-      field("bands").toInt, field("numBuckets").toInt,
-      if (mdf < 0) None else Some(mdf))
-  }
+      index: LshIndex, maxFilesPerBucket: Int): LshIndex =
+    IndexGen.maybeCompact(spark, index.spec, maxFilesPerBucket)
+      .fold(index)(g => index.copy(gen = g))
 
   /** SimHash fingerprints as an AGGREGATION (explode tokens -> `bits`
     * codegen'd conditional sums -> pack): computes the same value as the

@@ -1,43 +1,313 @@
 package graft.operators
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
-/** Shared machinery for PERSISTED bucketed indexes with compaction
-  * generations and id tombstones — used by the LSH dedup index
-  * ([[Dedup.writeLshIndex]] family) and the IVF-PQ ANN index
-  * ([[Similarity.writeAnnIndex]] family).
+/** The one lifecycle of the PERSISTED bucketed indexes: the LSH near-dup
+  * index ([[Dedup.writeLshIndex]] family), the IVF-PQ ANN index
+  * ([[Similarity.writeAnnIndex]] family) and the n-gram decontamination
+  * index ([[Contam.writeNgramIndex]] family). A family describes its index
+  * as a [[Spec]] (name, path, bucket count, generation, tables in commit
+  * order) and keeps only what is its own: the frames it writes, its meta
+  * fields and its probes. [[create]], [[open]], [[append]], [[retract]],
+  * [[compact]], [[maybeCompact]] and [[absorbOnce]] are implemented once,
+  * here, and every table write goes through [[writeBucketed]].
   *
-  * Layout contract at an index `path`:
-  *   - generation 0 table directories live at `$path/<base>` (the
-  *     writer's layout), generation N > 0 at `$path/<base>.cN`;
-  *   - generation N > 0 is COMMITTED by the `$path/_compact_cN` marker,
-  *     written only after every table directory of that generation is
-  *     complete (the ContactsStream snapshot discipline: a generation
-  *     without its marker is a torn write and never resolves);
-  *   - retracted ids accumulate under `$path/tombstones` until a
-  *     compaction folds them into the files and clears them;
-  *   - each table directory carries a `_manifest` naming its COMMITTED
-  *     data files, so a torn batch append is detected and repaired
-  *     (see the append-manifest section below);
-  *   - compactions hold the `$path/_writer_lock` lease
-  *     ([[withWriterLock]]) so a violated single-writer contract fails
-  *     loudly instead of corrupting files.
+  * Layout at an index `path`:
+  *   - `meta.json`: the family's parameters as one flat JSON object
+  *     (numbers bare, strings quoted), written last by [[create]] — an
+  *     index is openable only once it lands — and read by [[readMeta]];
+  *   - generation 0 table directories at `$path/<base>`, generation N > 0
+  *     at `$path/<base>.cN`, each with a `_manifest.N` naming its
+  *     committed data files;
+  *   - `_compact_cN` generation markers, `tombstones` (retracted ids),
+  *     `_writer_lock` (the lease) and `_absorbed_<batchId>` markers.
+  *
+  * The protocol, stated once for all three families:
+  *   - LEASE. Write correctness assumes one writer per index path, and
+  *     every mutation — append, retract, compact — holds the
+  *     `_writer_lock` lease ([[withWriterLock]]), so a violated contract
+  *     fails loudly instead of corrupting files. A fresh [[create]] takes
+  *     no lease: it overwrites the whole index, stale lock included.
+  *   - MANIFESTS. Bucketed `saveAsTable` appends are not transactional
+  *     across files, so a table's data files count only once its manifest
+  *     names them. A torn append's leftovers are repaired away at open,
+  *     at append start and at compaction start.
+  *   - BATCH TAG. An append's manifest commits carry an optional batch
+  *     tag in the same atomic rename as the file set; a retry with the
+  *     same tag skips every table whose newest manifest already carries
+  *     it, so a replayed append is exactly-once. Duplicated rows are not
+  *     only size: duplicated LSH postings double one side of every
+  *     jaccard rescore count, and duplicated ANN list rows give one
+  *     neighbor two top-k ranks (the n-gram probe, which aggregates with
+  *     countDistinct, is immune). Untagged appends are at-least-once.
+  *   - GHOST ROWS. Multi-table appends commit in declared order (LSH
+  *     bands before posts). A crash between the two commits leaves
+  *     committed "ghost" band rows whose postings were repaired away;
+  *     ghosts only add candidates that the rescore's postings join drops,
+  *     so probes answer as if the append never happened. A tagged retry
+  *     skips the committed bands; an untagged retry lands them twice,
+  *     and compaction drops the duplicates ([[Table.dedupOnCompact]]).
+  *   - GENERATION MARKER. Compaction writes the next generation
+  *     completely, then commits it with the `_compact_cN` marker; only
+  *     then does it re-point the catalog, clear the tombstones and sweep
+  *     superseded generations, all idempotent. A generation without its
+  *     marker is a torn write and never resolves. Compaction commits
+  *     untagged manifests; the `_absorbed_` markers carry idempotence
+  *     across compactions, and the tag only has to bridge the window
+  *     between an append's commit and its marker, inside which no
+  *     compaction runs.
   */
 private[graft] object IndexGen {
 
-  def fs(spark: SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def fs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def dirFor(path: String, base: String, gen: Int): String =
     if (gen == 0) s"$path/$base" else s"$path/$base.c$gen"
 
+  // ------------------------------------------------------------ lifecycle
+
+  /** One bucketed table of an index: `base` names its directory and its
+    * catalog table (`{name}_{base}`), `columns` is its column DDL and
+    * `bucketCols` its CLUSTERED BY key. `dedupOnCompact` drops exact
+    * duplicate rows when compaction rewrites the table; a family sets it
+    * only for a table whose rows are unique by construction but can land
+    * twice through a crash-retry (LSH `bands`, the ghost rows above). */
+  case class Table(base: String, columns: String, bucketCols: Seq[String],
+      dedupOnCompact: Boolean = false)
+
+  /** A persisted index: where it lives, its bucket count, its compaction
+    * generation and its tables in commit order. */
+  case class Spec(name: String, path: String, numBuckets: Int, gen: Int,
+      tables: Seq[Table]) {
+    def table(t: Table): String = s"${name}_${t.base}"
+    def dir(t: Table): String = dirFor(path, t.base, gen)
+    def bases: Seq[String] = tables.map(_.base)
+  }
+
+  /** Index ids are BIGINT in every table DDL, so a later session's
+    * catalog entry reads what this one wrote. */
+  def requireBigint(df: DataFrame, idCol: String): Unit = {
+    val t = df.schema(idCol).dataType
+    require(t == LongType,
+      s"persisted index ids must be BIGINT (cross-session DDL), got $t")
+  }
+
+  /** Build (or overwrite) the index at generation 0 from one frame per
+    * table: drop the catalog tables and everything a previous index at
+    * the path left behind ([[cleanAll]]), write every table, then
+    * `meta.json` from the ordered `meta` fields. Nothing is visible
+    * before the meta lands, so the tables have no commit order here and
+    * are written CONCURRENTLY (each job's straggler tail is backfilled by
+    * the other's tasks). Every write is awaited before the first failure
+    * is rethrown: `pool.shutdown()` does not cancel a running job, and one
+    * still running would outlive the caller's cached inputs and leave a
+    * table registered behind the exception. */
+  def create(spec: Spec, frames: Seq[DataFrame],
+      meta: Seq[(String, Any)]): Unit = {
+    val spark = frames.head.sparkSession
+    spec.tables.foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS ${spec.table(t)}"))
+    cleanAll(spark, spec.path, spec.bases)
+    val writes = spec.tables.zip(frames).map { case (t, df) => () =>
+      writeBucketed(df, spec.table(t), spec.dir(t), spec.numBuckets,
+        t.bucketCols, "overwrite")
+    }
+    if (writes.size == 1) writes.head()
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(writes.size)
+      implicit val ec: ExecutionContext =
+        ExecutionContext.fromExecutorService(pool)
+      try {
+        val running = writes.map(w => Future(w()))
+        running.foreach(Await.ready(_, Duration.Inf))
+        running.foreach(Await.result(_, Duration.Inf))
+      } finally pool.shutdown()
+    }
+    val body = meta.map {
+      case (k, v: String) => s""""$k":"$v""""
+      case (k, v) => s""""$k":$v"""
+    }.mkString("{", ",", "}")
+    val out = fs(spark, spec.path).create(new Path(s"${spec.path}/meta.json"),
+      true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  private val MetaField = "\"(\\w+)\":(?:\"([^\"]*)\"|([^,}]*))".r
+
+  /** The fields [[create]] wrote to `$path/meta.json`, by name. A field the
+    * file lacks raises IllegalArgumentException naming field and file. */
+  def readMeta(spark: SparkSession, path: String): String => String = {
+    val file = s"$path/meta.json"
+    val fields = MetaField.findAllMatchIn(readText(fs(spark, file),
+        new Path(file)))
+      .map(m => m.group(1) -> Option(m.group(2)).getOrElse(m.group(3)))
+      .toMap
+    k => fields.getOrElse(k,
+      throw new IllegalArgumentException(s"""$file has no field "$k""""))
+  }
+
+  /** Open the index at its newest COMMITTED generation (`spec.gen` is not
+    * consulted): repair every table to its manifest before any probe
+    * scans it, and register the tables in THIS session's catalog. Returns
+    * the generation. */
+  def open(spark: SparkSession, spec: Spec): Int = {
+    val at = spec.copy(gen = resolveGen(spark, spec.path))
+    at.tables.foreach(t => repairToManifest(spark, at.dir(t)))
+    register(spark, at)
+    at.gen
+  }
+
+  /** Append one batch (one frame per table) under the lease: repair every
+    * table, then write and commit the tables in declared order, each
+    * manifest commit carrying `batchTag`. A tagged retry appends nothing
+    * once the LAST table carries the tag, and otherwise skips each table
+    * that already does. */
+  def append(spec: Spec, frames: Seq[DataFrame],
+      batchTag: Option[String]): Unit = {
+    val spark = frames.head.sparkSession
+    withWriterLock(spark, spec.path) {
+      spec.tables.foreach(t => repairToManifest(spark, spec.dir(t)))
+      def done(t: Table): Boolean =
+        batchTag.isDefined && manifestTag(spark, spec.dir(t)) == batchTag
+      if (!done(spec.tables.last))
+        spec.tables.zip(frames).filterNot(tf => done(tf._1)).foreach {
+          case (t, df) => writeBucketed(df, spec.table(t), spec.dir(t),
+            spec.numBuckets, t.bucketCols, "append", batchTag)
+        }
+    }
+  }
+
+  /** Retract ids: append them as tombstones (`$path/tombstones`, plain
+    * parquet, one BIGINT `tomb_id` column). Probes hide them at once
+    * ([[live]]); the rows leave the files at the next [[compact]]. Leased:
+    * a tombstone landing between a compaction's tombstone read and its
+    * clear would be lost, the ids resurfacing in probes. */
+  def retract(spec: Spec, ids: DataFrame, idCol: String): Unit =
+    withWriterLock(ids.sparkSession, spec.path) {
+      requireBigint(ids, idCol)
+      ids.select(col(idCol).as("tomb_id"))
+        .write.mode("append").parquet(s"${spec.path}/tombstones")
+    }
+
+  /** Rewrite every table into the NEXT generation under the lease, one
+    * file per bucket with the tombstones applied, and commit it with the
+    * generation marker; then re-point the catalog, clear the tombstones
+    * and sweep superseded generations. Returns the new generation. */
+  def compact(spark: SparkSession, spec: Spec): Int =
+    withWriterLock(spark, spec.path) {
+      val next = spec.copy(gen = nextGen(spark, spec.path, spec.bases,
+        spec.gen))
+      val f = fs(spark, spec.path)
+      next.tables.foreach(t => f.delete(new Path(next.dir(t)), true))
+      val tombs = tombstones(spark, spec.path)
+      spec.tables.foreach(t => rewriteBucketed(spark, t, spec, next, tombs))
+      // COMMIT: everything below is post-commit housekeeping
+      f.create(new Path(s"${spec.path}/_compact_c${next.gen}"), true).close()
+      spec.tables.foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS ${spec.table(t)}"))
+      register(spark, next)
+      f.delete(new Path(s"${spec.path}/tombstones"), true)
+      sweepOld(spark, spec.path, spec.bases, next.gen)
+      next.gen
+    }
+
+  /** [[compact]] only when appends have fragmented the index: some table's
+    * fullest bucket holds more than `bar` files. Returns the new
+    * generation, or None when no compaction ran. */
+  def maybeCompact(spark: SparkSession, spec: Spec, bar: Int): Option[Int] =
+    if (spec.tables.map(t => maxFilesPerBucket(spark, spec.dir(t))).max > bar)
+      Some(compact(spark, spec))
+    else None
+
+  /** The streaming absorb, once per micro-batch: skip a `batchId` that
+    * already left its `_absorbed_<batchId>` marker, else run `append` with
+    * the batch tag `absorb_<batchId>` and then write the marker. The tag
+    * closes the window between the append's last manifest commit and the
+    * marker: a replay re-enters the append, finds its tag committed and
+    * appends nothing. Returns true when the append ran (or was recognized
+    * as already committed). */
+  def absorbOnce(spark: SparkSession, spec: Spec, batchId: Long)(
+      append: Option[String] => Unit): Boolean = {
+    val marker = new Path(spec.path, s"_absorbed_$batchId")
+    val f = fs(spark, spec.path)
+    if (f.exists(marker)) false
+    else {
+      append(Some(s"absorb_$batchId"))
+      f.create(marker, true).close()
+      true
+    }
+  }
+
+  /** The one bucketed table write: repartition on the bucket columns,
+    * `bucketBy`, `saveAsTable`, then commit the directory's manifest.
+    * Bucketed writes emit one file per (task, bucket); the repartition
+    * uses bucketing's own murmur3-pmod hash, so each task holds exactly
+    * one bucket and a write leaves one file per bucket, not numBuckets². */
+  private def writeBucketed(rows: DataFrame, table: String, dir: String,
+      numBuckets: Int, bucketCols: Seq[String], mode: String,
+      tag: Option[String] = None): Unit = {
+    rows.repartition(numBuckets, bucketCols.map(col): _*)
+      .write.mode(mode)
+      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
+      .option("path", dir)
+      .saveAsTable(table)
+    commitManifest(rows.sparkSession, dir, tag)
+  }
+
+  /** Rewrite table `t` of generation `from` into generation `to`. The
+    * source is repaired first (a plain-parquet read would otherwise
+    * legitimize a torn append's leftovers) and read as PLAIN parquet, not
+    * through the bucketed catalog table: a bucketed scan would claim the
+    * target partitioning, the optimizer would drop the "redundant"
+    * repartition, and DisableUnnecessaryBucketedScan would fall back to
+    * per-file splits — one file per INPUT split instead of per bucket.
+    * `t.dedupOnCompact` adds one distinct over small fixed-width rows,
+    * bounded to compaction time. */
+  private def rewriteBucketed(spark: SparkSession, t: Table, from: Spec,
+      to: Spec, tombs: Option[DataFrame]): Unit = {
+    repairToManifest(spark, from.dir(t))
+    val tmpTable = s"${from.table(t)}_compacting"
+    spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
+    val src = live(spark.read.parquet(from.dir(t)), tombs)
+    writeBucketed(if (t.dedupOnCompact) src.distinct() else src, tmpTable,
+      to.dir(t), from.numBuckets, t.bucketCols, "overwrite")
+    spark.sql(s"DROP TABLE $tmpTable") // external: files stay
+  }
+
+  /** Create (or re-point) each table's external catalog entry at `spec`'s
+    * generation. An entry registered against another location (a
+    * superseded generation) is dropped and recreated; no data moves. */
+  private def register(spark: SparkSession, spec: Spec): Unit =
+    spec.tables.foreach { t =>
+      val (table, dir) = (spec.table(t), spec.dir(t))
+      val exists = spark.catalog.tableExists(table)
+      val current = exists && spark.sql(s"DESCRIBE FORMATTED $table")
+        .collect().find(_.getString(0) == "Location")
+        .exists(r => new Path(r.getString(1)).toUri.getPath ==
+          new Path(dir).toUri.getPath)
+      if (!current) {
+        if (exists) spark.sql(s"DROP TABLE $table")
+        spark.sql(
+          s"""CREATE TABLE $table (${t.columns})
+             |USING parquet
+             |CLUSTERED BY (${t.bucketCols.mkString(", ")}) INTO ${spec.numBuckets} BUCKETS
+             |LOCATION '$dir'""".stripMargin)
+      }
+    }
+
+  // ---------------------------------------------------------- generations
+
   /** Newest COMMITTED generation at `path` (0 = uncompacted layout).
     * Strict `_compact_c<digits>` match — junk names never resolve. */
-  def resolveGen(spark: SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  private def resolveGen(spark: SparkSession, path: String): Int = {
+    val p = new Path(path)
     val f = fs(spark, path)
     if (!f.exists(p)) 0
     else f.listStatus(p).iterator
@@ -49,12 +319,11 @@ private[graft] object IndexGen {
 
   /** 1 + max over committed AND torn generation artifacts, so a torn
     * previous compaction attempt is never half-reused. */
-  def nextGen(spark: SparkSession, path: String, bases: Seq[String],
+  private def nextGen(spark: SparkSession, path: String, bases: Seq[String],
       currentGen: Int): Int = {
     val dirRe = ("^(?:" + bases.map(java.util.regex.Pattern.quote)
       .mkString("|") + ")\\.c(\\d+)$").r
-    val maxSeen = fs(spark, path)
-      .listStatus(new org.apache.hadoop.fs.Path(path))
+    val maxSeen = fs(spark, path).listStatus(new Path(path))
       .iterator.map(_.getPath.getName)
       .collect {
         case n if n.matches("_compact_c\\d+") =>
@@ -65,21 +334,15 @@ private[graft] object IndexGen {
     maxSeen + 1
   }
 
-  /** COMMIT a generation: everything after this call is housekeeping. */
-  def writeMarker(spark: SparkSession, path: String, gen: Int): Unit =
-    fs(spark, path)
-      .create(new org.apache.hadoop.fs.Path(s"$path/_compact_c$gen"), true)
-      .close()
-
   /** Retention: superseded generations (and their markers, and the
     * generation-0 dirs once a newer generation is committed) are never
     * read again. */
-  def sweepOld(spark: SparkSession, path: String, bases: Seq[String],
+  private def sweepOld(spark: SparkSession, path: String, bases: Seq[String],
       keepGen: Int): Unit = {
     val f = fs(spark, path)
     val gOf = ("^(?:" + bases.map(java.util.regex.Pattern.quote)
       .mkString("|") + "\\.c|_compact_c)(\\d+)$").r
-    f.listStatus(new org.apache.hadoop.fs.Path(path)).foreach { st =>
+    f.listStatus(new Path(path)).foreach { st =>
       val n = st.getPath.getName
       n match {
         case gOf(g) if g.toInt < keepGen => f.delete(st.getPath, true)
@@ -93,10 +356,10 @@ private[graft] object IndexGen {
   /** Overwrite-time clean: a fresh generation-0 write must not be
     * shadowed by a previous index's generations, filtered by its
     * tombstones, or skip-absorbed against its streaming markers. */
-  def cleanAll(spark: SparkSession, path: String,
+  private def cleanAll(spark: SparkSession, path: String,
       bases: Seq[String]): Unit = {
     val f = fs(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     if (!f.exists(p)) return
     val genRe = ("^(?:" + bases.map(java.util.regex.Pattern.quote)
       .mkString("|") + ")\\.c\\d+$").r
@@ -109,20 +372,10 @@ private[graft] object IndexGen {
     }
   }
 
-  /** Append retraction tombstones (`$path/tombstones`, plain parquet,
-    * one BIGINT `tomb_id` column). */
-  def appendTombstones(path: String, ids: DataFrame, idCol: String): Unit = {
-    require(ids.schema(ids.schema.fieldIndex(idCol)).dataType ==
-      org.apache.spark.sql.types.LongType,
-      "persisted index ids must be BIGINT")
-    ids.select(col(idCol).as("tomb_id"))
-      .write.mode("append").parquet(s"$path/tombstones")
-  }
-
   /** Live tombstone set, or None when none have been written (the common
     * case — keeps probe plans bit-identical to the tombstone-free ones). */
   def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
+    val p = new Path(s"$path/tombstones")
     val f = fs(spark, path)
     if (f.exists(p) &&
         f.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
@@ -138,74 +391,52 @@ private[graft] object IndexGen {
     tombs.fold(df)(t =>
       df.join(broadcast(t), df("id") === t("tomb_id"), "left_anti"))
 
-  def clearTombstones(spark: SparkSession, path: String): Unit =
-    fs(spark, path)
-      .delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+  /** Max parquet-file count over the buckets of one bucketed table
+    * directory (bucket id = the `_NNNNN` suffix Spark writes into
+    * bucketed file names). The compaction trigger statistic: appends add
+    * one file per bucket per batch, and a probe scan's open/footer
+    * overhead grows with exactly this number. Missing dir counts 0. */
+  private def maxFilesPerBucket(spark: SparkSession, dir: String): Int = {
+    val p = new Path(dir)
+    val f = fs(spark, dir)
+    if (!f.exists(p)) return 0
+    val re = "_(\\d{5})\\.".r
+    f.listStatus(p).iterator
+      .map(_.getPath.getName)
+      .filter(_.endsWith(".parquet"))
+      .flatMap(n => re.findFirstMatchIn(n).map(_.group(1)))
+      .toSeq.groupBy(identity).values
+      .foldLeft(0)((m, g) => math.max(m, g.size))
+  }
 
   // ----------------------------------------------------- append manifests
   //
-  // Bucketed `saveAsTable` appends are not transactional across files: a
-  // crashed batch append can leave a PARTIALLY-visible set of new bucket
-  // files (the streaming absorb path is replay-safe via its markers, but
-  // batch callers had no protection — the r13 verdict's last crash-safety
-  // gap). Each table directory therefore carries a `_manifest` file (one
-  // parquet file name per line) naming its COMMITTED files:
+  // Each table directory carries a manifest (one parquet file name per
+  // line) naming its COMMITTED files:
   //
-  //   - writers re-commit the manifest only after every data file of the
-  //     write is in place (write `_manifest.tmp`, delete old, rename —
-  //     rename is the atomic step on HDFS/local);
-  //   - [[repairToManifest]] deletes any data file NOT in the manifest —
-  //     a torn append's leftovers — and runs at index OPEN, at APPEND
-  //     start (so a retried append never compounds a torn one), and at
-  //     COMPACTION start (so a rewrite never legitimizes torn files);
+  //   - writers commit a manifest only after every data file of the write
+  //     is in place;
+  //   - [[repairToManifest]] deletes any data file NOT in the manifest;
   //   - a MISSING manifest disables repair for that directory (legacy
-  //     indexes, and the sub-millisecond delete→rename window): never
-  //     data loss, just no torn-append protection until the next commit.
-  //
-  // Multi-table indexes (LSH bands+posts) commit bands first: a crash
-  // between the two manifest commits leaves committed "ghost" band rows
-  // whose postings were repaired away — ghosts only add candidates that
-  // the rescore's postings join then drops (probe output is as if the
-  // append never happened), and a TAGGED retry (below) skips the
-  // committed bands entirely; an untagged retry appends the bands a
-  // second time (see the band-dedup note on [[rewriteBucketed]]).
-  //
-  // BATCH TAGS make retried appends exactly-once. The streaming absorb
-  // path writes an `_absorbed_<batchId>` marker after the append, so a
-  // crash between the last manifest commit and the marker makes the
-  // replay re-append a FULLY-COMMITTED batch — and duplicated rows are
-  // not merely size inflation: duplicated LSH postings double one side
-  // of every jaccard rescore count (wrong pair scores until compaction),
-  // and duplicated ANN list rows give the same neighbor two ranks in
-  // top-k (the ngram index alone is immune — its probe aggregates with
-  // countDistinct). Two separate files cannot commit atomically, so the
-  // batch identity is committed INSIDE the manifest: `commitManifest`
-  // takes an optional tag written as a `#tag:` header line (the rename
-  // commits file set + tag in one atomic step), and a retry carrying the
-  // same tag skips every directory whose NEWEST manifest already carries
-  // it. Compaction commits untagged manifests, which is safe: the
-  // `_absorbed_` markers carry idempotence across compactions, and the
-  // tag only needs to bridge the commit→marker window, inside which no
-  // compaction can have run (it is sequenced after the absorb in the
-  // same micro-batch). Untagged appends keep at-least-once semantics.
+  //     indexes): never data loss, just no torn-append protection until
+  //     the next commit.
   //
   // Manifests are VERSIONED (`_manifest.N`; readers take the max N, with
-  // the legacy fixed-name `_manifest` read as version 0): the r14
-  // single-name scheme committed by delete-then-rename, and a crash
-  // between the two steps left the directory with NO manifest — silently
-  // disabling torn-append repair exactly when a torn append is most
-  // likely to follow (the r14 verdict's manifest-loss window). A
-  // versioned commit is a pure create+rename to a FRESH name; superseded
-  // versions are swept only after the new one is in place, so every
-  // crash point leaves at least one committed manifest readable.
+  // the legacy fixed-name `_manifest` read as version 0): a single-name
+  // scheme commits by delete-then-rename, and a crash between the two
+  // steps leaves NO manifest — silently disabling repair exactly when a
+  // torn append is most likely to follow. A versioned commit is a pure
+  // create+rename to a FRESH name; superseded versions are swept only
+  // after the new one is in place, so every crash point leaves at least
+  // one committed manifest readable.
 
   private val ManifestVer = "^_manifest\\.(\\d+)$".r
 
   /** Committed manifest versions in `dir`, ascending (legacy `_manifest`
     * = version 0). Empty when the directory has never committed one. */
-  private def manifestVersions(f: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[(Int, org.apache.hadoop.fs.Path)] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+  private def manifestVersions(f: FileSystem,
+      dir: String): Seq[(Int, Path)] = {
+    val p = new Path(dir)
     if (!f.exists(p)) return Seq.empty
     f.listStatus(p).iterator.flatMap { st =>
       st.getPath.getName match {
@@ -216,16 +447,14 @@ private[graft] object IndexGen {
     }.toSeq.sortBy(_._1)
   }
 
-  private def readManifestFile(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
+  private def readText(f: FileSystem, p: Path): String = {
     val in = f.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
   }
 
-  private def dataFiles(f: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+  private def dataFiles(f: FileSystem, dir: String): Seq[String] = {
+    val p = new Path(dir)
     if (!f.exists(p)) Seq.empty
     else f.listStatus(p).iterator.map(_.getPath.getName)
       .filter(n => n.endsWith(".parquet") && !n.startsWith(".") &&
@@ -238,12 +467,8 @@ private[graft] object IndexGen {
     * Crash-safe at every point: tmp write (invisible), rename to a fresh
     * `_manifest.N` (the atomic commit), THEN sweep superseded versions —
     * a crash mid-sweep leaves extra versions that readers ignore (max N
-    * wins) and the next commit re-sweeps.
-    *
-    * `tag` commits the writing batch's identity atomically with the file
-    * set (a `#tag:` header line readers of the file list skip): a
-    * retried append carrying the same tag sees it via [[manifestTag]]
-    * and skips the directory — the exactly-once protocol above. */
+    * wins) and the next commit re-sweeps. `tag` is the batch tag, written
+    * as a `#tag:` header line that readers of the file list skip. */
   def commitManifest(spark: SparkSession, dir: String,
       tag: Option[String] = None): Unit = {
     tag.foreach(t => require(!t.contains("\n"), "manifest tag is one line"))
@@ -252,10 +477,10 @@ private[graft] object IndexGen {
       .mkString("\n").getBytes("UTF-8")
     val old = manifestVersions(f, dir)
     val next = old.lastOption.map(_._1).getOrElse(0) + 1
-    val tmp = new org.apache.hadoop.fs.Path(dir, "_manifest.tmp")
+    val tmp = new Path(dir, "_manifest.tmp")
     val out = f.create(tmp, true)
     try out.write(body) finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(dir, s"_manifest.$next")
+    val dst = new Path(dir, s"_manifest.$next")
     if (!f.rename(tmp, dst))
       throw new java.io.IOException(s"manifest rename failed under $dir")
     old.foreach { case (_, op) => f.delete(op, false) }
@@ -264,10 +489,10 @@ private[graft] object IndexGen {
   /** The batch tag the NEWEST committed manifest carries, if any — None
     * for untagged commits (compaction rewrites, legacy manifests) and
     * for directories without a manifest. */
-  def manifestTag(spark: SparkSession, dir: String): Option[String] = {
+  private def manifestTag(spark: SparkSession, dir: String): Option[String] = {
     val f = fs(spark, dir)
     manifestVersions(f, dir).lastOption.flatMap { case (_, mp) =>
-      readManifestFile(f, mp).linesIterator
+      readText(f, mp).linesIterator
         .find(_.startsWith("#tag:")).map(_.stripPrefix("#tag:"))
     }
   }
@@ -275,18 +500,17 @@ private[graft] object IndexGen {
   /** Delete every data file the NEWEST committed manifest does not name
     * (torn-append leftovers). No-op without a manifest. Returns the
     * removed count. */
-  def repairToManifest(spark: SparkSession, dir: String): Int = {
+  private def repairToManifest(spark: SparkSession, dir: String): Int = {
     val f = fs(spark, dir)
     manifestVersions(f, dir).lastOption match {
       case None => 0
       case Some((_, mp)) =>
-        val committed = readManifestFile(f, mp)
+        val committed = readText(f, mp)
           .linesIterator.filter(_.nonEmpty)
           .filterNot(_.startsWith("#")) // header lines (the batch tag)
           .toSet
         val torn = dataFiles(f, dir).filterNot(committed)
-        torn.foreach(n =>
-          f.delete(new org.apache.hadoop.fs.Path(dir, n), false))
+        torn.foreach(n => f.delete(new Path(dir, n), false))
         torn.size
     }
   }
@@ -298,7 +522,7 @@ private[graft] object IndexGen {
   def manifestSnapshot(spark: SparkSession, dir: String): (String, String) = {
     val f = fs(spark, dir)
     val (_, p) = manifestVersions(f, dir).last
-    (p.getName, readManifestFile(f, p))
+    (p.getName, readText(f, p))
   }
 
   /** Re-install a [[manifestSnapshot]], deleting every newer version the
@@ -307,33 +531,26 @@ private[graft] object IndexGen {
       snap: (String, String)): Unit = {
     val f = fs(spark, dir)
     manifestVersions(f, dir).foreach { case (_, p) => f.delete(p, false) }
-    val out = f.create(new org.apache.hadoop.fs.Path(dir, snap._1), true)
+    val out = f.create(new Path(dir, snap._1), true)
     try out.write(snap._2.getBytes("UTF-8")) finally out.close()
   }
 
   // ------------------------------------------------------ writer lease
   //
-  // Write correctness assumes ONE writer per index path (by contract) —
-  // and the contract is ENFORCED for every mutating entry point:
-  // compactions, batch appends, AND retractions take the lease (two
-  // concurrent appends would otherwise have each other's half-written
-  // files LEGITIMIZED by whichever commitManifest lands last, and a
-  // tombstone append racing a compaction between its tombstones read and
-  // clearTombstones would be silently dropped — the retracted ids
-  // resurfacing in probes). A lock file turns a violated contract from
-  // silent file corruption into a loud failure. Stale leases (a crashed
-  // holder) expire by file age; a LIVE long-running holder heartbeats
-  // the lock's mtime (every staleMs/4) so legitimate work longer than
-  // `staleMs` is never broken mid-run.
+  // Without the lease, two concurrent appends would have each other's
+  // half-written files LEGITIMIZED by whichever manifest commit lands
+  // last (a commit snapshots the directory's CURRENT file set). Stale
+  // leases (a crashed holder) expire by file age; a LIVE long-running
+  // holder heartbeats the lock's mtime (every staleMs/4) so legitimate
+  // work longer than `staleMs` is never broken mid-run.
   //
   // Lease IDENTITY is the holder token WRITTEN INTO the lock body
-  // (UUID + pid@host), not the file's mtime: the r15 break identified a
-  // lock by mtime equality, so on stores with coarse mtime granularity a
-  // fresh lock re-created within the observed stale one's timestamp
-  // could be stolen. Tokens are unique per acquire, so content identity
-  // is exact; release verifies the token before deleting, so a holder
-  // whose lease was wrongly broken fails LOUDLY instead of silently
-  // deleting whoever locked after it.
+  // (UUID + pid@host), not the file's mtime: on stores with coarse mtime
+  // granularity a fresh lock re-created within the observed stale one's
+  // timestamp would otherwise be stolen. Tokens are unique per acquire,
+  // so content identity is exact; release verifies the token before
+  // deleting, so a holder whose lease was wrongly broken fails LOUDLY
+  // instead of silently deleting whoever locked after it.
   //
   // The lease is ADVISORY on stores without atomic create-no-overwrite /
   // rename (some object stores): there it narrows the corruption window
@@ -349,13 +566,10 @@ private[graft] object IndexGen {
     * (a mid-write read on a checksummed store) surface as the raw
     * IOException — callers treat any non-match conservatively. A
     * spec-created empty lock reads as the legacy token "". */
-  private[graft] def readLockToken(f: org.apache.hadoop.fs.FileSystem,
-      lock: org.apache.hadoop.fs.Path): Option[String] =
-    try {
-      val in = f.open(lock)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    } catch { case _: java.io.FileNotFoundException => None }
+  private[graft] def readLockToken(f: FileSystem,
+      lock: Path): Option[String] =
+    try Some(readText(f, lock))
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** Run `body` holding `$path/_writer_lock`. Throws IllegalStateException
     * when another live writer holds it; a lease older than `staleMs` is
@@ -367,13 +581,12 @@ private[graft] object IndexGen {
     * its lease live. Release is ownership-verified: if the lock no
     * longer carries this holder's token (a misbehaving breaker stole the
     * lease and someone else re-locked), release throws instead of
-    * deleting the new holder's lock — the triple-race that r15's
-    * unverified `delete` turned into a silent double-writer. */
+    * deleting the new holder's lock. */
   def withWriterLock[T](spark: SparkSession, path: String,
       staleMs: Long = 60L * 60 * 1000)(body: => T): T = {
     val f = fs(spark, path)
-    val lock = new org.apache.hadoop.fs.Path(path, "_writer_lock")
-    f.mkdirs(new org.apache.hadoop.fs.Path(path))
+    val lock = new Path(path, "_writer_lock")
+    f.mkdirs(new Path(path))
     val token = newLockToken()
     def tryAcquire(): Boolean =
       try {
@@ -424,8 +637,7 @@ private[graft] object IndexGen {
     * broken or stolen mid-run — fail loudly (the holder's writes raced
     * an unknown concurrent writer and must be treated as suspect) and
     * leave the current holder's lock intact. */
-  private def releaseLock(f: org.apache.hadoop.fs.FileSystem,
-      lock: org.apache.hadoop.fs.Path, token: String): Unit =
+  private def releaseLock(f: FileSystem, lock: Path, token: String): Unit =
     readLockToken(f, lock) match {
       case Some(t) if t == token => f.delete(lock, false)
       case other =>
@@ -445,15 +657,14 @@ private[graft] object IndexGen {
     * token. A mismatch means this breaker stole a FRESH lock created
     * between its read and its rename (the losing side of the race): put
     * it back for its live holder; if the rename-back fails because a
-    * third writer re-locked meanwhile, THROW naming the stranded file —
-    * r15's delete-on-restore-failure silently left the stolen holder
-    * lockless AND its later release deleting the third writer's lock.
+    * third writer re-locked meanwhile, THROW naming the stranded file
+    * rather than leave the stolen holder lockless.
     *
     * `raceAfterRead`/`raceAfterRename` are deterministic race-injection
     * seams for IndexCrashSpec (the windows are sub-millisecond in
     * production); real callers leave the no-op defaults. */
-  private[graft] def breakStaleLock(f: org.apache.hadoop.fs.FileSystem,
-      lock: org.apache.hadoop.fs.Path, observedToken: String,
+  private[graft] def breakStaleLock(f: FileSystem, lock: Path,
+      observedToken: String,
       raceAfterRead: () => Unit = () => (),
       raceAfterRename: () => Unit = () => ()): Unit = {
     readLockToken(f, lock) match {
@@ -462,7 +673,7 @@ private[graft] object IndexGen {
       case Some(_) =>
     }
     raceAfterRead()
-    val broken = new org.apache.hadoop.fs.Path(lock.getParent,
+    val broken = new Path(lock.getParent,
       s"_writer_lock.broken.${java.util.UUID.randomUUID()}")
     val renamed =
       try f.rename(lock, broken)
@@ -479,78 +690,5 @@ private[graft] object IndexGen {
           s"while breaking a stale lease, and a third writer re-locked " +
           s"before it could be restored; the stolen lease is stranded at " +
           s"$broken — resolve by hand before the next write")
-  }
-
-  /** Max parquet-file count over the buckets of one bucketed table
-    * directory (bucket id = the `_NNNNN` suffix Spark writes into
-    * bucketed file names). The compaction trigger statistic: appends add
-    * one file per bucket per batch, and a probe scan's open/footer
-    * overhead grows with exactly this number. Missing dir counts 0. */
-  def maxFilesPerBucket(spark: SparkSession, dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(p)) return 0
-    val re = "_(\\d{5})\\.".r
-    f.listStatus(p).iterator
-      .map(_.getPath.getName)
-      .filter(_.endsWith(".parquet"))
-      .flatMap(n => re.findFirstMatchIn(n).map(_.group(1)))
-      .toSeq.groupBy(identity).values
-      .foldLeft(0)((m, g) => math.max(m, g.size))
-  }
-
-  /** Rewrite one bucketed table into a generation directory with ONE
-    * file per bucket: bucketed writes emit one file per (task, bucket),
-    * and repartitioning on the bucket columns uses the same
-    * murmur3-pmod hash as the bucket spec, so every task holds exactly
-    * one bucket. The source is read as PLAIN parquet, not through the
-    * bucketed catalog table: a bucketed scan would claim the target
-    * partitioning, the optimizer would drop the "redundant" repartition,
-    * and DisableUnnecessaryBucketedScan would fall back to per-file
-    * splits — reproducing one file per INPUT split instead of per
-    * bucket.
-    *
-    * `dedup = true` additionally drops exact duplicate ROWS during the
-    * rewrite — for tables whose rows are unique by construction but can
-    * be appended twice by a documented crash-retry (the LSH bands table:
-    * a bands-committed/posts-torn crash followed by the retry appends the
-    * batch's band rows a second time; probes stay correct because the
-    * candidate set dedupes, but the ghost rows inflate index size and
-    * candidate volume until a compaction). The distinct is one extra
-    * hash exchange on rows that are small fixed-width tuples — cheap
-    * next to the rewrite itself, and bounded to compaction time. */
-  def rewriteBucketed(spark: SparkSession, srcDir: String, dstDir: String,
-      tmpTable: String, numBuckets: Int, bucketCols: Seq[String],
-      tombs: Option[DataFrame], dedup: Boolean = false): Unit = {
-    // the plain-parquet source read would otherwise LEGITIMIZE a torn
-    // append's leftover files into the new generation
-    repairToManifest(spark, srcDir)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-    val src = live(spark.read.parquet(srcDir), tombs)
-    val rows = if (dedup) src.distinct() else src
-    rows.repartition(numBuckets, bucketCols.map(col): _*)
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .option("path", dstDir)
-      .saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE $tmpTable") // external: files stay
-    commitManifest(spark, dstDir)
-  }
-
-  /** Create (or re-point) a catalog table at a generation's location.
-    * A table registered against a superseded generation is dropped and
-    * recreated — external DDL, so no data moves. */
-  def ensureTable(spark: SparkSession, table: String, dir: String,
-      ddl: String): Unit = {
-    def currentLocation: Option[String] =
-      spark.sql(s"DESCRIBE FORMATTED $table").collect()
-        .find(_.getString(0) == "Location").map(_.getString(1))
-    if (spark.catalog.tableExists(table)) {
-      val want = new org.apache.hadoop.fs.Path(dir).toUri.getPath
-      val stale = !currentLocation.exists(loc =>
-        new org.apache.hadoop.fs.Path(loc).toUri.getPath == want)
-      if (stale) spark.sql(s"DROP TABLE $table") else return
-    }
-    spark.sql(ddl)
   }
 }

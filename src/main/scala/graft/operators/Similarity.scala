@@ -915,17 +915,22 @@ object Similarity {
     * `{name}_lists` (id, cent_id, codes, rnorm) CLUSTERED BY cent_id —
     * the inverted-list layout, so a probe joins it with NO exchange on
     * the index side (only the query side shuffles) — plus the model
-    * meta. Generations/markers/tombstones follow the [[Dedup.LshIndex]]
-    * discipline ([[IndexGen]]). This is the production ANN shape at
-    * 100 TB: the lists hold m one-byte codes + one double per vector
-    * (64x smaller than float64 at m=8, dim=64), the index is written
-    * once and probed/appended per ingest, and nothing ever re-encodes
-    * or re-shuffles the corpus side. */
+    * meta, under the [[IndexGen]] lifecycle. This is the production ANN
+    * shape at 100 TB: the lists hold m one-byte codes + one double per
+    * vector (64x smaller than float64 at m=8, dim=64), the index is
+    * written once and probed/appended per ingest, and nothing ever
+    * re-encodes or re-shuffles the corpus side. */
   case class AnnIndex(name: String, path: String, meta: AnnIndexMeta,
       gen: Int = 0) {
     def listsTable: String = s"${name}_lists"
     def listsDir: String = IndexGen.dirFor(path, "lists", gen)
+    private[graft] def spec: IndexGen.Spec =
+      IndexGen.Spec(name, path, meta.numBuckets, gen, AnnTables)
   }
+
+  private val AnnTables = Seq(IndexGen.Table("lists",
+    "id BIGINT, cent_id INT, codes ARRAY<TINYINT>, rnorm DOUBLE",
+    Seq("cent_id")))
 
   /** The production IVF sizing rule: `nlist` grows with the SQUARE ROOT
     * of the corpus (the standard IVF design point — per-list length and
@@ -950,57 +955,43 @@ object Similarity {
 
   /** Build and PERSIST an IVF-PQ index: train the residual model
     * ([[pqTrainResidual]] — deterministic sampled path), encode the
-    * corpus ([[pqEncode]]), and write the lists bucketed by cent_id
-    * (one file per bucket — the repartition uses bucketing's own hash),
-    * with the model serialized to `meta.json`. Overwrites any prior
-    * index at `path` (including stale generations and tombstones). */
+    * corpus ([[pqEncode]]), and write the lists bucketed by cent_id, with
+    * the model serialized to `meta.json`: scalars + `cents` (rows
+    * ';'-joined, components ' '-joined; row index = dense cent_id) +
+    * `codebooks` (subspaces '|'-joined, each k rows ';'-joined; row index
+    * = code). Doubles round-trip exactly through Double.toString. Overwrites
+    * any prior index at `path` ([[IndexGen.create]]). */
   def writeAnnIndex(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, name: String, m: Int = 8, k: Int = 16,
       nlist: Int = 64, numBuckets: Int = 16,
       coarseTrainIters: Int = 0): AnnIndex = {
-    require(corpus.schema(corpus.schema.fieldIndex(idCol)).dataType ==
-      org.apache.spark.sql.types.LongType,
-      "persisted index ids must be BIGINT (cross-session DDL)")
-    val spark = corpus.sparkSession
+    IndexGen.requireBigint(corpus, idCol)
     val model = pqTrainResidual(corpus, idCol, vecCol, m, k, nlist,
       coarseTrainIters)
     val idx = AnnIndex(name, path, AnnIndexMeta(model, numBuckets))
-    spark.sql(s"DROP TABLE IF EXISTS ${idx.listsTable}")
-    IndexGen.cleanAll(spark, path, Seq("lists"))
-    pqEncode(corpus, idCol, vecCol, model)
-      .repartition(numBuckets, col("cent_id"))
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "cent_id")
-      .option("path", idx.listsDir)
-      .saveAsTable(idx.listsTable)
-    IndexGen.commitManifest(spark, idx.listsDir)
-    writeAnnMeta(spark, s"$path/meta.json", idx.meta)
+    def rows(cs: Seq[(Int, Seq[Double])]) =
+      cs.map(_._2.map(_.toString).mkString(" ")).mkString(";")
+    IndexGen.create(idx.spec, Seq(pqEncode(corpus, idCol, vecCol, model)),
+      Seq("m" -> model.m, "ds" -> model.ds, "numBuckets" -> numBuckets,
+        "cents" -> rows(model.residualCentroids.get),
+        "codebooks" -> model.codebooks.map(rows).mkString("|")))
     idx
   }
 
   /** Open a persisted ANN index from `path`: replay the model from
-    * meta.json, resolve the newest committed compaction generation, and
-    * register (or re-point) the bucketed catalog table — the
-    * [[Dedup.readLshIndex]] contract. */
+    * meta.json and open the newest committed generation
+    * ([[IndexGen.open]]) — the [[Dedup.readLshIndex]] contract. */
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       name: String): AnnIndex = {
-    val meta = readAnnMeta(spark, s"$path/meta.json")
-    val idx = AnnIndex(name, path, meta,
-      gen = IndexGen.resolveGen(spark, path))
-    // open-time recovery: drop a torn batch append's leftover files
-    IndexGen.repairToManifest(spark, idx.listsDir)
-    registerAnnTable(spark, idx)
-    idx
+    val f = IndexGen.readMeta(spark, path)
+    def rows(s: String): Seq[(Int, Seq[Double])] =
+      s.split(";").toSeq.map(_.split(" ").toSeq.map(_.toDouble))
+        .zipWithIndex.map(_.swap)
+    val model = PqModel(f("m").toInt, f("ds").toInt,
+      f("codebooks").split("\\|").toSeq.map(rows), Some(rows(f("cents"))))
+    val idx = AnnIndex(name, path, AnnIndexMeta(model, f("numBuckets").toInt))
+    idx.copy(gen = IndexGen.open(spark, idx.spec))
   }
-
-  private def registerAnnTable(spark: org.apache.spark.sql.SparkSession,
-      idx: AnnIndex): Unit =
-    IndexGen.ensureTable(spark, idx.listsTable, idx.listsDir,
-      s"""CREATE TABLE ${idx.listsTable}
-         |(id BIGINT, cent_id INT, codes ARRAY<TINYINT>, rnorm DOUBLE)
-         |USING parquet
-         |CLUSTERED BY (cent_id) INTO ${idx.meta.numBuckets} BUCKETS
-         |LOCATION '${idx.listsDir}'""".stripMargin)
 
   /** Top-k ANN through the PERSISTED index: identical scoring to
     * [[pqTopK]] (the shared [[pqProbeLists]] — LUT ADC, round-6
@@ -1073,136 +1064,39 @@ object Similarity {
     * against the index's codebooks) and append bucketed files, which the
     * bucketed scan groups back into the same partitions (no probe-plan
     * regression; compaction is the small-files counter-move). Caller
-    * contract: appended ids disjoint from indexed ids. Holds the
-    * [[IndexGen.withWriterLock]] lease: commitManifest snapshots the
-    * directory's CURRENT file set, so a concurrent append would have its
-    * half-written files legitimized by this one's commit — under the
-    * lease it fails loudly instead.
-    *
-    * `batchTag` makes a RETRIED append exactly-once (the streaming
-    * replay path): the tag commits atomically with the manifest, and a
-    * retry whose tag already heads the newest manifest appends nothing.
-    * This matters for probe CORRECTNESS, not just index size — a
-    * duplicated list row gives the same neighbor two of the top-k ranks
-    * until compaction. Untagged appends keep at-least-once semantics. */
+    * contract: appended ids disjoint from indexed ids. Leased,
+    * manifest-committed and exactly-once under `batchTag`
+    * ([[IndexGen.append]]). */
   def appendToAnnIndex(index: AnnIndex, batch: DataFrame, idCol: String,
       vecCol: String, batchTag: Option[String] = None): Unit = {
-    require(batch.schema(batch.schema.fieldIndex(idCol)).dataType ==
-      org.apache.spark.sql.types.LongType,
-      "persisted index ids must be BIGINT")
-    val spark = batch.sparkSession
-    IndexGen.withWriterLock(spark, index.path) {
-      // manifest protocol (IndexGen): repair any previous torn append,
-      // then commit this one's file set only after the data write
-      // completes — a crash in between leaves files the next
-      // open/append repairs away
-      IndexGen.repairToManifest(spark, index.listsDir)
-      val done = batchTag.isDefined &&
-        IndexGen.manifestTag(spark, index.listsDir) == batchTag
-      if (!done) {
-        pqEncode(batch, idCol, vecCol, index.meta.model)
-          .repartition(index.meta.numBuckets, col("cent_id"))
-          .write.mode("append")
-          .bucketBy(index.meta.numBuckets, "cent_id")
-          .option("path", index.listsDir)
-          .saveAsTable(index.listsTable)
-        IndexGen.commitManifest(spark, index.listsDir, batchTag)
-      }
-    }
+    IndexGen.requireBigint(batch, idCol)
+    IndexGen.append(index.spec,
+      Seq(pqEncode(batch, idCol, vecCol, index.meta.model)), batchTag)
   }
 
-  /** Retract vectors: id tombstones hide them from probes immediately
-    * ([[IndexGen.appendTombstones]]); the rows leave the files at the
-    * next [[compactAnnIndex]]. Re-adding a retracted id requires a
-    * compaction first (the tombstone filters by id, not file age).
-    * Leased like every other mutation: a tombstone landing between a
-    * compaction's tombstones read and its clearTombstones would be
-    * silently dropped. */
+  /** Retract vectors: id tombstones hide them from probes immediately;
+    * the rows leave the files at the next [[compactAnnIndex]]
+    * ([[IndexGen.retract]]). Re-adding a retracted id requires a
+    * compaction first (the tombstone filters by id, not file age). */
   def retractFromAnnIndex(index: AnnIndex, ids: DataFrame,
       idCol: String): Unit =
-    IndexGen.withWriterLock(ids.sparkSession, index.path) {
-      IndexGen.appendTombstones(index.path, ids, idCol)
-    }
+    IndexGen.retract(index.spec, ids, idCol)
 
-  /** Compact the lists table: rewrite into the next generation with the
-    * same bucket spec — one file per bucket — applying and clearing
-    * tombstones; commit-marker + retention per [[IndexGen]]. Same
-    * crash-safety and single-writer contract as
-    * [[Dedup.compactLshIndex]]. */
+  /** Compact the lists table into the next generation — one file per
+    * bucket, tombstones applied ([[IndexGen.compact]]). */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
       index: AnnIndex): AnnIndex =
-    IndexGen.withWriterLock(spark, index.path) {
-      val next = index.copy(
-        gen = IndexGen.nextGen(spark, index.path, Seq("lists"), index.gen))
-      IndexGen.fs(spark, index.path)
-        .delete(new org.apache.hadoop.fs.Path(next.listsDir), true)
-      IndexGen.rewriteBucketed(spark, index.listsDir, next.listsDir,
-        s"${index.name}_lists_compacting", index.meta.numBuckets,
-        Seq("cent_id"), IndexGen.tombstones(spark, index.path))
-      IndexGen.writeMarker(spark, index.path, next.gen)
-      spark.sql(s"DROP TABLE IF EXISTS ${index.listsTable}")
-      registerAnnTable(spark, next)
-      IndexGen.clearTombstones(spark, index.path)
-      IndexGen.sweepOld(spark, index.path, Seq("lists"), next.gen)
-      next
-    }
+    index.copy(gen = IndexGen.compact(spark, index.spec))
 
   /** Compact only when appends have fragmented the lists: if the
     * fullest bucket holds more than `maxFilesPerBucket` files, run
     * [[compactAnnIndex]]; otherwise return the handle unchanged — the
-    * [[Dedup.maybeCompactLshIndex]] trigger for the ANN ingest loop
+    * trigger of the ANN ingest loop
     * ([[graft.streaming.VecStream.ingestAnnStream]]). */
   def maybeCompactAnnIndex(spark: org.apache.spark.sql.SparkSession,
       index: AnnIndex, maxFilesPerBucket: Int): AnnIndex =
-    if (IndexGen.maxFilesPerBucket(spark, index.listsDir)
-        > maxFilesPerBucket)
-      compactAnnIndex(spark, index)
-    else index
-
-  /** meta.json codec for [[AnnIndexMeta]] — hand-rolled like the
-    * LshIndexMeta one (no JSON library on the engine classpath). Doubles
-    * round-trip exactly through Double.toString/parseDouble. Layout:
-    * scalars + `cents` (rows ';'-joined, components ' '-joined; row
-    * index = dense cent_id) + `codebooks` (subspaces '|'-joined, each
-    * k rows ';'-joined; row index = code). */
-  private def writeAnnMeta(spark: org.apache.spark.sql.SparkSession,
-      file: String, meta: AnnIndexMeta): Unit = {
-    val m = meta.model
-    require(m.residualCentroids.nonEmpty,
-      "persisted ANN indexes store residual models")
-    def row(v: Seq[Double]) = v.map(_.toString).mkString(" ")
-    val cents = m.residualCentroids.get.map(c => row(c._2)).mkString(";")
-    val cbs = m.codebooks.map(_.map(c => row(c._2)).mkString(";"))
-      .mkString("|")
-    val body = s"""{"m":${m.m},"ds":${m.ds},""" +
-      s""""numBuckets":${meta.numBuckets},""" +
-      s""""cents":"$cents","codebooks":"$cbs"}"""
-    val p = new org.apache.hadoop.fs.Path(file)
-    val out = IndexGen.fs(spark, file).create(p, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readAnnMeta(spark: org.apache.spark.sql.SparkSession,
-      file: String): AnnIndexMeta = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val in = IndexGen.fs(spark, file).open(p)
-    val body =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def field(n: String): String =
-      ("\"" + n + "\":\"?([^\",}]*)\"?").r.findFirstMatchIn(body)
-        .getOrElse(throw new IllegalArgumentException(
-          s"AnnIndex meta missing field $n in $file")).group(1)
-    def rows(s: String): Seq[Seq[Double]] =
-      s.split(";").toSeq.map(_.split(" ").toSeq.map(_.toDouble))
-    val cents = rows(field("cents")).zipWithIndex
-      .map { case (v, i) => (i, v) }
-    val cbs = field("codebooks").split("\\|").toSeq.map(b =>
-      rows(b).zipWithIndex.map { case (v, i) => (i, v) })
-    AnnIndexMeta(
-      PqModel(field("m").toInt, field("ds").toInt, cbs, Some(cents)),
-      field("numBuckets").toInt)
-  }
+    IndexGen.maybeCompact(spark, index.spec, maxFilesPerBucket)
+      .fold(index)(g => index.copy(gen = g))
 
   /** k-center greedy (farthest-point) coreset selection — Gonzalez 1985
     * max-min seeding, the coreset selector of Sener & Savarese 2018

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.functions.Text
-import graft.operators.Dedup
+import graft.operators.{Dedup, IndexGen}
 
 /** Streaming document ingest with near-duplicate flagging against a static
   * index — the incremental-dedup ingest path (the streaming twin of
@@ -179,30 +179,15 @@ object DocStream {
   }
 
   /** Idempotent absorb: append `batch` to the index unless this batchId
-    * already left its marker (a replayed micro-batch must not double the
-    * postings — duplicate posting rows inflate every later rescore's
-    * intersection counts). The append itself carries the batchId as a
-    * manifest tag ([[Dedup.appendToLshIndex]]'s `batchTag`), closing the
-    * crash window BETWEEN the append's last manifest commit and the
-    * marker write: the replay re-enters the append, finds its own tag
-    * already committed, and appends nothing — without the tag the
-    * fully-committed batch would land twice and corrupt every rescore
-    * count it touches until compaction. Returns true when the append
-    * ran (or was recognized as already committed). */
+    * already left its marker, carrying the batchId as the append's batch
+    * tag ([[graft.operators.IndexGen.absorbOnce]]) — a replayed absorb
+    * would double the postings and corrupt every later rescore count it
+    * touches until compaction. Returns true when the append ran (or was
+    * recognized as already committed). */
   def absorbOnce(index: Dedup.LshIndex, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(index.path,
-      s"_absorbed_$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) false
-    else {
-      Dedup.appendToLshIndex(index, batch, "doc_id", "text",
-        batchTag = Some(s"absorb_$batchId"))
-      fs.create(marker, true).close()
-      true
-    }
-  }
+      batchId: Long): Boolean =
+    IndexGen.absorbOnce(batch.sparkSession, index.spec, batchId)(tag =>
+      Dedup.appendToLshIndex(index, batch, "doc_id", "text", batchTag = tag))
 
   /** Durable variant: flags land in a parquet sink with a checkpoint, so an
     * ingest that stops and restarts resumes from the file-source offset AND

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.Similarity
+import graft.operators.{IndexGen, Similarity}
 
 /** Streaming vector ingest over a PERSISTED IVF-PQ index — the ANN twin
   * of [[DocStream.ingestDedupStream]]: every micro-batch of new
@@ -67,26 +67,14 @@ object VecStream {
   }
 
   /** Idempotent absorb ([[DocStream.absorbOnce]] semantics): append the
-    * batch to the lists unless this batchId already left its marker.
-    * The append carries the batchId as a manifest tag, so a replay that
-    * crashed between the manifest commit and the marker write appends
-    * nothing the second time (a duplicated list row would give the same
-    * neighbor two top-k ranks until compaction). Returns true when the
-    * append ran (or was recognized as already committed). */
+    * batch to the lists unless this batchId already left its marker; a
+    * duplicated list row would give the same neighbor two top-k ranks
+    * until compaction. */
   def absorbOnce(index: Similarity.AnnIndex, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(index.path,
-      s"_absorbed_$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) false
-    else {
+      batchId: Long): Boolean =
+    IndexGen.absorbOnce(batch.sparkSession, index.spec, batchId)(tag =>
       Similarity.appendToAnnIndex(index,
         batch.select(col("vec_id"),
           col("embedding").cast("array<double>").as("vec")),
-        "vec_id", "vec", batchTag = Some(s"absorb_$batchId"))
-      fs.create(marker, true).close()
-      true
-    }
-  }
+        "vec_id", "vec", batchTag = tag))
 }

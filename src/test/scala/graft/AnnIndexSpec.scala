@@ -74,6 +74,14 @@ class AnnIndexSpec extends AnyFunSuite {
     val got = topk(Similarity.probeAnnIndex(idx, queriesOf(corpus),
       "qid", "qvec", k = 5, nprobe = 3))
     assert(got == expected)
+    // a meta.json missing a field fails loudly, naming field and file
+    val text = MetaJson.read(path)
+    MetaJson.write(path, text.replace("\"numBuckets\":4,", ""))
+    val e = intercept[IllegalArgumentException] {
+      Similarity.readAnnIndex(spark, path, "annspec_xs")
+    }
+    assert(e.getMessage.contains("numBuckets") &&
+      e.getMessage.contains(s"$path/meta.json"), e.getMessage)
   }
 
   test("probe join: the index side contributes NO exchange (bucketed scan)") {

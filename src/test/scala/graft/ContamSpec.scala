@@ -115,6 +115,17 @@ class ContamSpec extends AnyFunSuite {
     val want = inlineProbe(bench)
     Pins.flush()
     assert(got == want)
+    // the exact meta.json bytes, so an index written by an earlier build
+    // opens here and vice versa
+    val text = MetaJson.read(path)
+    assert(text == """{"n":4,"numBuckets":4}""")
+    // a meta.json missing a field fails loudly, naming field and file
+    MetaJson.write(path, text.replace("\"n\":4,", ""))
+    val e = intercept[IllegalArgumentException] {
+      Contam.readNgramIndex(spark, path, "contam_uri")
+    }
+    assert(e.getMessage.contains("\"n\"") &&
+      e.getMessage.contains(s"$path/meta.json"), e.getMessage)
   }
 
   test("decontaminate: kept ∪ dropped partition the corpus, provenance right") {

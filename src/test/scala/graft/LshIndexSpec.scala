@@ -70,6 +70,18 @@ class LshIndexSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     Pins.flush()
     assert(got == expected)
+    // the exact meta.json bytes, so an index written by an earlier build
+    // opens here and vice versa
+    val text = MetaJson.read(path)
+    assert(text == """{"shingleSize":3,"numHashes":64,"bands":16,""" +
+      """"numBuckets":4,"maxDocFreq":25}""")
+    // a meta.json missing a field fails loudly, naming field and file
+    MetaJson.write(path, text.replace("\"bands\":16,", ""))
+    val e = intercept[IllegalArgumentException] {
+      Dedup.readLshIndex(spark, path, "lshspec_xs")
+    }
+    assert(e.getMessage.contains("\"bands\"") &&
+      e.getMessage.contains(s"$path/meta.json"), e.getMessage)
   }
 
   test("index under a file:-qualified URI: meta writes where probes read") {
