@@ -77,31 +77,28 @@ object GoldenRecord {
       .select(dataCols.indices.map(i => col("__golden").getField(s"c$i").as(dataCols(i))): _*)
   }
 
-  /** Incremental golden-record upsert — the daily-ingest shape: instead of
-    * re-merging the whole golden table (the reference's "incremental" story
-    * is rerunning the script over everything), only groups whose dedup key
-    * appears in the incoming batch are re-merged; untouched golden rows
-    * pass through without a shuffle of their data. Incoming batches are
-    * small relative to the golden table, so `touchedKeys` broadcasts and
-    * the anti/semi joins stay map-side.
+  /** Golden-record upsert — the daily-ingest shape: merge an incoming batch
+    * into an existing golden table. The result is `dedupe(existing ∪
+    * incoming)` by construction: one aggregate over both, so a call plans
+    * one shuffle and runs as one map stage plus one result stage.
     *
-    * PRECONDITION: `existing` must itself be a prior dedupe output (one row
-    * per key, values already merged/normalized). Untouched rows pass through
-    * unmodified, so only under that precondition is the result identical to
-    * `dedupe(existing ∪ incoming)` (spec-proved for that case). */
+    * When `existing` is a prior dedupe output, its untouched rows come back
+    * unchanged: each is alone in its group (its dedup key recomputes to its
+    * group's key, because every key part is derived from a value the merge
+    * can pick), and each of its values is a valid winner or null, which a
+    * one-row group re-merges to itself.
+    *
+    * Trade-off: the whole golden table is shuffled on every call, not only
+    * the groups the batch touches. A caller that rewrites the whole table
+    * per batch (as [[graft.streaming.ContactsStream.goldenUpsertStream]]
+    * does) already pays per-call cost in proportion to the table. */
   def upsertIncremental(existing: DataFrame, incoming: DataFrame,
       rowIdCol: String, lastUpdatedCol: Option[String] = None,
       keyCol: String = "dedup_key"): DataFrame = {
-    val exKeyed = if (existing.columns.contains(keyCol)) existing
-      else withDedupKey(existing, keyCol)
-    val inKeyed = if (incoming.columns.contains(keyCol)) incoming
-      else withDedupKey(incoming, keyCol)
-    val touchedKeys = inKeyed.select(col(keyCol)).distinct()
-    val touched = exKeyed.join(broadcast(touchedKeys), Seq(keyCol), "left_semi")
-    val untouched = exKeyed.join(broadcast(touchedKeys), Seq(keyCol), "left_anti")
-    val merged = dedupe(touched.unionByName(inKeyed), rowIdCol,
+    def keyed(df: DataFrame) =
+      if (df.columns.contains(keyCol)) df else withDedupKey(df, keyCol)
+    dedupe(keyed(existing).unionByName(keyed(incoming)), rowIdCol,
       lastUpdatedCol, keyCol)
-    untouched.drop(keyCol).unionByName(merged)
   }
 
   /** SEQNO reassignment (P8, clean_contacts.py:62-63): 1..N in an explicit

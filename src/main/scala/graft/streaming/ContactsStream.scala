@@ -1,6 +1,10 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -10,11 +14,11 @@ import graft.pipeline.Clean
 /** Incremental contacts ingest (SURVEY.md §2.10 extension): watch a
   * directory for newly-dropped contact TSVs, run the SAME batch cleaning
   * transforms on each micro-batch, and append to a parquet staging area via
-  * foreachBatch. The golden-record merge stays a periodic batch compaction
-  * over the staging table — a holistic group-by, deliberately not
-  * incrementalized (a per-key stateful merge would hold every golden record
-  * in the state store forever; at 100 TB the compaction IS the cheaper
-  * plan).
+  * foreachBatch ([[cleanIngest]]), or merge each micro-batch into a
+  * versioned golden table ([[goldenUpsertStream]]). The golden merge holds
+  * no streaming state: each micro-batch re-merges the latest snapshot with
+  * the batch in one batch aggregate (a per-key stateful merge would hold
+  * every golden record in the state store forever).
   *
   * File-source streaming requires an explicit schema: contact exports vary
   * per source, so the caller resolves it once from a sample file
@@ -64,9 +68,15 @@ object ContactsStream {
   /** Streaming golden-record maintenance: [[graft.pipeline.GoldenRecord
     * .upsertIncremental]] as the foreachBatch core. Each micro-batch is
     * cleaned with the batch `Clean` stage and merged into the golden
-    * table by dedup key — only groups TOUCHED by the batch re-merge;
-    * untouched golden rows pass through (the broadcast semi/anti joins of
-    * the batch operator, unchanged).
+    * table by dedup key in one aggregate over the predecessor snapshot and
+    * the batch: a micro-batch runs two Spark jobs, the merge's map stage
+    * and its result/write stage.
+    *
+    * The predecessor snapshot is read with the cleaned batch's schema, so
+    * no schema-inference job runs. A read with a given schema would
+    * null-fill a column the snapshot lacks and drop one it adds, so the
+    * column names in one part file's parquet footer are checked first,
+    * without a Spark job; a mismatch raises, naming the columns.
     *
     * The golden table is a series of versioned parquet snapshots
     * (`v=<batchId>`): a batch reads the latest snapshot committed BEFORE
@@ -90,7 +100,7 @@ object ContactsStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val incoming = Clean(batch)
         val existing = latestVersionBefore(spark, goldenDir, batchId) match {
-          case Some(v) => spark.read.parquet(s"$goldenDir/v=$v")
+          case Some(v) => readSnapshot(spark, s"$goldenDir/v=$v", incoming.schema)
           case None => spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             incoming.schema)
@@ -111,6 +121,33 @@ object ContactsStream {
       .start()
     q.awaitTermination()
     q
+  }
+
+  /** Snapshot `dir` read with `schema`, after checking that the column
+    * names in one part file's footer match `schema`'s (under the session's
+    * case sensitivity): raises naming the missing and extra columns, or
+    * when the snapshot holds no part file. */
+  private def readSnapshot(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame = {
+    val root = new Path(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val part = root.getFileSystem(conf).listStatus(root)
+      .find(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .getOrElse(throw new IllegalStateException(
+        s"golden snapshot $dir holds no parquet part file"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(part, conf))
+    val onDisk =
+      try reader.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+      finally reader.close()
+    val same = spark.sessionState.conf.resolver
+    val missing = schema.fieldNames.filterNot(n => onDisk.exists(same(_, n)))
+    val extra = onDisk.filterNot(n => schema.fieldNames.exists(same(_, n)))
+    if (missing.nonEmpty || extra.nonEmpty)
+      throw new IllegalStateException(
+        s"golden snapshot $dir does not match the batch's columns: " +
+          s"missing [${missing.mkString(", ")}], " +
+          s"extra [${extra.mkString(", ")}]")
+    spark.read.schema(schema).parquet(dir)
   }
 
   /** Highest COMMITTED snapshot version strictly below `beforeBatchId` —

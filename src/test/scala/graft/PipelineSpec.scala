@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -172,6 +172,104 @@ class PipelineSpec extends AnyFunSuite {
     val d1 = incremental.exceptAll(full); val d2 = full.exceptAll(incremental)
     assert(d1.isEmpty && d2.isEmpty,
       s"incremental != full: ${d1.take(3).toSeq} ${d2.take(3).toSeq}")
+  }
+
+  /** The touched-groups formulation of the upsert: re-merge only the golden
+    * groups whose key the batch carries (left-semi on the broadcast touched
+    * keys) and pass every other golden row through (left-anti). The oracle
+    * for `upsertIncremental`'s one-aggregate formulation. */
+  private def touchedGroupsUpsert(existing: DataFrame, incoming: DataFrame,
+      rowIdCol: String, lastUpdatedCol: Option[String]): DataFrame = {
+    val keyCol = "dedup_key"
+    val exKeyed = GoldenRecord.withDedupKey(existing, keyCol)
+    val inKeyed = GoldenRecord.withDedupKey(incoming, keyCol)
+    val touchedKeys = inKeyed.select(col(keyCol)).distinct()
+    val touched = exKeyed.join(broadcast(touchedKeys), Seq(keyCol), "left_semi")
+    val untouched = exKeyed.join(broadcast(touchedKeys), Seq(keyCol), "left_anti")
+    val merged = GoldenRecord.dedupe(touched.unionByName(inKeyed), rowIdCol,
+      lastUpdatedCol, keyCol)
+    untouched.drop(keyCol).unionByName(merged)
+  }
+
+  /** Contact rows over a small identity pool, so keys collide: email
+    * case/space variants, blank, whitespace-only and sentinel emails,
+    * fallback-key rows (name plus mobile, some mobiles longer than 10
+    * digits) and identity-less rows (key "-"). */
+  private def contactRows(rnd: scala.util.Random, ids: Range): DataFrame = {
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    val missing = Seq(null, "", "   ", "N/A", "NULL", " N/A ")
+    ids.map { i =>
+      val k = rnd.nextInt(40)
+      val email = rnd.nextInt(10) match {
+        case 0 | 1 | 2 | 3 => pick(missing)
+        case 4 => "\t"
+        case _ => pick(Seq(s"p$k@x.com", s"P$k@X.com", s" p$k@x.com ",
+          s"p$k@x.COM  "))
+      }
+      val name = rnd.nextInt(6) match {
+        case 0 => pick(missing)
+        case _ => pick(Seq(s"Name $k", s"name  $k", s" NAME $k "))
+      }
+      val mobile = rnd.nextInt(6) match {
+        case 0 => pick(missing)
+        case _ => pick(Seq(f"555${k % 8}%07d", f"+1 (555) ${k % 8}%07d",
+          f"0044555${k % 8}%07d"))
+      }
+      val lu = pick(Seq(null, "garbage", "2020-01-01 00:00:00",
+        "2021-06-01 12:00:00"))
+      val note = if (rnd.nextInt(4) == 0) pick(missing)
+        else rnd.alphanumeric.take(1 + rnd.nextInt(6)).mkString
+      (i.toLong, email, name, mobile, lu, note)
+    }.toDF("row_id", "EMAIL", "FULLNAME", "MOBILE", "LAST_UPDATED", "NOTE")
+  }
+
+  test("upsertIncremental == touched-groups oracle; untouched rows unchanged") {
+    def sorted(df: DataFrame) = df.collect().toSeq.sortBy(_.getLong(0))
+    for (seed <- Seq(3, 5, 8); parts <- Seq(1, 7)) {
+      val rnd = new scala.util.Random(seed)
+      val golden = GoldenRecord.dedupe(contactRows(rnd, 1 to 400), "row_id",
+        Some("LAST_UPDATED")).repartition(parts)
+      val incoming = contactRows(rnd, 1000 to 1060)
+      val got = GoldenRecord.upsertIncremental(golden, incoming, "row_id",
+        Some("LAST_UPDATED"))
+      val want = touchedGroupsUpsert(golden, incoming, "row_id",
+        Some("LAST_UPDATED"))
+      val d1 = got.exceptAll(want); val d2 = want.exceptAll(got)
+      assert(d1.isEmpty && d2.isEmpty, s"seed $seed, $parts partitions: " +
+        s"${d1.take(3).toSeq} ${d2.take(3).toSeq}")
+
+      val keyed = GoldenRecord.withDedupKey(golden)
+      val inKeys = GoldenRecord.withDedupKey(incoming).select("dedup_key")
+      val untouched = keyed.join(inKeys, Seq("dedup_key"), "left_anti")
+        .drop("dedup_key")
+      val keys = keyed.select("dedup_key").as[String].collect().toSet
+      assert(keys.contains("-") && keys.exists(_.startsWith("name ")) &&
+        untouched.count() > 0 && untouched.count() < golden.count(),
+        s"seed $seed: identity-less, fallback, touched and untouched groups")
+      val back = GoldenRecord.withDedupKey(got)
+        .join(inKeys, Seq("dedup_key"), "left_anti").drop("dedup_key")
+      assert(sorted(back) == sorted(untouched),
+        s"seed $seed, $parts partitions: an untouched golden row changed")
+    }
+  }
+
+  test("upsertIncremental over a parquet snapshot plans one shuffle, no broadcast") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+      ShuffleExchangeLike}
+    val rnd = new scala.util.Random(11)
+    val dir = Files.createTempDirectory("upsert-plan").resolve("v=0").toString
+    GoldenRecord.dedupe(contactRows(rnd, 1 to 200), "row_id")
+      .write.parquet(dir)
+    val out = GoldenRecord.upsertIncremental(spark.read.parquet(dir),
+      contactRows(rnd, 1000 to 1030), "row_id")
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val shuffles = helper.collect(plan) { case s: ShuffleExchangeLike => s }
+    val broadcasts = helper.collect(plan) { case b: BroadcastExchangeLike => b }
+    assert(shuffles.size == 1 && broadcasts.isEmpty,
+      s"${shuffles.size} shuffles, ${broadcasts.size} broadcasts:\n$plan")
   }
 
   // ------------------------------------------------------------------ Fill

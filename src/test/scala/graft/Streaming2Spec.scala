@@ -324,6 +324,74 @@ class Streaming2Spec extends AnyFunSuite {
       "post-compaction restart diverged from the one-shot batch dedupe")
   }
 
+  test("golden upsert raises, naming the column, on a snapshot that lacks one") {
+    import java.nio.file.Files
+    import graft.streaming.ContactsStream
+    val in = Files.createTempDirectory("guard-in")
+    val golden = Files.createTempDirectory("guard-out").toString + "/golden"
+    val ckpt = Files.createTempDirectory("guard-ckpt").toString
+    val header = "ROW_ID\tFULLNAME\tEMAIL\tMOBILE\n"
+    Files.writeString(in.resolve("day0.tsv"),
+      header + "1\tann x\tann@x.com\t5551112222\n")
+    val schema = ContactsStream.schemaOf(spark, in.resolve("day0.tsv").toString)
+    ContactsStream.goldenUpsertStream(spark, in.toString, schema, golden,
+      ckpt, "ROW_ID")
+    // replace the committed v=0 by a committed snapshot without MOBILE
+    val v0 = new java.io.File(golden, "v=0")
+    val stripped = Files.createTempDirectory("guard-v0").resolve("v0").toFile
+    spark.read.parquet(v0.toString).drop("MOBILE").write.parquet(stripped.toString)
+    org.apache.commons.io.FileUtils.deleteDirectory(v0)
+    assert(stripped.renameTo(v0))
+    Files.writeString(v0.toPath.resolve(ContactsStream.CommitMarker), "")
+
+    Files.writeString(in.resolve("day1.tsv"),
+      header + "2\tbob y\tbob@x.com\t5553334444\n")
+    val e = intercept[Exception] {
+      ContactsStream.goldenUpsertStream(spark, in.toString, schema, golden,
+        ckpt, "ROW_ID")
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(messages.contains("MOBILE"), messages)
+    assert(!new java.io.File(golden, "v=1").exists(),
+      "the drain wrote a snapshot over a mismatched predecessor")
+  }
+
+  test("a golden upsert micro-batch over an existing snapshot runs 2 Spark jobs") {
+    import java.nio.file.Files
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.streaming.ContactsStream
+    val in = Files.createTempDirectory("jobs-in")
+    val golden = Files.createTempDirectory("jobs-out").toString + "/golden"
+    val ckpt = Files.createTempDirectory("jobs-ckpt").toString
+    val header = "ROW_ID\tFULLNAME\tEMAIL\tMOBILE\n"
+    Files.writeString(in.resolve("day0.tsv"), header +
+      "1\tann x\tann@x.com\t\n2\tbob y\tbob@x.com\t5551112222\n")
+    val schema = ContactsStream.schemaOf(spark, in.resolve("day0.tsv").toString)
+    ContactsStream.goldenUpsertStream(spark, in.toString, schema, golden,
+      ckpt, "ROW_ID")
+
+    Files.writeString(in.resolve("day1.tsv"), header +
+      "3\tann x\tann@x.com\t5559998888\n4\tcid z\t\t5550001111\n")
+    // a stream runs its micro-batches under its run id as the job group
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = ContactsStream.goldenUpsertStream(spark, in.toString, schema,
+        golden, ckpt, "ROW_ID")
+      org.apache.spark.graft.Listeners.drain(spark.sparkContext)
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+    val jobs = groups.toArray.count(_ == q.runId.toString)
+    assert(jobs == 2, s"one drain launched $jobs jobs; want the merge's " +
+      "map stage and its result/write stage")
+  }
+
   test("latestVersionBefore raises on marker-less snapshots; None only when empty") {
     import java.nio.file.Files
     import graft.streaming.ContactsStream
