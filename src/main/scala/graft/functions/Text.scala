@@ -229,13 +229,6 @@ object Text {
     when(len > 0, nPunct.cast("double") / len.cast("double")).otherwise(lit(0.0))
   }
 
-  /** Ratio of ASCII letters to total chars (0 for empty text). */
-  def alphaRatio(c: Column): Column = {
-    val len = length(c)
-    val nAlpha = len - length(regexp_replace(c, "[A-Za-z]", ""))
-    when(len > 0, nAlpha.cast("double") / len.cast("double")).otherwise(lit(0.0))
-  }
-
   /** English stopwords used for quality / language scoring. */
   val StopwordsEn: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "are", "was", "it",
@@ -253,16 +246,12 @@ object Text {
       .otherwise(lit(0.0))
   }
 
-  def stopwordRatio(c: Column): Column = stopwordRatioOf(tokens(c))
-
   /** Mean token length (0 for empty text), token-array form. */
   def meanWordLenOf(t: Column): Column =
     when(size(t) > 0,
       aggregate(t, lit(0L), (acc, x) => acc + length(x)).cast("double")
         / size(t).cast("double"))
       .otherwise(lit(0.0))
-
-  def meanWordLen(c: Column): Column = meanWordLenOf(tokens(c))
 
   /** Heuristic document quality score in [0, 1]: length band + sane mean word
     * length + some-but-not-too-many stopwords + low punctuation density.
@@ -303,8 +292,6 @@ object Text {
   def langId(c: Column): Column = langIdStruct(c).getField("lang")
 
   def langIdStruct(c: Column): Column = langIdStructOf(tokens(c))
-
-  def langIdOf(t: Column): Column = langIdStructOf(t).getField("lang")
 
   def langIdStructOf(t: Column): Column = {
     val scores = LangMarkers.map { case (lang, words) =>

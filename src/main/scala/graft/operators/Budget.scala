@@ -157,7 +157,6 @@ object Budget {
     def locN(o: String) = s"__loc_$o"
     def totN(o: String) = s"__tot_$o"
     def offN(o: String) = s"__off_$o"
-    def candN(o: String) = s"__cand_$o"
     val sorted = df.repartitionByRange(key: _*)
       .sortWithinPartitions(key: _*)
       .withColumn(PidCol, spark_partition_id().cast("long"))

@@ -46,12 +46,6 @@ object Multimodal {
   case class DecodedRow(id: Long, meta: MediaMeta, nBytes: Long)
   case class FeatureRow(id: Long, features: Array[Float])
 
-  /** Attach a binary content column derived from a string column (the
-    * testdata stand-in for reading real media bytes; a production source
-    * would be [[readBinaryDir]]). */
-  def withBlob(df: DataFrame, textCol: String, blobCol: String = "content"): DataFrame =
-    df.withColumn(blobCol, encode(col(textCol), "UTF-8"))
-
   /** The real media source: Spark's binaryFile format — one row per file
     * with (path, modificationTime, length, content). `pathGlobFilter`
     * selects the media type; partition parallelism comes from the file

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Cross-source quantile normalization (the microarray-era technique,
@@ -20,23 +21,36 @@ import org.apache.spark.sql.functions._
   * integer boundary depending on the engine); rank() gives tied
   * scores the same rank and therefore the same normalized value.
   *
-  * Scale posture: NO per-source window either — sources are few and
-  * huge, so `rank().over(Window.partitionBy(source))` would push each
-  * source through ONE task; instead the per-source rank of a row is
-  * its source's strictly-smaller count + 1, read off the per-source
-  * distinct-value ladder built with [[Budget.groupedCumulativeSum]]
-  * (a GLOBAL parallel prefix over (source, score) minus broadcast
-  * per-source offsets) and joined back on (source, score). The pooled
-  * distinct-value ladder's cumulative counts come from
-  * [[Budget.cumulativeSum]]'s two-phase distributed prefix sum (the
-  * ladder is distinct-value-sized — corpus-sized for a continuous
-  * score — so NO unpartitioned window and NO broadcast of it is
-  * allowed), and the idx→value lookup is a bucketed equi-join: probe
-  * rows key on idx div B, ladder spans replicate onto the ≤ span/B+1
-  * buckets they cover, and the exact (cum_lo, cum_hi] containment
-  * filters after the bucket match. Nothing corpus-derived is
-  * broadcast, windowed globally or per-group, or collected. */
+  * Plan: the per-source rank and the pooled ladder are both prefix
+  * counts in ONE order (the score), so one range partitioning serves
+  * both. The rows are range-partitioned on the score (every score's
+  * peers, from every source, land in one partition), stamped with
+  * their partition id, hash-partitioned on that id (so every later
+  * window keyed by the id shares one exchange) and pinned: the layout
+  * is sampled and feeds two consumers, the metadata branch and the
+  * data branch (the [[Budget.cumulativeSum]] determinism contract).
+  *   - Metadata: counts per (partition, source) — #partitions ×
+  *     #sources rows — give, through windows over that frame alone,
+  *     each segment's exclusive per-source offset and n_h, and each
+  *     partition's exclusive pooled offset and N. Broadcast back.
+  *   - Data: windows keyed by the partition id (bounded by partition
+  *     size, never by source size): r = source offset + rank() within
+  *     (partition, source); the pooled ladder span of a row's score is
+  *     (cum_hi − c, cum_hi] with cum_hi = pooled offset + the
+  *     partition-local count up to and including its peers and c the
+  *     count of its peers. One row per distinct score carries its span.
+  * The idx→value lookup is a bucketed equi-join: probe rows key on
+  * idx div B, ladder spans replicate onto the ≤ span/B+1 buckets they
+  * cover, and the exact (cum_lo, cum_hi] containment filters after the
+  * bucket match. Nothing corpus-derived is broadcast, windowed
+  * globally or per-source, or collected.
+  *
+  * Nulls: a null score sorts first and counts in n_h, N and every
+  * rank; a row with a null score or a null source is counted but not
+  * emitted. */
 object Normalize {
+
+  private val PidCol = graft.pipeline.RowIds.PidCol
 
   /** Bucket width for the idx→ladder-span equi-join: spans replicate
     * once per B-wide bucket they cover, so build-side inflation is
@@ -48,44 +62,52 @@ object Normalize {
     * median index (N+1)/2. */
   def quantileNormalize(df: DataFrame, groupCol: String,
       scoreCol: String, idCol: String): DataFrame = {
+    val score = col("score")
     val s = df.select(col(idCol), col(groupCol),
       col(scoreCol).cast("long").as("score"))
-    // per-source rank without a per-source window: rank() of a row ==
-    // (count of strictly smaller scores in its source) + 1, which is the
-    // source-local cum_lo of its distinct-value ladder entry
-    val perGroupVal = s.groupBy(col(groupCol), col("score").as("pv"))
-      .agg(count(lit(1)).as("gc"))
-    val gLadder = Budget.groupedCumulativeSum(perGroupVal, groupCol,
-        Seq(col("pv")), col("gc"), "g_hi")
-      .select(col(groupCol), col("pv").as("score"),
-        (col("g_hi") - col("gc") + 1).as("r"))
-    val nh = perGroupVal.groupBy(col(groupCol))
-      .agg(sum(col("gc")).as("n_h"))
-    val ranked = s
-      .join(gLadder, Seq(groupCol, "score"))
-      .join(broadcast(nh), Seq(groupCol))
-    val nPool = s.agg(count(lit(1)).as("n_pool"))
-    // pooled distinct-value ladder; cumulative counts via the two-phase
-    // distributed prefix sum (ladder may be corpus-sized)
-    val ladder = Budget.cumulativeSum(
-        s.groupBy(col("score").as("pv")).agg(count(lit(1)).as("c")),
-        Seq(col("pv")), col("c"), "cum_hi")
-      .withColumn("cum_lo", col("cum_hi") - col("c"))
-      .select(col("pv"), col("cum_lo"), col("cum_hi"))
-    val ix = ranked.crossJoin(broadcast(nPool))
+    val sorted = graft.pipeline.Pins.pin(s.repartitionByRange(score)
+      .withColumn(PidCol, spark_partition_id().cast("long"))
+      .repartition(col(PidCol))
+      .sortWithinPartitions(col(PidCol), score, col(groupCol)))
+    // one row per (partition, source) — metadata-sized
+    val seg = sorted.groupBy(col(PidCol), col(groupCol))
+      .agg(count(lit(1)).as("__n"))
+    val byGroup = Window.partitionBy(col(groupCol))
+    val pooledBefore = Window.orderBy(col(PidCol))
+      .rangeBetween(Window.unboundedPreceding, -1)
+    val offs = seg.select(col(PidCol).as("__opid"), col(groupCol).as("__og"),
+      coalesce(sum(col("__n")).over(byGroup.orderBy(col(PidCol))
+        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__goff"),
+      sum(col("__n")).over(byGroup).as("n_h"),
+      coalesce(sum(col("__n")).over(pooledBefore), lit(0L)).as("__poff"),
+      sum(col("__n")).over().as("n_pool"))
+    val inSeg = Window.partitionBy(col(PidCol), col(groupCol)).orderBy(score)
+    val inPart = Window.partitionBy(col(PidCol)).orderBy(score)
+    val peers = Window.partitionBy(col(PidCol), score)
+    val ranked = sorted
+      .join(broadcast(offs), col(PidCol) === col("__opid")
+        && col(groupCol) <=> col("__og"))
+      .withColumn("r", col("__goff") + rank().over(inSeg))
+      .withColumn("cum_hi", col("__poff") + count(lit(1)).over(inPart))
+      .withColumn("cum_lo", col("cum_hi") - count(lit(1)).over(peers))
+    val ix = ranked.filter(score.isNotNull && col(groupCol).isNotNull)
       .withColumn("idx",
         when(col("n_h") === 1, expr("(n_pool + 1) div 2"))
           .otherwise(
             expr("(r - 1) * (n_pool - 1) div (n_h - 1)") + 1))
-      .withColumn("__pb", expr(s"(idx - 1) div $BucketWidth"))
-    // span (cum_lo, cum_hi] covers idx-1 in [cum_lo, cum_hi-1] — one
-    // replica per covered bucket
-    val spans = ladder.withColumn("__lb",
-      explode(sequence(expr(s"cum_lo div $BucketWidth"),
-        expr(s"(cum_hi - 1) div $BucketWidth"))))
+      .select(col(idCol), col(groupCol), score, col("idx"),
+        expr(s"(idx - 1) div $BucketWidth").as("__pb"))
+    // one span per distinct score: (cum_lo, cum_hi] covers idx-1 in
+    // [cum_lo, cum_hi-1] — one replica per covered bucket
+    val spans = ranked
+      .withColumn("__rn", row_number().over(peers.orderBy(score)))
+      .filter(col("__rn") === 1)
+      .select(score.as("pv"), col("cum_lo"), col("cum_hi"),
+        explode(sequence(expr(s"cum_lo div $BucketWidth"),
+          expr(s"(cum_hi - 1) div $BucketWidth"))).as("__lb"))
     ix.join(spans, col("__pb") === col("__lb")
         && col("idx") > col("cum_lo") && col("idx") <= col("cum_hi"))
-      .select(col(idCol), col(groupCol), col("score"),
+      .select(col(idCol), col(groupCol), score,
         col("pv").as("norm_score"))
   }
 }

@@ -52,7 +52,9 @@ object Pipeline {
       else RowIds.denseByOrder(master, "row_id",
         orderCols.map(n => col(s"`$n`")))
 
-    val fillRes = Fill.fillFromSources(withId, sources)
+    // lazy: the fill's eager per-source checkpoints run inside the fill
+    // stage's clock, forced by its first read below
+    lazy val fillRes = Fill.fillFromSources(withId, sources)
     val filled = timed("fill", stages)(fillRes.filled)
 
     val cleaned = timed("clean", stages)(Clean(filled))

@@ -1724,10 +1724,12 @@ private[queries] object QueriesRelational {
     // src9's scorer must disappear after rank-mapping onto the pooled
     // distribution (equal ranks → equal normalized values across
     // sources). Target index in INTEGER arithmetic (multiply-then-div,
-    // no float at an integer boundary); pooled ladder over DISTINCT
-    // score values, prefix-summed distributed and looked up through a
-    // bucketed equi-join (round-9 rewrite; nothing corpus-derived is
-    // broadcast or windowed globally).
+    // no float at an integer boundary). Per-source ranks and the pooled
+    // ladder over DISTINCT score values come from ONE range partitioning
+    // on the score (partition-id-keyed windows plus broadcast
+    // per-(partition, source) offsets); the ladder is looked up through
+    // a bucketed equi-join. Nothing corpus-derived is broadcast or
+    // windowed globally or per source.
     QueryDef("q167_quantile_norm",
       (s, dir) => {
         val d = t(s, dir, "documents").select(col("doc_id"),

@@ -243,8 +243,8 @@ private[queries] object QueriesText {
     // would run each domain's corpus slice in ONE task; the per-domain
     // prefix rides Budget.groupedCumulativeSum instead (two-phase
     // distributed prefix over the composite (lang, n_chars desc, doc_id)
-    // sort — the q167/q180 plan), value-identical in exact long
-    // arithmetic.
+    // sort — the plan of Sessionize's KS ladder, q180), value-identical
+    // in exact long arithmetic.
     QueryDef("q60_domain_mix",
       (s, dir) => {
         val d = t(s, dir, "documents")

@@ -75,6 +75,61 @@ class EvalOpsSpec extends AnyFunSuite {
     assert(out == Seq(1L, 3L, 11L, 14L, 1L, 3L, 11L, 14L))
   }
 
+  test("quantile normalization matches the naive per-source window oracle") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    // the textbook plan: rank() and count() per source, the pooled ladder
+    // as plain windows over the distinct-value counts (nulls first)
+    def oracle(df: DataFrame): DataFrame = {
+      val s = df.select(col("id"), col("src"), col("sc").cast("long").as("score"))
+      val bySrc = Window.partitionBy(col("src"))
+      val nPool = s.count()
+      val cm = s.groupBy(col("score").as("pv")).agg(count(lit(1)).as("c"))
+        .withColumn("cum_hi", sum(col("c")).over(Window.orderBy(col("pv"))
+          .rowsBetween(Window.unboundedPreceding, 0)))
+        .withColumn("cum_lo", col("cum_hi") - col("c"))
+      s.withColumn("r", rank().over(bySrc.orderBy(col("score"))))
+        .withColumn("n_h", count(lit(1)).over(bySrc))
+        .filter(col("score").isNotNull && col("src").isNotNull)
+        .withColumn("idx", when(col("n_h") === 1, lit((nPool + 1) / 2))
+          .otherwise(expr(s"(r - 1) * ($nPool - 1) div (n_h - 1)") + 1))
+        .join(cm, col("idx") > col("cum_lo") && col("idx") <= col("cum_hi"))
+        .select(col("id"), col("src"), col("score"), col("pv").as("norm_score"))
+    }
+    // (seed, sources, rows, score range, null-score share, partitions)
+    val frames = Seq((1, 2, 60, 8, 0.0, 1), (2, 6, 200, 15, 0.1, 5),
+      (3, 2, 90, 40, 0.2, 5), (4, 6, 150, 5, 0.0, 1),
+      (5, 3, 120, 1000, 0.05, 3), (6, 6, 80, 12, 0.15, 1))
+    for ((seed, nSrc, n, range, nullShare, parts) <- frames) {
+      val rnd = new scala.util.Random(seed)
+      val rows = (1 to n).map { i =>
+        val src = s"s${rnd.nextInt(nSrc)}"
+        // per-source shift, so sources differ as q167's do
+        val sc = if (rnd.nextDouble() < nullShare) None
+          else Some((rnd.nextInt(range) + 3 * src.drop(1).toInt).toLong)
+        (i.toLong, src, sc)
+      } :+ ((n + 1).toLong, "solo", Some(rnd.nextInt(range).toLong))
+      val df = rows.toDF("id", "src", "sc").repartition(parts)
+      val got = Normalize.quantileNormalize(df, "src", "sc", "id")
+      val want = oracle(df)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"seed $seed: operator and oracle disagree")
+      val nonNull = rows.count(_._3.nonEmpty)
+      assert(got.count() == nonNull, s"seed $seed: null-score rows emitted")
+      // the singleton group is emitted; the oracle compare above checks
+      // its pooled-median value
+      assert(got.filter(col("src") === "solo").count() == 1)
+      if (nonNull < rows.size) {
+        // null scores are counted: dropping them moves the result
+        val dropped = Normalize.quantileNormalize(
+          df.filter(col("sc").isNotNull), "src", "sc", "id")
+        assert(!(got.exceptAll(dropped).isEmpty
+          && dropped.exceptAll(got).isEmpty),
+          s"seed $seed: null-score rows were not counted")
+      }
+    }
+  }
+
   test("neyman allocation chases variance; proportional chases mass") {
     val x = Seq.fill(100)(("x", 5.0))
     val y = (0 until 10).map(i => ("y", if (i % 2 == 0) 0.0 else 100.0))

@@ -184,6 +184,57 @@ class PlanGuardSpec extends AnyFunSuite {
       "q167 plans a cartesian product")
   }
 
+  test("q167: one range partitioning on the score and at most 20 Spark jobs") {
+    assume(new java.io.File(SfDir).isDirectory)
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = Queries.all.find(_.name == "q167_quantile_norm").get
+      .spark(spark, SfDir)
+    // the range exchanges of the initial (pre-AQE) physical plan, each
+    // pinned subtree walked once however many scans read it
+    val seen = scala.collection.mutable.Set.empty[AnyRef]
+    def ranges(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => ranges(a.executedPlan)
+      case s: QueryStageExec => ranges(s.plan)
+      case m: InMemoryTableScanExec =>
+        if (seen.add(m.relation.cacheBuilder)) ranges(m.relation.cachedPlan)
+        else Nil
+      case e: ShuffleExchangeExec => (e.outputPartitioning match {
+        case r: RangePartitioning =>
+          r.ordering.flatMap(_.references.map(_.name)).mkString(",")
+        case _ => ""
+      }) +: e.children.flatMap(ranges)
+      case other => (other.children ++ other.subqueries).flatMap(ranges)
+    }
+    val keys = ranges(df.queryExecution.executedPlan).filter(_.nonEmpty)
+    assert(keys.sorted == Seq("doc_id", "score"),
+      s"q167 wants one range partitioning on the score beside the final " +
+        s"doc_id sort; its plan range-partitions on: ${keys.mkString("; ")}")
+    val sc = spark.sparkContext
+    val group = "q167-jobs"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "q167 job count", interruptOnCancel = false)
+      try df.write.format("noop").mode("overwrite").save()
+      finally sc.clearJobGroup()
+      org.apache.spark.graft.Listeners.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get > 0 && jobs.get <= 20,
+      s"q167 ran ${jobs.get} Spark jobs; want at most 20")
+  }
+
   test("no cartesian or nested-loop joins outside the documented verifiers") {
     assume(new java.io.File(SfDir).isDirectory)
     val guarded = Seq("q1_pricing_summary", "q2_revenue_filter",
