@@ -48,12 +48,6 @@ object DocFingerprint {
   private val P31 = 2147483647L
   private val Ws = java.util.regex.Pattern.compile("\\s+")
 
-  // one digest per thread, reset by digest(): getInstance is a synchronized
-  // JCA provider lookup + allocation, far too heavy to pay per TOKEN on the
-  // hot path this expression exists to speed up
-  private val Md5 = ThreadLocal.withInitial[java.security.MessageDigest](() =>
-    java.security.MessageDigest.getInstance("MD5"))
-
   /** First 15 hex chars of md5(bytes) read base-16 (60 bits, always
     * non-negative), mod 2^31-1 — the same value as
     * `conv(substring(md5(s), 1, 15), 16, 10) % (2^31-1)`. */

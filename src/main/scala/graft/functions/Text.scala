@@ -89,26 +89,12 @@ object Text {
     * per-row expression both engines state identically — documented
     * divergence, not an accident). Text shorter than `w` is one chunk;
     * chunks always concatenate back to the input. Returns array<string>,
-    * empty for empty/null-length input. Fully row-local: zero shuffle. */
-  def cdcChunks(c: Column, w: Int = 8): Column = {
-    val boundaryEnds = when(length(c) >= w,
-      filter(sequence(lit(w), length(c)),
-        e => substring(md5(c.substr(e - (w - 1), lit(w))), 1, 1) === "0"))
-      .otherwise(array().cast("array<int>"))
-    val ends = array_sort(array_distinct(
-      concat(boundaryEnds, array(length(c)))))
-    // chunk spans via zip_with over (starts, ends) — the input arrays
-    // evaluate ONCE per row. The element_at(ends, j) formulation this
-    // replaces re-evaluated the whole `ends` expression (an md5 per
-    // character position) inside every lambda invocation: O(chunks ×
-    // len) interpreted md5s per row, measured 335 s for q140 at sf0.1
-    // vs ~1 s for this shape.
-    val starts = concat(array(lit(0)),
-      slice(ends, lit(1), greatest(size(ends) - 1, lit(0))))
-    val chunks = zip_with(starts, ends,
-      (s0, e0) => c.substr(s0 + 1, e0 - s0))
-    filter(chunks, ch => length(ch) > 0)
-  }
+    * empty for empty or null input. Backed by the native
+    * [[graft.expressions.CdcChunks]] kernel: one loop per row hashes each
+    * window's bytes, where a composed form interprets a lambda per
+    * character. Fully row-local: zero shuffle. */
+  def cdcChunks(c: Column, w: Int = 8): Column =
+    graft.expressions.CdcChunks.column(c, w)
 
   // ---------------------------------------------------------------- hashing
 

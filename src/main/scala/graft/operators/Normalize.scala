@@ -32,7 +32,8 @@ import org.apache.spark.sql.functions._
   *   - Metadata: counts per (partition, source) — #partitions ×
   *     #sources rows — give, through windows over that frame alone,
   *     each segment's exclusive per-source offset and n_h, and each
-  *     partition's exclusive pooled offset and N. Broadcast back.
+  *     partition's exclusive pooled offset and N. Pinned (both the
+  *     probe and the span side read it) and broadcast back.
   *   - Data: windows keyed by the partition id (bounded by partition
   *     size, never by source size): r = source offset + rank() within
   *     (partition, source); the pooled ladder span of a row's score is
@@ -75,12 +76,16 @@ object Normalize {
     val byGroup = Window.partitionBy(col(groupCol))
     val pooledBefore = Window.orderBy(col(PidCol))
       .rangeBetween(Window.unboundedPreceding, -1)
-    val offs = seg.select(col(PidCol).as("__opid"), col(groupCol).as("__og"),
+    // pinned: the probe side (__goff, n_h, n_pool) and the span side
+    // (__poff) prune it differently, and unpinned each would run its own
+    // single-partition window pass over the segment counts
+    val offs = graft.pipeline.Pins.pin(seg.select(
+      col(PidCol).as("__opid"), col(groupCol).as("__og"),
       coalesce(sum(col("__n")).over(byGroup.orderBy(col(PidCol))
         .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__goff"),
       sum(col("__n")).over(byGroup).as("n_h"),
       coalesce(sum(col("__n")).over(pooledBefore), lit(0L)).as("__poff"),
-      sum(col("__n")).over().as("n_pool"))
+      sum(col("__n")).over().as("n_pool")))
     val inSeg = Window.partitionBy(col(PidCol), col(groupCol)).orderBy(score)
     val inPart = Window.partitionBy(col(PidCol)).orderBy(score)
     val peers = Window.partitionBy(col(PidCol), score)

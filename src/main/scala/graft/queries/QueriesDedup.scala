@@ -834,30 +834,36 @@ private[queries] object QueriesDedup {
     // boundaries are content-local (md5 of an 8-char window), so shifted /
     // partially-edited duplicate passages still align — the dedup signal
     // fixed-grid chunking (and whole-doc hashing, q18) cannot see.
-    // Chunking is a pure per-row expression (zero shuffle); the corpus
-    // side is one chunk-hash aggregate + one hash-keyed join back.
+    // Chunking is one native per-row kernel (zero shuffle) run once: the
+    // chunk instances collapse to one row per (doc, chunk) with its count,
+    // a window over the chunk hash gives its document frequency, and one
+    // doc-keyed aggregate folds the counts.
     QueryDef("q140_cdc_chunk_dedup",
       (s, dir) => {
-        // chunking is row-local but md5-per-position CPU-heavy; spread
-        // the compact single-row-group local scan across cores first
-        // (a lake-scale scan arrives already split — this shuffle moves
-        // ~raw-text bytes and buys 32x on the chunking stage). Explicit
-        // numPartitions: AQE would coalesce a small-byte shuffle back
-        // to one partition, re-serializing the CPU-bound stage.
+        // chunking is row-local and hashes every 8-char window, the
+        // query's CPU cost; spread the compact single-row-group local
+        // scan across cores first (a lake-scale scan arrives already
+        // split — this shuffle moves ~raw-text bytes so every core
+        // chunks). Explicit numPartitions: AQE would coalesce a
+        // small-byte shuffle back to one partition, re-serializing the
+        // CPU-bound stage.
         val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
           .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+        // one row per (doc, distinct chunk); `d` is hash-partitioned on
+        // doc_id, so this aggregate adds no shuffle
         val inst = d.select(col("doc_id"),
             explode(Text.cdcChunks(col("text"), 8)).as("chunk"))
-          .select(col("doc_id"), md5(col("chunk")).as("h"),
+          .groupBy(col("doc_id"), md5(col("chunk")).as("h"),
             length(col("chunk")).as("clen"))
-        val dfreq = inst.select(col("h"), col("doc_id")).distinct()
-          .groupBy(col("h")).agg(count(lit(1)).as("df"))
-        inst.join(dfreq, Seq("h"))
+          .agg(count(lit(1)).as("n"))
+        val shared = count(lit(1)).over(Window.partitionBy(col("h"))) >= 2
+        val chars = col("n") * col("clen")
+        inst.withColumn("shared", shared)
           .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_chunks"),
-            sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_shared"),
-            round(sum(when(col("df") >= 2, col("clen")).otherwise(0))
-              .cast("double") / sum(col("clen")), 6)
+          .agg(sum(col("n")).as("n_chunks"),
+            sum(when(col("shared"), col("n")).otherwise(0L)).as("n_shared"),
+            round(sum(when(col("shared"), chars).otherwise(0L))
+              .cast("double") / sum(chars), 6)
               .as("shared_char_frac"))
           .orderBy(col("doc_id"))
       },

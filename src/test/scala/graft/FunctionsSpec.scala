@@ -244,6 +244,70 @@ class FunctionsSpec extends AnyFunSuite {
         s"diverged: native=${r.get(0)} hof=${r.get(1)}")
   }
 
+  /** The higher-order-function formulation of [[Text.cdcChunks]] that the
+    * native [[graft.expressions.CdcChunks]] kernel replaced: the executable
+    * spec it is tested against. zip_with evaluates the `ends` array once
+    * per row (an element_at(ends, j) lambda re-evaluated it, md5 per
+    * position, inside every invocation). */
+  private def cdcChunksHof(c: org.apache.spark.sql.Column,
+      w: Int): org.apache.spark.sql.Column = {
+    val boundaryEnds = when(length(c) >= w,
+      filter(sequence(lit(w), length(c)),
+        e => substring(md5(c.substr(e - (w - 1), lit(w))), 1, 1) === "0"))
+      .otherwise(array().cast("array<int>"))
+    val ends = array_sort(array_distinct(
+      concat(boundaryEnds, array(length(c)))))
+    val starts = concat(array(lit(0)),
+      slice(ends, lit(1), greatest(size(ends) - 1, lit(0))))
+    val chunks = zip_with(starts, ends,
+      (s0, e0) => c.substr(s0 + 1, e0 - s0))
+    filter(chunks, ch => length(ch) > 0)
+  }
+
+  test("native CdcChunks == HOF chunking (interpreted and codegen-only)") {
+    val w = 8
+    val rnd = new scala.util.Random(23)
+    // 1-, 2-, 3- and 4-byte code points (the emoji is a surrogate pair in
+    // UTF-16), NBSP and tabs
+    val alphabet = Seq("a", "b", "Q", " ", "\t", "\u00a0", "é", "早", "言",
+      "\ud83d\ude00", ".", "7")
+    val generated = (1 to 80).map { _ =>
+      Seq.fill(rnd.nextInt(120))(alphabet(rnd.nextInt(alphabet.size))).mkString
+    }
+    def cps(n: Int, from: Seq[String]) =
+      Seq.fill(n)(from(rnd.nextInt(from.size))).mkString
+    val lengths = for (n <- Seq(w - 1, w, w + 1);
+        from <- Seq(Seq("x", "y"), alphabet)) yield cps(n, from)
+    // a boundary on the last character: the final window's md5 starts '0'
+    def md5Hex(t: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val lastCut = Iterator.from(0).map(i => s"ends on a cut $i")
+      .find(t => md5Hex(t.takeRight(w)).startsWith("0")).get
+    val texts: Seq[String] = generated ++ lengths ++
+      Seq(null, "", lastCut, "\ud83d\ude00" * 20, "早口言葉" * 10, "\t\t\u00a0 é" * 9)
+    val ref = texts.toDF("t").select(cdcChunksHof(col("t"), w))
+      .collect().map(_.getSeq[String](0)).toSeq
+    // a scan of an RDD, not a local relation: the projection then runs in
+    // a physical plan, where the mode below picks interpreted or generated
+    val rows = spark.sparkContext.parallelize(texts.zipWithIndex, 3)
+      .map { case (t, i) => org.apache.spark.sql.Row(i, t) }
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("i INT, t STRING")
+    def native() = spark.createDataFrame(rows, schema)
+      .select(col("i"), Text.cdcChunks(col("t"), w)).collect()
+      .map(r => r.getInt(0) -> r.getSeq[String](1)).sortBy(_._1).map(_._2).toSeq
+    val modes = Seq(
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+      "codegen-only" -> Seq("spark.sql.codegen.fallback" -> "false",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
+    for ((mode, kv) <- modes) {
+      val got = SparkTestSession.withConf(kv: _*)(native())
+      assert(got.size == texts.size)
+      for (((t, g), r) <- texts.zip(got).zip(ref))
+        assert(g == r, s"$mode diverged on '$t': native=$g hof=$r")
+    }
+  }
+
   test("native BpeCount == HOF extract-then-fold (incl. null/digits/punct)") {
     val cases = Seq(null, "", "abc", "abcdefgh", "a1b2", "hello, world!!",
       "x".repeat(13), "...", "tab\tsep 42", "早口言葉 mixed ascii")

@@ -184,11 +184,14 @@ class PlanGuardSpec extends AnyFunSuite {
       "q167 plans a cartesian product")
   }
 
-  test("q167: one range partitioning on the score and at most 20 Spark jobs") {
-    assume(new java.io.File(SfDir).isDirectory)
+  /** q167 run once for the two tests below: the shuffle partitionings of
+    * its initial (pre-AQE) physical plan, and the Spark jobs one noop
+    * write of it starts. */
+  private lazy val q167Run: (Seq[org.apache.spark.sql.catalyst.plans
+      .physical.Partitioning], Int) = {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.catalyst.plans.physical.Partitioning
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
       QueryStageExec}
@@ -196,26 +199,20 @@ class PlanGuardSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val df = Queries.all.find(_.name == "q167_quantile_norm").get
       .spark(spark, SfDir)
-    // the range exchanges of the initial (pre-AQE) physical plan, each
+    // the shuffle exchanges of the initial (pre-AQE) physical plan, each
     // pinned subtree walked once however many scans read it
     val seen = scala.collection.mutable.Set.empty[AnyRef]
-    def ranges(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => ranges(a.executedPlan)
-      case s: QueryStageExec => ranges(s.plan)
+    def shuffles(p: SparkPlan): Seq[Partitioning] = p match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case s: QueryStageExec => shuffles(s.plan)
       case m: InMemoryTableScanExec =>
-        if (seen.add(m.relation.cacheBuilder)) ranges(m.relation.cachedPlan)
+        if (seen.add(m.relation.cacheBuilder)) shuffles(m.relation.cachedPlan)
         else Nil
-      case e: ShuffleExchangeExec => (e.outputPartitioning match {
-        case r: RangePartitioning =>
-          r.ordering.flatMap(_.references.map(_.name)).mkString(",")
-        case _ => ""
-      }) +: e.children.flatMap(ranges)
-      case other => (other.children ++ other.subqueries).flatMap(ranges)
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning +: e.children.flatMap(shuffles)
+      case other => (other.children ++ other.subqueries).flatMap(shuffles)
     }
-    val keys = ranges(df.queryExecution.executedPlan).filter(_.nonEmpty)
-    assert(keys.sorted == Seq("doc_id", "score"),
-      s"q167 wants one range partitioning on the score beside the final " +
-        s"doc_id sort; its plan range-partitions on: ${keys.mkString("; ")}")
+    val parts = shuffles(df.queryExecution.executedPlan)
     val sc = spark.sparkContext
     val group = "q167-jobs"
     val jobs = new AtomicInteger
@@ -231,8 +228,33 @@ class PlanGuardSpec extends AnyFunSuite {
       finally sc.clearJobGroup()
       org.apache.spark.graft.Listeners.drain(sc)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get > 0 && jobs.get <= 20,
-      s"q167 ran ${jobs.get} Spark jobs; want at most 20")
+    (parts, jobs.get)
+  }
+
+  test("q167: one range partitioning on the score and at most 20 Spark jobs") {
+    assume(new java.io.File(SfDir).isDirectory)
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    val (parts, jobs) = q167Run
+    val keys = parts.collect { case r: RangePartitioning =>
+      r.ordering.flatMap(_.references.map(_.name)).mkString(",") }
+    assert(keys.sorted == Seq("doc_id", "score"),
+      s"q167 wants one range partitioning on the score beside the final " +
+        s"doc_id sort; its plan range-partitions on: ${keys.mkString("; ")}")
+    assert(jobs > 0 && jobs <= 20,
+      s"q167 ran $jobs Spark jobs; want at most 20")
+  }
+
+  test("q167: one offsets pass and at most 16 Spark jobs") {
+    assume(new java.io.File(SfDir).isDirectory)
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    val (parts, jobs) = q167Run
+    // the probe and the span side share one pinned offsets frame: its
+    // single-partition window pass runs once, not once per side
+    assert(parts.count(_ == SinglePartition) == 1,
+      s"q167 wants one single-partition offsets pass; its plan shuffles " +
+        s"as: ${parts.mkString("; ")}")
+    assert(jobs > 0 && jobs <= 16,
+      s"q167 ran $jobs Spark jobs; want at most 16")
   }
 
   test("no cartesian or nested-loop joins outside the documented verifiers") {
@@ -408,14 +430,20 @@ class PlanGuardSpec extends AnyFunSuite {
 
   test("q140/q157/q159/q164/q166/q169: late-round-8 queries keep shape") {
     assume(new java.io.File(SfDir).isDirectory)
-    // q140 CDC chunking: one chunk explode, duplicated once in the
-    // plan text because the inst frame feeds both join sides (the HOF
-    // re-evaluation fix keeps boundary hashing inside the row
-    // expression), and the explicit spread-repartition must survive
+    // q140 CDC chunking: the chunk instances are built once (one
+    // explode of the native kernel, with no lambda left anywhere in the
+    // plan), and the explicit spread-repartition must survive
     val p140 = planOf("q140_cdc_chunk_dedup")
-    assert("Generate".r.findAllMatchIn(p140).size == 2,
-      s"q140 should carry its chunk explode twice (inst x 2 consumers):"
-        + s"\n$p140")
+    assert("Generate".r.findAllMatchIn(p140).size == 1,
+      s"q140 should explode its chunks exactly once:\n$p140")
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction,
+      LambdaFunction}
+    val lambdas = plans("q140_cdc_chunk_dedup")._1.flatMap(_.expressions
+      .flatMap(_.collect {
+        case e @ (_: HigherOrderFunction | _: LambdaFunction) => e
+      }))
+    assert(lambdas.isEmpty,
+      s"q140 plans higher-order functions: ${lambdas.mkString("; ")}")
     assert(p140.contains("REPARTITION_BY_NUM"),
       "q140 lost its explicit CPU-spread repartition")
     // q157 KS: since the r10 groupedRunning rewrite the ECDF prefix is

@@ -39,20 +39,9 @@ class PqCodegenSpec extends AnyFunSuite {
       .select(col("vec_id"), Vec.asDouble(col("embedding")).as("vec"))
   }
 
-  private def withCodegenOnly[T](body: => T): T = {
-    val conf = spark.conf
-    val prevFallback = conf.getOption("spark.sql.codegen.fallback")
-    val prevFactory = conf.getOption("spark.sql.codegen.factoryMode")
-    conf.set("spark.sql.codegen.fallback", "false")
-    conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    try body
-    finally {
-      prevFallback.fold(conf.unset("spark.sql.codegen.fallback"))(
-        conf.set("spark.sql.codegen.fallback", _))
-      prevFactory.fold(conf.unset("spark.sql.codegen.factoryMode"))(
-        conf.set("spark.sql.codegen.factoryMode", _))
-    }
-  }
+  private def withCodegenOnly[T](body: => T): T =
+    SparkTestSession.withConf("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(body)
 
   test("residual pqEncode at nlist=64 compiles (no interpreted fallback)") {
     val e = corpus

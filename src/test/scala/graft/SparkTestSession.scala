@@ -19,4 +19,14 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Run `body` with the given session confs set, then restore each one's
+    * previous value (or unset it). */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val prev = kv.map { case (k, _) => k -> conf.getOption(k) }
+    kv.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
 }
