@@ -10,15 +10,20 @@ import graft.functions.Cleaning
   * J2, fill_missing_contacts_large.py J3, merge_contacts_kindaworks.py:77-96
   * J1; SURVEY.md §2.4).
   *
-  * The reference builds three per-field hash indexes and probes them row by
-  * row; relationally that is a disjunctive multi-key equi-join, which we
-  * decompose BY CONSTRUCTION into a union of three equi-joins (a pure `OR`
-  * join condition would degrade to BroadcastNestedLoopJoin — SURVEY.md §4).
-  * Candidates are verified with the >=2-of-3 exact-match rule (F7), ranked by
-  * source row order (first-match-wins, J4 — made deterministic with an
-  * explicit window), and the winning candidate's fields are coalesced into
-  * the master's missing cells. Provenance is a *derived dataset*, not a
-  * side-effecting append: every filled cell yields a ChangeLogEntry (X6).
+  * The reference builds three per-field hash indexes (name, email, phone)
+  * and probes them row by row, keeping a candidate that matches exactly on
+  * >=2 of the 3 keys (F7). Under that rule every verified candidate matches
+  * on name or email: with neither, only phone can match, which is 1 of 3.
+  * So phone is a verification key but never a join key, and the candidate
+  * set is ONE equi-join on exploded (key kind, key value) pairs of each
+  * side's present name and email keys — the kind tag keeps a name from
+  * matching an equal email string, and an equi-join keeps the plan off
+  * BroadcastNestedLoopJoin (a disjunctive `OR` condition would land there,
+  * SURVEY.md §4). Candidates are ranked by source row order (first match
+  * wins, J4, made deterministic with an explicit window), and the winner's
+  * fields are coalesced into the master's missing cells. Provenance is a
+  * *derived dataset*, not a side-effecting append: every filled cell yields
+  * a ChangeLogEntry (X6).
   */
 object Fill {
 
@@ -27,10 +32,15 @@ object Fill {
   case class ChangeLogEntry(row_id: Long, field: String, old_value: String,
       new_value: String, source_file: String, matched_on: String)
 
-  /** Both frames are lazy and read through the operator's probe/build
-    * pins, which the caller's next [[Pins.flush]] releases — flush only
-    * once both have been consumed. */
+  /** Both frames are lazy and read through the per-source `fills` pin,
+    * which the caller's next [[Pins.flush]] releases — flush only once
+    * both have been consumed. */
   case class FillResult(filled: DataFrame, changeLog: DataFrame)
+
+  /** The >=k-of-3 verification threshold (F7; the reference's 2). The one
+    * candidate join on name and email finds every verified candidate only
+    * for k >= 2. */
+  private val MinMatches = 2
 
   /** Normalized match keys (P5): _name/_email/_phone shadow columns. */
   def withMatchKeys(df: DataFrame, name: Column, email: Column,
@@ -46,55 +56,44 @@ object Fill {
     *               keys, and the source-side columns named in `fieldMap`
     * @param fieldMap master field -> source field
     * @param sourceFile provenance tag for the change log
-    * @param minMatches the >=k-of-3 verification threshold (reference: 2)
     */
   def fillFromSource(master: DataFrame, source: DataFrame,
-      fieldMap: Map[String, String], sourceFile: String,
-      minMatches: Int = 2): FillResult = {
+      fieldMap: Map[String, String], sourceFile: String): FillResult = {
+    val (filled, log) = fill(master, source, fieldMap, sourceFile)
+    FillResult(filled, log.drop("__field_pos"))
+  }
 
+  /** [[fillFromSource]] with the change log's `__field_pos` (the field's
+    * position in `fieldMap`) kept for [[fillFromSources]]' sort. */
+  private def fill(master: DataFrame, source: DataFrame,
+      fieldMap: Map[String, String],
+      sourceFile: String): (DataFrame, DataFrame) = {
     val targetCols = fieldMap.keys.toSeq
+    val keys = Seq("_name", "_email", "_phone")
 
     // F3: predicate pushdown — only master rows missing something can change.
-    // Both projections are PERSIST-PINNED: each feeds all three key-join
-    // branches below, and without the pin Spark recomputes the upstream
-    // master/source plan once per branch (the r5 bench showed q69 paying
-    // three master scans). MEMORY_AND_DISK (the Pins default) because the
-    // probe is data-sized; released at the caller's run boundary.
     val needsFill = targetCols.map(c => Cleaning.isMissing(col(c))).reduce(_ || _)
-    val probe = Pins.pin(master.filter(needsFill)
-      .select((Seq("row_id", "_name", "_email", "_phone") ++ targetCols)
-        .map(col): _*))
+    val probe = master.filter(needsFill).select(Seq(col("row_id")) ++
+      keys.map(k => col(k).as(s"m$k")) ++
+      targetCols.map(c => col(c).as(s"mt_$c")): _*)
+    val build = source.select(Seq(col("src_order")) ++
+      keys.map(k => col(k).as(s"s$k")) ++
+      fieldMap.values.toSeq.distinct.map(c => col(c).as(s"sv_$c")): _*)
 
-    val build = Pins.pin(source
-      .select((Seq("src_order", "_name", "_email", "_phone") ++
-        fieldMap.values.toSeq.distinct).map(col): _*))
+    // One row per present name/email key, tagged with its kind. A
+    // candidate matching on both keys joins twice into two rows identical
+    // in every kept column; the window below keeps one of them.
+    def byKey(df: DataFrame, side: String): DataFrame =
+      df.withColumn("__key", explode(array(
+          struct(lit(0).as("kind"), col(s"${side}_name").as("value")),
+          struct(lit(1).as("kind"), col(s"${side}_email").as("value")))))
+        .filter(Cleaning.isPresent(col("__key.value")))
 
-    // Union of three equi-joins = the reference's three hash indexes (J2).
-    // Spark plans each as a shuffled/broadcast hash join; the union is the
-    // candidate set (§2.7), deduped on (row_id, src_order). Both sides carry
-    // the same helper-column names, so each join output is re-projected to
-    // disambiguated names before the union.
-    val mCols = Seq(col("m.row_id").as("row_id")) ++
-      Seq("_name", "_email", "_phone").map(k => col(s"m.$k").as(s"m$k")) ++
-      targetCols.map(c => col(s"m.$c").as(s"mt_$c"))
-    val sCols = Seq(col("s.src_order").as("src_order")) ++
-      Seq("_name", "_email", "_phone").map(k => col(s"s.$k").as(s"s$k")) ++
-      fieldMap.values.toSeq.distinct.map(c => col(s"s.$c").as(s"sv_$c"))
-
-    def joinOn(key: String): DataFrame =
-      probe.as("m").join(build.as("s"),
-          col(s"m.$key") =!= "" && col(s"m.$key") === col(s"s.$key"))
-        .select(mCols ++ sCols: _*)
-
-    val candidates = Seq("_name", "_email", "_phone").map(joinOn)
-      .reduce(_ unionByName _)
-      .dropDuplicates("row_id", "src_order")
-
-    // F7: >=2-of-3 verification as a residual filter.
-    val verified = candidates.filter(Cleaning.matchesAtLeast(minMatches,
-      (col("m_name"), col("s_name")),
-      (col("m_email"), col("s_email")),
-      (col("m_phone"), col("s_phone"))))
+    val verified = byKey(probe, "m").join(byKey(build, "s"), Seq("__key"))
+      .filter(Cleaning.matchesAtLeast(MinMatches,
+        (col("m_name"), col("s_name")),
+        (col("m_email"), col("s_email")),
+        (col("m_phone"), col("s_phone"))))
 
     // J4: first-match-wins, deterministic: earliest source row per master row.
     val winner = verified
@@ -102,18 +101,22 @@ object Fill {
         Window.partitionBy(col("row_id")).orderBy(col("src_order").asc)))
       .filter(col("__rank") === 1)
 
-    // Per-field fill expressions + change-log rows from the same join output.
-    val fills = winner.select(Seq(col("row_id").as("__fill_row_id")) ++
-      Seq(col("src_order"),
+    // One row per master row with a winning candidate: its old values
+    // (mt_*), its fills (__new_*) and what it matched on. The only pin:
+    // `filled` and the change log both read it, so the candidates are
+    // computed once.
+    val fills = Pins.pin(winner.select(Seq(col("row_id").as("__fill_row_id"),
         concat_ws("+",
           when(col("m_name") =!= "" && col("m_name") === col("s_name"), "name"),
           when(col("m_email") =!= "" && col("m_email") === col("s_email"), "email"),
           when(col("m_phone") =!= "" && col("m_phone") === col("s_phone"), "phone"))
           .as("__matched_on")) ++
-      fieldMap.map { case (mf, sf) =>
-        when(Cleaning.isMissing(col(s"mt_$mf")) && Cleaning.isPresent(col(s"sv_$sf")),
-          col(s"sv_$sf").cast("string")).as(s"__new_$mf")
-      }.toSeq: _*)
+      targetCols.map(c => col(s"mt_$c")) ++
+      targetCols.map { mf =>
+        when(Cleaning.isMissing(col(s"mt_$mf")) &&
+            Cleaning.isPresent(col(s"sv_${fieldMap(mf)}")),
+          col(s"sv_${fieldMap(mf)}").cast("string")).as(s"__new_$mf")
+      }: _*))
 
     val filled = master.as("t")
       .join(fills, col("t.row_id") === col("__fill_row_id"), "left")
@@ -126,39 +129,45 @@ object Fill {
         else col(s"t.$c").as(c)
       }: _*)
 
-    val changeLog = master.as("t")
-      .join(fills, col("t.row_id") === col("__fill_row_id"))
-      .select(col("t.row_id").as("row_id"), col("__matched_on"),
-        array(fieldMap.keys.toSeq.map { mf =>
+    // A projection of `fills`, no master join: the old value is mt_*.
+    val changeLog = fills
+      .select(col("__fill_row_id").as("row_id"), col("__matched_on"),
+        posexplode(array(targetCols.map { mf =>
           when(col(s"__new_$mf").isNotNull,
             struct(lit(mf).as("field"),
-              coalesce(col(s"t.$mf").cast("string"), lit("")).as("old_value"),
+              coalesce(col(s"mt_$mf").cast("string"), lit("")).as("old_value"),
               col(s"__new_$mf").as("new_value")))
-        }: _*).as("__changes"))
-      .select(col("row_id"), col("__matched_on"),
-        explode(filter(col("__changes"), c => c.isNotNull)).as("__c"))
+        }: _*)).as(Seq("__field_pos", "__c")))
+      .filter(col("__c").isNotNull)
       .select(col("row_id"), col("__c.field").as("field"),
         col("__c.old_value").as("old_value"), col("__c.new_value").as("new_value"),
-        lit(sourceFile).as("source_file"), col("__matched_on").as("matched_on"))
+        lit(sourceFile).as("source_file"), col("__matched_on").as("matched_on"),
+        col("__field_pos"))
 
-    FillResult(filled, changeLog)
+    (filled, changeLog)
   }
 
   /** Sequential multi-source fill (SURVEY.md §7.4.5): fills from file k are
     * visible when matching file k+1, so this is an iterative driver loop of
     * join+coalesce per source — checkpointed (localCheckpoint) between
-    * iterations to keep lineage bounded — not one big union. */
+    * iterations to keep lineage bounded — not one big union. The
+    * checkpoint also fills each source's `fills` pin, so the change log
+    * reads the pins and never recomputes a candidate join. The log is
+    * sorted by (source position, `row_id`, field position in the source's
+    * `fieldMap`): an explicit order, where the join plan's own output order
+    * would move with the core count. */
   def fillFromSources(master: DataFrame,
-      sources: Seq[(String, DataFrame, Map[String, String])],
-      minMatches: Int = 2): FillResult = {
+      sources: Seq[(String, DataFrame, Map[String, String])]): FillResult = {
     var current = master
     var logs = Vector.empty[DataFrame]
-    for ((name, src, fieldMap) <- sources) {
-      val r = fillFromSource(current, src, fieldMap, name, minMatches)
-      current = r.filled.localCheckpoint(eager = true)
-      logs :+= r.changeLog
+    for (((name, src, fieldMap), i) <- sources.zipWithIndex) {
+      val (filled, log) = fill(current, src, fieldMap, name)
+      current = filled.localCheckpoint(eager = true)
+      logs :+= log.withColumn("__source_pos", lit(i))
     }
     val log = logs.reduceOption(_ unionByName _)
+      .map(_.orderBy("__source_pos", "row_id", "__field_pos")
+        .drop("__source_pos", "__field_pos"))
       .getOrElse(master.sparkSession.emptyDataFrame)
     FillResult(current, log)
   }

@@ -19,18 +19,21 @@ import org.apache.spark.sql.DataFrame
   */
 object JsonAudit {
 
+  /** [[writeArray]]'s row cap: a larger audit belongs in [[writeDistributed]]. */
+  private val MaxRows = 1000000
+
   /** Single pretty-printed JSON array (reference artifact shape).
     * Values are rendered as JSON strings/numbers/nulls per field type —
     * null fields are EMITTED (`"x": null`), matching the reference's
     * json.dump, not dropped the way `df.toJSON` does by default. */
-  def writeArray(df: DataFrame, path: String, maxRows: Int = 1000000): Unit = {
+  def writeArray(df: DataFrame, path: String): Unit = {
     import org.apache.spark.sql.functions.{col, struct, to_json}
     val rows = df
       .select(to_json(struct(df.columns.map(c => col(s"`$c`")).toSeq: _*),
         Map("ignoreNullFields" -> "false")))
-      .take(maxRows + 1).map(_.getString(0))
-    require(rows.length <= maxRows,
-      s"audit dataset exceeds $maxRows rows; use writeDistributed")
+      .take(MaxRows + 1).map(_.getString(0))
+    require(rows.length <= MaxRows,
+      s"audit dataset exceeds $MaxRows rows; use writeDistributed")
     // toJSON yields compact per-row objects; indent them into a pretty array
     val body =
       if (rows.isEmpty) "[]"

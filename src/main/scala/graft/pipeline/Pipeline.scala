@@ -13,8 +13,8 @@ object Pipeline {
 
   case class StageResult(name: String, seconds: Double, rows: Long)
 
-  /** [[release]] the run's pins (stage boundaries, Fill's probe/build
-    * projections, RowIds' sampled exchange) once the output frames have
+  /** [[release]] the run's pins (stage boundaries, Fill's per-source
+    * `fills` frames, RowIds' sampled exchange) once the output frames have
     * been written — the change log reads through them lazily until then. */
   case class RunResult(cleaned: DataFrame, changeLog: DataFrame,
       validationErrors: DataFrame, stages: Seq[StageResult], passed: Boolean) {

@@ -1376,9 +1376,7 @@ private[queries] object QueriesAnn {
           .select(col("vec_id"), Vec.asDouble(col("embedding")).as("vec"))
         val q = e.filter(col("vec_id") % 25 === 0 && col("vec_id") < 500)
           .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_ann_idx_" +
-          java.security.MessageDigest.getInstance("MD5").digest(
-            dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+        val path = scratchPath(dir, "graft_ann_idx_")
         val name = "q203_idx_" + path.takeRight(12)
         Similarity.writeAnnIndex(e, "vec_id", "vec", path, name,
           m = 8, k = 16, nlist = 64, numBuckets = 16)
@@ -1554,15 +1552,7 @@ private[queries] object QueriesAnn {
           .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
         val b2raw = raw.filter(col("vec_id") % 25 === 5 && col("vec_id") < 500)
           .select((col("vec_id") + 200000).as("vec_id"), col("embedding"))
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_q214_" +
-          java.security.MessageDigest.getInstance("MD5").digest(
-            dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-        def rm(p: String): Unit = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .delete(hp, true)
-        }
-        rm(base)
+        val base = freshScratchPath(s, dir, "graft_q214_")
         val (idxPath, vecsDir, outDir, ckpt) = (s"$base/idx",
           s"$base/vecs", s"$base/nn", s"$base/ckpt")
         val name = "q214_idx_" + base.takeRight(12)
@@ -1745,10 +1735,7 @@ private[queries] object QueriesAnn {
           .select(col("vec_id"), Vec.asDouble(col("embedding")).as("vec"))
         val q = e.filter(col("vec_id") % 25 === 0 && col("vec_id") < 500)
           .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-        val path =
-          s"${System.getProperty("java.io.tmpdir")}/graft_rerank_idx_" +
-            java.security.MessageDigest.getInstance("MD5").digest(
-              dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+        val path = scratchPath(dir, "graft_rerank_idx_")
         val name = "q217_idx_" + path.takeRight(12)
         Similarity.writeAnnIndex(e, "vec_id", "vec", path, name,
           m = 8, k = 64, nlist = 64, numBuckets = 16)
@@ -1924,10 +1911,7 @@ private[queries] object QueriesAnn {
         val candK = math.max(500L, n / 4).toInt
         val q = e.filter(col("vec_id") % 25 === 0 && col("vec_id") < 500)
           .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-        val path =
-          s"${System.getProperty("java.io.tmpdir")}/graft_scaled_idx_" +
-            java.security.MessageDigest.getInstance("MD5").digest(
-              dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+        val path = scratchPath(dir, "graft_scaled_idx_")
         val name = "q220_idx_" + path.takeRight(12)
         Similarity.writeAnnIndex(e, "vec_id", "vec", path, name,
           m = 8, k = 256, nlist = nlist, numBuckets = 16)

@@ -1275,9 +1275,7 @@ private[queries] object QueriesDedup {
         val batch = d.filter(col("doc_id") % 7 === 0)
           .select((col("doc_id") + 10000).as("doc_id"),
             regexp_replace(col("text"), "^\\S+\\s+", "").as("text"))
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_lsh_idx_" +
-          java.security.MessageDigest.getInstance("MD5").digest(
-            dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+        val path = scratchPath(dir, "graft_lsh_idx_")
         val name = "q194_idx_" + path.takeRight(12)
         Dedup.writeLshIndex(d, "doc_id", "text", path, name,
           shingleSize = 3, numHashes = 64, bands = 16)
@@ -1340,17 +1338,9 @@ private[queries] object QueriesDedup {
         val batch2 = d.filter(col("doc_id") % 7 === 0)
           .select((col("doc_id") + 20000).as("doc_id"),
             regexp_replace(col("text"), "\\s+\\S+$", "").as("text"))
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_q202_" +
-          java.security.MessageDigest.getInstance("MD5").digest(
-            dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
         // deterministic re-runs: the stream's checkpoint, absorb markers,
         // pair sink and index all restart from scratch
-        def rm(p: String): Unit = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .delete(hp, true)
-        }
-        rm(base)
+        val base = freshScratchPath(s, dir, "graft_q202_")
         val (idxPath, docsDir, outDir, ckpt) = (s"$base/idx",
           s"$base/docs", s"$base/pairs", s"$base/ckpt")
         val name = "q202_idx_" + base.takeRight(12)
@@ -1792,12 +1782,7 @@ private[queries] object QueriesDedup {
         val batch2 = d.filter(col("doc_id") % 7 === 0)
           .select((col("doc_id") + 20000).as("doc_id"),
             regexp_replace(col("text"), "\\s+\\S+$", "").as("text"))
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_q215_" +
-          java.security.MessageDigest.getInstance("MD5").digest(
-            dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-        val fs = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(base), true)
+        val base = freshScratchPath(s, dir, "graft_q215_")
         val idxPath = s"$base/idx"
         val name = "q215_idx_" + base.takeRight(12)
         Dedup.writeLshIndex(d, "doc_id", "text", idxPath, name,
@@ -1855,12 +1840,7 @@ private[queries] object QueriesDedup {
         val batch2 = d.filter(col("doc_id") % 7 === 0)
           .select((col("doc_id") + 20000).as("doc_id"),
             regexp_replace(col("text"), "\\s+\\S+$", "").as("text"))
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_q219_" +
-          java.security.MessageDigest.getInstance("MD5").digest(
-            dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-        val fs = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(base), true)
+        val base = freshScratchPath(s, dir, "graft_q219_")
         val idxPath = s"$base/idx"
         val name = "q219_idx_" + base.takeRight(12)
         Dedup.writeLshIndex(d, "doc_id", "text", idxPath, name,

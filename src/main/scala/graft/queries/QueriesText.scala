@@ -2682,9 +2682,7 @@ private[queries] object QueriesText {
         val docs = t(s, dir, "documents")
         val bench = docs.filter(col("doc_id") % 50 === 0)
         val probe = docs.filter(col("doc_id") % 50 =!= 0)
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_ngram_idx_" +
-          java.security.MessageDigest.getInstance("MD5").digest(
-            dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+        val path = scratchPath(dir, "graft_ngram_idx_")
         val name = "q210_idx_" + path.takeRight(12)
         graft.operators.Contam.writeNgramIndex(bench, "doc_id", "text",
           path, name, n = 13, numBuckets = 16)
@@ -2741,10 +2739,7 @@ private[queries] object QueriesText {
         val docs = t(s, dir, "documents")
         val bench = docs.filter(col("doc_id") % 50 === 0)
         val probe = docs.filter(col("doc_id") % 50 =!= 0)
-        val path =
-          s"${System.getProperty("java.io.tmpdir")}/graft_decontam_idx_" +
-          java.security.MessageDigest.getInstance("MD5").digest(
-            dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+        val path = scratchPath(dir, "graft_decontam_idx_")
         val name = "q213_idx_" + path.takeRight(12)
         graft.operators.Contam.writeNgramIndex(bench, "doc_id", "text",
           path, name, n = 13, numBuckets = 16)

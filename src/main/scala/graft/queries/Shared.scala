@@ -20,6 +20,24 @@ private[queries] object Shared {
       name: String): DataFrame =
     Tables(s, dir, name)
 
+  /** The persisted-index queries' scratch path for data dir `dir`:
+    * `java.io.tmpdir` + `prefix` + the first 12 hex chars of md5(`dir`), so
+    * every data dir gets its own index and re-runs find the same path. */
+  private[queries] def scratchPath(dir: String, prefix: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/$prefix" +
+      java.security.MessageDigest.getInstance("MD5").digest(
+        dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+
+  /** [[scratchPath]] with whatever an earlier run left there deleted, for
+    * the queries whose stream checkpoints and markers must restart. */
+  private[queries] def freshScratchPath(s: SparkSession, dir: String,
+      prefix: String): String = {
+    val path = scratchPath(dir, prefix)
+    val hp = new org.apache.hadoop.fs.Path(path)
+    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    path
+  }
+
   /** Oracle CTE chain shared by q44/q196 — the planted-near-dup (modulo 7)
     * corpus, its 3-gram-Jaccard >= 0.7 pair set, and the recursive
     * connected-component closure, ending at reach(id, r). */

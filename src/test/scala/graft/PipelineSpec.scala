@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -336,13 +336,225 @@ class PipelineSpec extends AnyFunSuite {
       Seq(
         ("s2", s2, Map("phone" -> "phone")), // name+email match -> fills phone
         ("s3", source((42L, "jo do", "", "5551234567")),
-          Map("email" -> "email"))), // would need the phone filled by s2
-      minMatches = 2)
+          Map("email" -> "email")))) // would need the phone filled by s2
     val row = r.filled.head()
     assert(row.getAs[String]("phone") == "5551234567")
     // match keys are static (computed before fill), so s3 sees original keys;
     // the change log records the s2 fill
     assert(r.changeLog.count() == 1)
+  }
+
+  // -------------------------------------------- Fill against its reference
+
+  /** The fill as the reference's three hash indexes spell it: one
+    * equi-join per key (name, email, phone), their union deduplicated on
+    * (row_id, src_order), >=2-of-3 verification, first match wins, and the
+    * change log from a second join with the master. */
+  private def referenceFill(master: DataFrame, source: DataFrame,
+      fieldMap: Map[String, String],
+      sourceFile: String): (DataFrame, DataFrame) = {
+    val targetCols = fieldMap.keys.toSeq
+    val keys = Seq("_name", "_email", "_phone")
+    val probe = master
+      .filter(targetCols.map(c => Cleaning.isMissing(col(c))).reduce(_ || _))
+      .select((Seq("row_id") ++ keys ++ targetCols).map(col): _*)
+    val build = source.select((Seq("src_order") ++ keys ++
+      fieldMap.values.toSeq.distinct).map(col): _*)
+    val mCols = Seq(col("m.row_id").as("row_id")) ++
+      keys.map(k => col(s"m.$k").as(s"m$k")) ++
+      targetCols.map(c => col(s"m.$c").as(s"mt_$c"))
+    val sCols = Seq(col("s.src_order").as("src_order")) ++
+      keys.map(k => col(s"s.$k").as(s"s$k")) ++
+      fieldMap.values.toSeq.distinct.map(c => col(s"s.$c").as(s"sv_$c"))
+    val winner = keys.map { k =>
+        probe.as("m").join(build.as("s"),
+            col(s"m.$k") =!= "" && col(s"m.$k") === col(s"s.$k"))
+          .select(mCols ++ sCols: _*)
+      }.reduce(_ unionByName _)
+      .dropDuplicates("row_id", "src_order")
+      .filter(Cleaning.matchesAtLeast(2, (col("m_name"), col("s_name")),
+        (col("m_email"), col("s_email")), (col("m_phone"), col("s_phone"))))
+      .withColumn("__rank", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("row_id"))
+          .orderBy(col("src_order"))))
+      .filter(col("__rank") === 1)
+    def on(k: String) =
+      when(col(s"m_$k") =!= "" && col(s"m_$k") === col(s"s_$k"), k)
+    val fills = winner.select(Seq(col("row_id").as("__fill_row_id"),
+        concat_ws("+", on("name"), on("email"), on("phone")).as("__matched_on")) ++
+      fieldMap.map { case (mf, sf) =>
+        when(Cleaning.isMissing(col(s"mt_$mf")) && Cleaning.isPresent(col(s"sv_$sf")),
+          col(s"sv_$sf").cast("string")).as(s"__new_$mf")
+      }: _*)
+    val filled = master.as("t")
+      .join(fills, col("t.row_id") === col("__fill_row_id"), "left")
+      .select(master.columns.toSeq.map { c =>
+        if (fieldMap.contains(c))
+          coalesce(when(Cleaning.isPresent(col(s"t.$c")), col(s"t.$c")),
+            col(s"__new_$c"), col(s"t.$c")).as(c)
+        else col(s"t.$c").as(c)
+      }: _*)
+    val changeLog = master.as("t")
+      .join(fills, col("t.row_id") === col("__fill_row_id"))
+      .select(col("t.row_id").as("row_id"), col("__matched_on"),
+        explode(array(targetCols.map { mf =>
+          when(col(s"__new_$mf").isNotNull,
+            struct(lit(mf).as("field"),
+              coalesce(col(s"t.$mf").cast("string"), lit("")).as("old_value"),
+              col(s"__new_$mf").as("new_value")))
+        }: _*)).as("__c"))
+      .filter(col("__c").isNotNull)
+      .select(col("row_id"), col("__c.field").as("field"),
+        col("__c.old_value").as("old_value"), col("__c.new_value").as("new_value"),
+        lit(sourceFile).as("source_file"), col("__matched_on").as("matched_on"))
+    (filled, changeLog)
+  }
+
+  /** Seeded fill fixtures drawn from small pools, so keys collide often:
+    * empty and sentinel keys, a name ("x@y.com") equal to an email, and
+    * sources matching one master row several times and several master
+    * rows at once. Three sources, each with its own field map. */
+  private def fillFixture(seed: Int)
+      : (DataFrame, Seq[(String, DataFrame, Map[String, String])]) = {
+    val rnd = new scala.util.Random(seed)
+    def pick(xs: String*) = xs(rnd.nextInt(xs.size))
+    def row() = (pick("Jo Do", "jo  do", "Al Bo", "Cy Ek", "x@y.com", "", "nan", "n/a"),
+      pick("jo@x.com", "al@x.com", "x@y.com", "cy@x.com", "", "nan", "N/A"),
+      pick("5551234567", "555-123-4567", "111", "9998887777", "", "nan"),
+      pick("Oslo", "Rome", "", "nan"))
+    def keyed(df: DataFrame) =
+      Fill.withMatchKeys(df, col("name"), col("email"), col("phone"))
+    val m = keyed((1L to 30L).map { i => val (n, e, p, t) = row(); (i, n, e, p, t) }
+      .toDF("row_id", "name", "email", "phone", "town"))
+    def src(n: Int) = {
+      val order = rnd.shuffle((1L to n.toLong).toList)
+      keyed(order.map { o => val (a, e, p, t) = row(); (o, a, e, p, t) }
+        .toDF("src_order", "name", "email", "phone", "town"))
+    }
+    (m, Seq(
+      ("a.tsv", src(20), Map("email" -> "email")),
+      ("b.tsv", src(25), Map("phone" -> "phone", "email" -> "email", "town" -> "town")),
+      ("c.tsv", src(15), Map("town" -> "town", "phone" -> "phone"))))
+  }
+
+  private val fillSeeds = Seq(1, 2, 3, 4, 5, 6)
+
+  /** The reference's multi-source fill: the filled master, and the log
+    * ordered by (source position, row_id, field position in the source's
+    * field map). */
+  private def referenceFills(master: DataFrame,
+      sources: Seq[(String, DataFrame, Map[String, String])])
+      : (DataFrame, Seq[Row]) = {
+    var current = master
+    val log = sources.zipWithIndex.flatMap { case ((name, src, fm), i) =>
+      val (filled, log) = referenceFill(current, src, fm, name)
+      current = filled.localCheckpoint(eager = true)
+      log.collect().toSeq.map(r =>
+        ((i, r.getLong(0), fm.keys.toSeq.indexOf(r.getString(1))), r))
+    }.sortBy(_._1).map(_._2)
+    (current, log)
+  }
+
+  test("fill == the three-join reference: filled, change log and log order") {
+    // the fixtures hold 1-, 2- and 3-key pairs, many-to-one and
+    // one-to-many verified matches, and a name key equal to an email key
+    def hit(k: String) = when(Cleaning.isPresent(col(s"m.$k")) &&
+      Cleaning.isPresent(col(s"s.$k")) && col(s"m.$k") === col(s"s.$k"), 1).otherwise(0)
+    val pairs = fillSeeds.flatMap { seed =>
+      val (m, sources) = fillFixture(seed)
+      sources.flatMap { case (name, s, _) =>
+        m.as("m").crossJoin(s.as("s"))
+          .select(col("m.row_id"), col("s.src_order"),
+            hit("_name") + hit("_email") + hit("_phone"),
+            Cleaning.isPresent(col("m._name")) && col("m._name") === col("s._email"))
+          .collect().map(r => (seed, name, r.getLong(0), r.getLong(1), r.getInt(2),
+            r.getBoolean(3)))
+      }
+    }
+    assert(Set(1, 2, 3).subsetOf(pairs.map(_._5).toSet))
+    val verified = pairs.filter(_._5 >= 2)
+    assert(verified.groupBy(p => (p._1, p._2, p._3)).exists(_._2.size >= 2),
+      "no master row with two verified source rows")
+    assert(verified.groupBy(p => (p._1, p._2, p._4)).exists(_._2.size >= 2),
+      "no source row verified against two master rows")
+    assert(pairs.exists(_._6), "no name key equal to an email key")
+    for (seed <- fillSeeds) {
+      val (m, sources) = fillFixture(seed)
+      for ((name, s, fm) <- sources) {
+        val r = Fill.fillFromSource(m, s, fm, name)
+        val (refFilled, refLog) = referenceFill(m, s, fm, name)
+        for ((got, want, what) <- Seq((r.filled, refFilled, "filled"),
+            (r.changeLog, refLog, "changeLog"))) {
+          assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+            s"seed $seed, $name: $what differs from the reference")
+        }
+      }
+      val r = Fill.fillFromSources(m, sources)
+      val (refFilled, refLog) = referenceFills(m, sources)
+      assert(r.filled.exceptAll(refFilled).isEmpty &&
+        refFilled.exceptAll(r.filled).isEmpty, s"seed $seed: filled differs")
+      // the order any correct fill keeps: sources in input order, each
+      // row's fields in field-map order (the row order within a source is
+      // pinned by the (source, row_id, field) test below)
+      val got = r.changeLog.collect().toSeq
+      val srcPos = sources.map(_._1).zipWithIndex.toMap
+      val gotPos = got.map(e => srcPos(e.getString(4)))
+      assert(gotPos == gotPos.sorted, s"seed $seed: sources out of order")
+      assert(got.sortBy(e => (srcPos(e.getString(4)), e.getLong(0))) == refLog,
+        s"seed $seed: change log differs in content or field order")
+      Pins.flush()
+    }
+  }
+
+  test("fill plan: one candidate join, no dedup pass, log read from the fills pin") {
+    import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation,
+      InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
+      CartesianProductExec}
+    val (m, sources) = fillFixture(1)
+    val (name, s, fm) = sources(1)
+    val r = Fill.fillFromSource(m, s, fm, name)
+    // the whole fill, the pinned `fills` frame spelled out (no cache
+    // substitution): the candidate join and the left join, both equi-joins
+    val whole = spark.sessionState.optimizer.execute(r.filled.queryExecution.analyzed)
+    val joins = whole.collect { case j: Join => j }
+    assert(joins.size == 2 && joins.forall(j => ExtractEquiJoinKeys.unapply(j).isDefined),
+      s"expected 2 equi-joins:\n$whole")
+    assert(whole.collect { case a: Aggregate => a }.isEmpty, s"an Aggregate:\n$whole")
+    r.filled.collect()
+    def physical(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => physical(a.executedPlan)
+      case q: QueryStageExec => physical(q.plan)
+      case t: InMemoryTableScanExec => t +: physical(t.relation.cachedPlan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(physical)
+    }
+    val ops = physical(r.filled.queryExecution.executedPlan)
+    assert(!ops.exists(p => p.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+      p.isInstanceOf[CartesianProductExec]), ops.mkString("\n"))
+    // the change log is a projection of the pinned frame: no join at all
+    val log = r.changeLog.queryExecution.optimizedPlan
+    assert(log.collect { case j: Join => j }.isEmpty, s"a join in the log:\n$log")
+    assert(log.collect { case i: InMemoryRelation => i }.size == 1, log.toString)
+    Pins.flush()
+  }
+
+  test("fill: multi-source change log in (source, row_id, field) order at 1 and 5 partitions") {
+    val (m, sources) = fillFixture(2)
+    val want = referenceFills(m, sources)._2
+    assert(want.map(_.getString(4)).distinct.size >= 2 &&
+      want.groupBy(e => (e.getString(4), e.getLong(0))).exists(_._2.size >= 2),
+      "the fixture logs two sources and a row with two fields")
+    for (n <- Seq("1", "5")) SparkTestSession.withConf(
+        "spark.sql.shuffle.partitions" -> n) {
+      assert(Fill.fillFromSources(m, sources).changeLog.collect().toSeq == want,
+        s"order at $n shuffle partitions")
+      Pins.flush()
+    }
   }
 
   test("mailchimpFill: 2-key broadcast fill, first source row wins") {
