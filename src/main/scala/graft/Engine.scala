@@ -46,10 +46,10 @@ object Engine {
 
   /** Run-end release: operator pins ([[graft.pipeline.Pins.flush]]),
     * then every CacheManager entry, then every persistent RDD — the
-    * localCheckpoint'd frames (Fill's per-source checkpoints, Budget/
-    * RowIds pinned partitionings, the CC label frame) bypass the
-    * CacheManager. Helper caches built during one run (postings,
-    * signatures, exploded lines) would otherwise satisfy the next run's
+    * localCheckpoint'd frames (Budget/RowIds pinned partitionings, the
+    * CC label frame) bypass the CacheManager. Helper caches built during
+    * one run (postings, signatures, exploded lines) would otherwise
+    * satisfy the next run's
     * identical plan fragments and accumulate in executor storage for the
     * lifetime of a served session. Never aborts its caller.
     *

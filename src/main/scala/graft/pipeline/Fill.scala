@@ -24,6 +24,16 @@ import graft.functions.Cleaning
   * fields are coalesced into the master's missing cells. Provenance is a
   * *derived dataset*, not a side-effecting append: every filled cell yields
   * a ChangeLogEntry (X6).
+  *
+  * Several sources are one plan, not a loop. The reference fills file k
+  * before it matches file k+1, but its match keys are built once, before
+  * that loop, and a fill never rewrites them: file k changes for file k+1
+  * only which cells are still missing. So the first source, in input
+  * order, whose winner offers a value for a cell fills it, and every
+  * source is matched against the same master in one candidate join (the
+  * build sides unioned, each row tagged with its source position). No
+  * source's plan contains another's, so there is no lineage to cut and
+  * no per-source checkpoint.
   */
 object Fill {
 
@@ -32,9 +42,9 @@ object Fill {
   case class ChangeLogEntry(row_id: Long, field: String, old_value: String,
       new_value: String, source_file: String, matched_on: String)
 
-  /** Both frames are lazy and read through the per-source `fills` pin,
-    * which the caller's next [[Pins.flush]] releases — flush only once
-    * both have been consumed. */
+  /** Both frames are lazy and read through the one `fills` pin, which the
+    * caller's next [[Pins.flush]] releases — flush only once both have
+    * been consumed. */
   case class FillResult(filled: DataFrame, changeLog: DataFrame)
 
   /** The >=k-of-3 verification threshold (F7; the reference's 2). The one
@@ -49,7 +59,8 @@ object Fill {
       .withColumn("_email", Cleaning.normEmail(email))
       .withColumn("_phone", Cleaning.normPhone(phone))
 
-  /** Fill missing `fieldMap` fields of `master` from one `source`.
+  /** Fill missing `fieldMap` fields of `master` from one `source`; the
+    * change log is unsorted.
     *
     * @param master must carry unique `row_id`, match keys `_name/_email/_phone`
     * @param source must carry `src_order` (stable row order), the same match
@@ -58,17 +69,24 @@ object Fill {
     * @param sourceFile provenance tag for the change log
     */
   def fillFromSource(master: DataFrame, source: DataFrame,
-      fieldMap: Map[String, String], sourceFile: String): FillResult = {
-    val (filled, log) = fill(master, source, fieldMap, sourceFile)
-    FillResult(filled, log.drop("__field_pos"))
-  }
+      fieldMap: Map[String, String], sourceFile: String): FillResult =
+    fill(master, Seq((sourceFile, source, fieldMap)), sorted = false)
 
-  /** [[fillFromSource]] with the change log's `__field_pos` (the field's
-    * position in `fieldMap`) kept for [[fillFromSources]]' sort. */
-  private def fill(master: DataFrame, source: DataFrame,
-      fieldMap: Map[String, String],
-      sourceFile: String): (DataFrame, DataFrame) = {
-    val targetCols = fieldMap.keys.toSeq
+  /** Multi-source fill (SURVEY.md §7.4.5) as one plan (see above): a cell
+    * is filled by the first source whose winner offers a value for it.
+    * The log is sorted by (source position, `row_id`, field position in
+    * the source's `fieldMap`): an explicit order, where the join plan's
+    * own output order would move with the core count. No sources: the
+    * master itself and an empty log. */
+  def fillFromSources(master: DataFrame,
+      sources: Seq[(String, DataFrame, Map[String, String])]): FillResult =
+    if (sources.isEmpty) FillResult(master, master.sparkSession.emptyDataFrame)
+    else fill(master, sources, sorted = true)
+
+  private def fill(master: DataFrame,
+      sources: Seq[(String, DataFrame, Map[String, String])],
+      sorted: Boolean): FillResult = {
+    val targetCols = sources.flatMap(_._3.keys).distinct
     val keys = Seq("_name", "_email", "_phone")
 
     // F3: predicate pushdown — only master rows missing something can change.
@@ -76,9 +94,17 @@ object Fill {
     val probe = master.filter(needsFill).select(Seq(col("row_id")) ++
       keys.map(k => col(k).as(s"m$k")) ++
       targetCols.map(c => col(c).as(s"mt_$c")): _*)
-    val build = source.select(Seq(col("src_order")) ++
-      keys.map(k => col(k).as(s"s$k")) ++
-      fieldMap.values.toSeq.distinct.map(c => col(c).as(s"sv_$c")): _*)
+    // Every source's rows, tagged with the source position; each present
+    // value sits under the master field it fills (sv_*), null elsewhere.
+    val build = sources.zipWithIndex.map { case ((_, src, fieldMap), i) =>
+      src.select(Seq(lit(i).as("__src"), col("src_order")) ++
+        keys.map(k => col(k).as(s"s$k")) ++
+        targetCols.map { mf =>
+          fieldMap.get(mf).fold(lit(null).cast("string")) { sf =>
+            when(Cleaning.isPresent(col(sf)), col(sf).cast("string"))
+          }.as(s"sv_$mf")
+        }: _*)
+    }.reduce(_ union _)
 
     // One row per present name/email key, tagged with its kind. A
     // candidate matching on both keys joins twice into two rows identical
@@ -95,81 +121,64 @@ object Fill {
         (col("m_email"), col("s_email")),
         (col("m_phone"), col("s_phone"))))
 
-    // J4: first-match-wins, deterministic: earliest source row per master row.
-    val winner = verified
-      .withColumn("__rank", row_number().over(
-        Window.partitionBy(col("row_id")).orderBy(col("src_order").asc)))
-      .filter(col("__rank") === 1)
+    // J4: first-match-wins, deterministic. One window partitioning on
+    // row_id, ordered by (source, source row): a source's first row per
+    // master row is its winner, and each cell takes the first winner, in
+    // source order, that offers a value.
+    val w = Window.partitionBy(col("row_id")).orderBy(col("__src"), col("src_order"))
+    val all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val matchedOn = concat_ws("+",
+      when(col("m_name") =!= "" && col("m_name") === col("s_name"), "name"),
+      when(col("m_email") =!= "" && col("m_email") === col("s_email"), "email"),
+      when(col("m_phone") =!= "" && col("m_phone") === col("s_phone"), "phone"))
+    val winners = verified.withColumn("__prev", lag(col("__src"), 1).over(w))
+      .filter(col("__prev").isNull || col("__prev") =!= col("__src"))
 
-    // One row per master row with a winning candidate: its old values
-    // (mt_*), its fills (__new_*) and what it matched on. The only pin:
-    // `filled` and the change log both read it, so the candidates are
-    // computed once.
-    val fills = Pins.pin(winner.select(Seq(col("row_id").as("__fill_row_id"),
-        concat_ws("+",
-          when(col("m_name") =!= "" && col("m_name") === col("s_name"), "name"),
-          when(col("m_email") =!= "" && col("m_email") === col("s_email"), "email"),
-          when(col("m_phone") =!= "" && col("m_phone") === col("s_phone"), "phone"))
-          .as("__matched_on")) ++
+    // One row per master row with a winner: its old values (mt_*), and per
+    // cell the fill (__new_*: source, what it matched on, value). The only
+    // pin: `filled` and the change log both read it, so the candidates
+    // are computed once.
+    val fills = Pins.pin(winners.select(Seq(col("row_id").as("__fill_row_id"),
+        col("__prev")) ++
       targetCols.map(c => col(s"mt_$c")) ++
       targetCols.map { mf =>
-        when(Cleaning.isMissing(col(s"mt_$mf")) &&
-            Cleaning.isPresent(col(s"sv_${fieldMap(mf)}")),
-          col(s"sv_${fieldMap(mf)}").cast("string")).as(s"__new_$mf")
-      }: _*))
+        when(Cleaning.isMissing(col(s"mt_$mf")), first(
+          when(col(s"sv_$mf").isNotNull, struct(col("__src").as("src"),
+            matchedOn.as("matched_on"), col(s"sv_$mf").as("value"))),
+          ignoreNulls = true).over(all)).as(s"__new_$mf")
+      }: _*).filter(col("__prev").isNull).drop("__prev"))
 
     val filled = master.as("t")
       .join(fills, col("t.row_id") === col("__fill_row_id"), "left")
       .select(master.columns.toSeq.map { c =>
-        if (fieldMap.contains(c))
+        if (targetCols.contains(c))
           // present -> keep; missing + fill available -> fill; else keep the
           // original (possibly ""/sentinel) value untouched
           coalesce(when(Cleaning.isPresent(col(s"t.$c")), col(s"t.$c")),
-            col(s"__new_$c"), col(s"t.$c")).as(c)
+            col(s"__new_$c").getField("value"), col(s"t.$c")).as(c)
         else col(s"t.$c").as(c)
       }: _*)
 
-    // A projection of `fills`, no master join: the old value is mt_*.
-    val changeLog = fills
-      .select(col("__fill_row_id").as("row_id"), col("__matched_on"),
-        posexplode(array(targetCols.map { mf =>
-          when(col(s"__new_$mf").isNotNull,
-            struct(lit(mf).as("field"),
-              coalesce(col(s"mt_$mf").cast("string"), lit("")).as("old_value"),
-              col(s"__new_$mf").as("new_value")))
-        }: _*)).as(Seq("__field_pos", "__c")))
+    // A projection of `fills`, no master join: the old value is mt_*; the
+    // source's name and the field's position in the source's fieldMap are
+    // looked up by source position.
+    val log = fills.select(col("__fill_row_id").as("row_id"),
+        explode(array(targetCols.map { mf =>
+          val cell = col(s"__new_$mf")
+          val src = cell.getField("src") + 1
+          when(cell.isNotNull, struct(lit(mf).as("field"),
+            coalesce(col(s"mt_$mf").cast("string"), lit("")).as("old_value"),
+            cell.getField("value").as("new_value"),
+            element_at(typedLit(sources.map(_._1)), src).as("source_file"),
+            cell.getField("matched_on").as("matched_on"),
+            cell.getField("src").as("__src"),
+            element_at(typedLit(sources.map(_._3.keys.toSeq.indexOf(mf))), src)
+              .as("__field_pos")))
+        }: _*)).as("__c"))
       .filter(col("__c").isNotNull)
-      .select(col("row_id"), col("__c.field").as("field"),
-        col("__c.old_value").as("old_value"), col("__c.new_value").as("new_value"),
-        lit(sourceFile).as("source_file"), col("__matched_on").as("matched_on"),
-        col("__field_pos"))
-
-    (filled, changeLog)
-  }
-
-  /** Sequential multi-source fill (SURVEY.md §7.4.5): fills from file k are
-    * visible when matching file k+1, so this is an iterative driver loop of
-    * join+coalesce per source — checkpointed (localCheckpoint) between
-    * iterations to keep lineage bounded — not one big union. The
-    * checkpoint also fills each source's `fills` pin, so the change log
-    * reads the pins and never recomputes a candidate join. The log is
-    * sorted by (source position, `row_id`, field position in the source's
-    * `fieldMap`): an explicit order, where the join plan's own output order
-    * would move with the core count. */
-  def fillFromSources(master: DataFrame,
-      sources: Seq[(String, DataFrame, Map[String, String])]): FillResult = {
-    var current = master
-    var logs = Vector.empty[DataFrame]
-    for (((name, src, fieldMap), i) <- sources.zipWithIndex) {
-      val (filled, log) = fill(current, src, fieldMap, name)
-      current = filled.localCheckpoint(eager = true)
-      logs :+= log.withColumn("__source_pos", lit(i))
-    }
-    val log = logs.reduceOption(_ unionByName _)
-      .map(_.orderBy("__source_pos", "row_id", "__field_pos")
-        .drop("__source_pos", "__field_pos"))
-      .getOrElse(master.sparkSession.emptyDataFrame)
-    FillResult(current, log)
+      .select("row_id", "__c.*")
+    FillResult(filled, (if (sorted) log.orderBy("__src", "row_id", "__field_pos")
+      else log).drop("__src", "__field_pos"))
   }
 
   /** J1 — the Mailchimp correlated-lookup special case

@@ -100,12 +100,4 @@ object GoldenRecord {
     dedupe(keyed(existing).unionByName(keyed(incoming)), rowIdCol,
       lastUpdatedCol, keyCol)
   }
-
-  /** SEQNO reassignment (P8, clean_contacts.py:62-63): 1..N in an explicit
-    * order — pandas relied on implicit "current order", which does not exist
-    * in a distributed plan, so the sort key is a required argument.
-    * Range-partitioned two-phase assignment ([[RowIds.denseByOrder]]): no
-    * unpartitioned window, scale-safe. */
-  def resetSeqNumbers(df: DataFrame, seqCol: String, order: Seq[Column]): DataFrame =
-    RowIds.denseByOrder(df, seqCol, order)
 }

@@ -3,6 +3,8 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 
 /** JSON audit sink (SURVEY.md §2.1 S8): the reference writes its change log
@@ -13,7 +15,7 @@ import org.apache.spark.sql.DataFrame
   *  - [[writeArray]]: the artifact-parity path — collect to the driver and
   *    write a single pretty JSON array file. Audit datasets are tiny
   *    relative to the data (per-fill / per-error rows), but this is still
-  *    the documented scalability exception; cap with `maxRows`.
+  *    the documented scalability exception, capped at a million rows.
   *  - [[writeDistributed]]: `.write.json` — newline-delimited JSON part
   *    files, the 100-TB default.
   */
@@ -28,10 +30,12 @@ object JsonAudit {
     * json.dump, not dropped the way `df.toJSON` does by default. */
   def writeArray(df: DataFrame, path: String): Unit = {
     import org.apache.spark.sql.functions.{col, struct, to_json}
+    // a partition-by-partition iterator, not `take`: over a sorted frame
+    // `take` plans a top-k sized for the cap in every partition
     val rows = df
       .select(to_json(struct(df.columns.map(c => col(s"`$c`")).toSeq: _*),
         Map("ignoreNullFields" -> "false")))
-      .take(MaxRows + 1).map(_.getString(0))
+      .toLocalIterator().asScala.take(MaxRows + 1).map(_.getString(0)).toVector
     require(rows.length <= MaxRows,
       s"audit dataset exceeds $MaxRows rows; use writeDistributed")
     // toJSON yields compact per-row objects; indent them into a pretty array

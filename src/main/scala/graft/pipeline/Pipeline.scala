@@ -13,9 +13,9 @@ object Pipeline {
 
   case class StageResult(name: String, seconds: Double, rows: Long)
 
-  /** [[release]] the run's pins (stage boundaries, Fill's per-source
-    * `fills` frames, RowIds' sampled exchange) once the output frames have
-    * been written — the change log reads through them lazily until then. */
+  /** [[release]] the run's pins (stage boundaries, Fill's one `fills`
+    * frame, RowIds' sampled exchange) once the output frames have been
+    * written — the change log reads through them lazily until then. */
   case class RunResult(cleaned: DataFrame, changeLog: DataFrame,
       validationErrors: DataFrame, stages: Seq[StageResult], passed: Boolean) {
     def release(): Unit = Pins.flush()
@@ -52,9 +52,8 @@ object Pipeline {
       else RowIds.denseByOrder(master, "row_id",
         orderCols.map(n => col(s"`$n`")))
 
-    // lazy: the fill's eager per-source checkpoints run inside the fill
-    // stage's clock, forced by its first read below
-    lazy val fillRes = Fill.fillFromSources(withId, sources)
+    // one lazy plan: the fill stage's count below runs it
+    val fillRes = Fill.fillFromSources(withId, sources)
     val filled = timed("fill", stages)(fillRes.filled)
 
     val cleaned = timed("clean", stages)(Clean(filled))

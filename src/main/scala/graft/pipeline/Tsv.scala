@@ -47,16 +47,6 @@ object Tsv {
       .map(_.getAbsolutePath).sorted.toSeq
   }
 
-  /** Latest-file-by-mtime picker (S5; reference clean_contacts.py:239-245 —
-    * dead code there, kept as a capability). Ties broken by name for
-    * determinism. */
-  def latestTsv(dir: String): Option[String] = {
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.toLowerCase.endsWith(".tsv"))
-    if (files.isEmpty) None
-    else Some(files.maxBy(f => (f.lastModified(), f.getName)).getAbsolutePath)
-  }
-
   /** TSV sink (S6). `singleFile=true` honors the reference's one-file
     * contract (coalesce(1) + driver rename); false writes a normal
     * distributed directory of part files — the 100-TB default. */

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Text, Vec}
 import graft.operators.Dedup
-import graft.pipeline.{GoldenRecord, Validate}
+import graft.pipeline.Validate
 
 /** Unit coverage for the remaining public kernels not exercised elsewhere. */
 class CoverageSpec extends AnyFunSuite {
@@ -123,13 +123,6 @@ class CoverageSpec extends AnyFunSuite {
       capped.select("shingle").distinct().count()
     assert(droppedShingles >= 1, "the all-docs shingle should be dropped")
     assert(capped.count() < uncapped.count())
-  }
-
-  test("resetSeqNumbers assigns dense 1..N in the explicit order") {
-    val df = Seq((30L, "c"), (10L, "a"), (20L, "b")).toDF("SEQNO", "k")
-    val out = GoldenRecord.resetSeqNumbers(df, "SEQNO", Seq(col("k").asc))
-      .orderBy("k").collect().map(_.getLong(0)).toSeq
-    assert(out == Seq(1L, 2L, 3L))
   }
 
   test("Validate.summary: error-type rollup top-N with total order") {

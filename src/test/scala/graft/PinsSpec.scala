@@ -70,7 +70,7 @@ class PinsSpec extends AnyFunSuite {
       orderCols = Seq("FULLNAME", "MOBILE", "EMAIL"))
     assert(r.changeLog.count() == 1 && r.cleaned.count() == 2)
     assert(entries > entriesBefore,
-      "expected the run to pin its stages and Fill's probe/build")
+      "expected the run to pin its stages and Fill's fills frame")
     r.release()
     assert(Pins.activeCount == 0 && entries == entriesBefore,
       s"release left ${Pins.activeCount} pin(s) and " +

@@ -543,6 +543,110 @@ class PipelineSpec extends AnyFunSuite {
     Pins.flush()
   }
 
+  test("multi-source fill plan: one candidate join for any source count, no checkpoint, one pin") {
+    import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation,
+      InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
+      CartesianProductExec}
+    val (m, sources) = fillFixture(1)
+    Pins.flush()
+    for (n <- 1 to sources.size) {
+      val pinsBefore = Pins.activeCount
+      val r = Fill.fillFromSources(m, sources.take(n))
+      assert(Pins.activeCount - pinsBefore == 1, s"$n sources: one pin per fill")
+      // the pinned `fills` frame spelled out: the candidate join and the
+      // left join, both equi-joins, whatever the source count
+      val whole = spark.sessionState.optimizer.execute(r.filled.queryExecution.analyzed)
+      val joins = whole.collect { case j: Join => j }
+      assert(joins.size == 2 && joins.forall(j => ExtractEquiJoinKeys.unapply(j).isDefined),
+        s"$n sources: expected 2 equi-joins:\n$whole")
+      assert(whole.collect { case a: Aggregate => a }.isEmpty, s"an Aggregate:\n$whole")
+      assert(whole.collect { case l: LogicalRDD => l }.isEmpty, s"a checkpoint:\n$whole")
+      val log = r.changeLog.queryExecution.optimizedPlan
+      assert(log.collect { case j: Join => j }.isEmpty, s"a join in the log:\n$log")
+      assert(log.collect { case i: InMemoryRelation => i }.size == 1, log.toString)
+      if (n == sources.size) {
+        r.filled.collect()
+        def physical(p: SparkPlan): Seq[SparkPlan] = p match {
+          case a: AdaptiveSparkPlanExec => physical(a.executedPlan)
+          case q: QueryStageExec => physical(q.plan)
+          case t: InMemoryTableScanExec => t +: physical(t.relation.cachedPlan)
+          case other => other +: (other.children ++ other.subqueries).flatMap(physical)
+        }
+        val ops = physical(r.filled.queryExecution.executedPlan)
+        assert(!ops.exists(p => p.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+          p.isInstanceOf[CartesianProductExec]), ops.mkString("\n"))
+      }
+      Pins.flush()
+    }
+  }
+
+  test("fill from zero usable sources: the master, an empty log, an empty audit array") {
+    val (m, _) = fillFixture(1)
+    val r = Fill.fillFromSources(m, Seq.empty)
+    assert(r.filled.exceptAll(m).isEmpty && m.exceptAll(r.filled).isEmpty)
+    assert(r.changeLog.isEmpty)
+    val out = Files.createTempDirectory("nosources")
+    JsonAudit.writeArray(r.changeLog, s"$out/log.json")
+    assert(Files.readString(out.resolve("log.json")) == "[]")
+
+    // a sources directory whose every file the F6 guard skips (no usable
+    // role) runs as an empty one: same cleaned rows, an empty log
+    Files.writeString(out.resolve("master.tsv"),
+      "FIRSTNAME\tLASTNAME\tFULLNAME\tEMAIL\tMOBILE\tLAST_UPDATED\n" +
+      "Jo\tDo\tJo Do\t\t5551234567\t2020-01-01 00:00:00\n" +
+      "Bo\tBi\tBo Bi\tbo@y.com\t5550000000\t2020-06-01 00:00:00\n")
+    val empty = Files.createDirectories(out.resolve("empty"))
+    val skipped = Files.createDirectories(out.resolve("skipped"))
+    Files.writeString(skipped.resolve("notes.tsv"), "colour\tsize\nred\t9\n")
+    def run(dir: java.nio.file.Path) = {
+      val a = ContactsApp.Artifacts(s"$dir.tsv", s"$dir.log.json", s"$dir.errors.json")
+      ContactsApp.run(spark, s"$out/master.tsv", dir.toString, Some(a))
+      (Files.readString(java.nio.file.Paths.get(a.cleanedTsv)),
+        Files.readString(java.nio.file.Paths.get(a.changeLogJson)))
+    }
+    val (cleanedEmpty, logEmpty) = run(empty)
+    val (cleanedSkipped, logSkipped) = run(skipped)
+    assert(logEmpty == "[]" && logSkipped == "[]")
+    assert(cleanedSkipped == cleanedEmpty && cleanedEmpty.linesIterator.size == 3)
+  }
+
+  test("JsonAudit.writeArray over a sorted frame: no top-k in the plan, rows and bytes as collected") {
+    // RDD-backed, like a change log read through a pin: no row bound the
+    // optimizer could use to drop a limit
+    val df = spark.sparkContext
+      .parallelize((1 to 40).map(i => (i % 7, i, if (i % 5 == 0) null else s"v$i")), 3)
+      .toDF("k", "i", "s").orderBy(col("k").desc, col("i"))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val path = Files.createTempDirectory("audit").resolve("a.json")
+    spark.listenerManager.register(listener)
+    try JsonAudit.writeArray(df, path.toString)
+    finally {
+      org.apache.spark.graft.Listeners.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(!plans.isEmpty && !plans.toArray.exists(_.toString.contains("TakeOrdered")),
+      plans.toArray.mkString("\n"))
+    val want = df.select(to_json(struct(col("k"), col("i"), col("s")),
+        Map("ignoreNullFields" -> "false")))
+      .collect().map("  " + _.getString(0)).mkString("[\n", ",\n", "\n]")
+    assert(want.contains("\"s\":null"))
+    assert(Files.readString(path) == want)
+  }
+
   test("fill: multi-source change log in (source, row_id, field) order at 1 and 5 partitions") {
     val (m, sources) = fillFixture(2)
     val want = referenceFills(m, sources)._2
@@ -633,17 +737,6 @@ class PipelineSpec extends AnyFunSuite {
     // 1,240 physical lines but 1,223 logical rows: quoted notes fields span
     // lines; pandas (the reference reader) honors them -> multiLine parity
     assert(df.count() == 1223)
-  }
-
-  test("latestTsv picks newest file by mtime (S5)") {
-    val dir = Files.createTempDirectory("latest").toFile
-    val a = new java.io.File(dir, "a.tsv"); val b = new java.io.File(dir, "b.tsv")
-    Files.writeString(a.toPath, "x\n1")
-    Files.writeString(b.toPath, "x\n2")
-    a.setLastModified(1000000L); b.setLastModified(2000000L)
-    assert(Tsv.latestTsv(dir.getAbsolutePath).map(new java.io.File(_).getName)
-      .contains("b.tsv"))
-    assert(Tsv.latestTsv(Files.createTempDirectory("empty").toString).isEmpty)
   }
 
   // ------------------------------------------------------------------ Jdbc

@@ -6,6 +6,7 @@
 # failure mode). Usage:
 #   tools/gate.sh            # sf0.001 sweep (~2 min)
 #   GATE_FULL=1 tools/gate.sh  # also sf0.01 (the driver's gate scale)
+#   GATE_CONTACTS=1 tools/gate.sh  # also the contacts core-count lane
 set -e
 cd "$(git rev-parse --show-toplevel)"
 
@@ -89,6 +90,34 @@ if [ "${GATE_REST:-0}" = "1" ]; then
   python3 tools/rest_parity.py > /tmp/gate_rest.log 2>&1 || {
     grep '\[restparity\]' /tmp/gate_rest.log; exit 1; }
   grep '\[restparity\]' /tmp/gate_rest.log | tail -2
+fi
+
+# Contacts core-count lane (GATE_CONTACTS=1): the three ContactsMain
+# artifacts must not depend on the core count. Generates the seed-1
+# contacts_batch input (a 2,500-row master and six sources, with
+# perfbench/gen.py imported read-only) and runs ContactsMain at
+# SPARK_GRAFT_CPUS=2 and 4; every artifact must match byte for byte.
+# ContactsMain exits 1 when the planted validation errors are critical,
+# so a run counts as done when it prints its [result] line. Run it
+# whenever Fill, the pipeline's stages or its sinks change.
+if [ "${GATE_CONTACTS:-0}" = "1" ]; then
+  cin=/tmp/gate_contacts_in
+  rm -rf "$cin" /tmp/gate_contacts_c2 /tmp/gate_contacts_c4
+  PYTHONDONTWRITEBYTECODE=1 python3 -c "import sys; sys.path.insert(0, 'perfbench'); \
+import gen; gen.contacts_batch('$cin', 1, 2500)"
+  for c in 2 4; do
+    SPARK_GRAFT_CPUS=$c sbt -batch "runMain graft.pipeline.ContactsMain \
+$cin/master.tsv $cin/sources /tmp/gate_contacts_c$c" \
+      >/tmp/gate_sbt_contacts_c$c.log 2>&1 || true
+    grep -q '\[result\]' /tmp/gate_sbt_contacts_c$c.log || {
+      echo "[gate] ContactsMain at $c cores failed — tail of log:"
+      tail -20 /tmp/gate_sbt_contacts_c$c.log; exit 1; }
+  done
+  for f in cleaned_contacts.tsv fill_missing_log.json validation_errors.json; do
+    cmp /tmp/gate_contacts_c2/$f /tmp/gate_contacts_c4/$f || {
+      echo "[gate] contacts lane: $f differs between 2 and 4 cores"; exit 1; }
+  done
+  echo "[gate] contacts lane green: artifacts identical at 2 and 4 cores"
 fi
 
 if [ "${GATE_NO_RECALL:-0}" = "1" ]; then
