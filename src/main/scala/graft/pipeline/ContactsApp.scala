@@ -55,17 +55,21 @@ object ContactsApp {
     }.toMap
   }
 
-  /** Load one source file: all-string TSV + match keys + stable src_order
-    * (partition-offset ids — file order, no global window). */
+  /** Load one source file: all-string TSV + match keys + `src_order`, the
+    * scan's own `monotonically_increasing_id()`. That id is (partition,
+    * position) order, which is file order; `src_order` is only ever
+    * compared for order, so it needs no dense renumbering and the plan no
+    * extra job. */
   def loadSource(spark: SparkSession, path: String): DataFrame =
-    RowIds.denseInPartitionOrder(
-      withResolvedKeys(Tsv.readAllString(spark, path)), "src_order")
+    withResolvedKeys(Tsv.readAllString(spark, path))
+      .withColumn("src_order", monotonically_increasing_id())
 
   /** The merge_contacts_kindaworks entry point (SURVEY.md §3.3, J1): fill
     * the master's missing emails from a Mailchimp-style export by exact
     * (name, phone) match and missing phones by (name, email), first source
-    * row wins, broadcast build side. Headers are normalized (P2), roles
-    * coalesced (P4), keys normalized (P5) — all case-insensitively. */
+    * row in scan order wins, broadcast build side. Headers are normalized
+    * (P2), roles coalesced (P4), keys normalized (P5) — all
+    * case-insensitively. */
   def applyMailchimp(master: DataFrame, mailchimpRaw: DataFrame): DataFrame = {
     val lower = mailchimpRaw.toDF(mailchimpRaw.columns.map(_.trim.toLowerCase): _*)
     val keyed = withResolvedKeys(lower)
@@ -73,9 +77,9 @@ object ContactsApp {
       .map(col).getOrElse(lit(""))
     val srcPhone = Roles.byCandidates(lower, Roles.PhoneCandidates)
       .map(col).getOrElse(lit(""))
-    val mc = RowIds.denseInPartitionOrder(keyed, "src_order")
-      .select(col("src_order"), col("_name"), col("_email"), col("_phone"),
-        srcEmail.as("email"), srcPhone.as("mobile"))
+    val mc = keyed.select(monotonically_increasing_id().as("src_order"),
+      col("_name"), col("_email"), col("_phone"),
+      srcEmail.as("email"), srcPhone.as("mobile"))
 
     // the operator works on canonical email/mobile names; rename the
     // master's resolved role columns in and back out

@@ -6,7 +6,9 @@ package graft.pipeline
   * Writes cleaned_contacts.tsv, fill_missing_log.json and
   * validation_errors.json into outDir, prints per-stage timings and the
   * validation exit policy, exits non-zero on critical errors
-  * (SURVEY.md §3.1, validate_fields.py:144-162). */
+  * (SURVEY.md §3.1, validate_fields.py:144-162). The `[result]` counts are
+  * the dedup and validate stages' rows: the run has released its frames
+  * by then, so counting them again would re-run the pipeline. */
 object ContactsMain {
   def main(args: Array[String]): Unit = {
     val Array(masterPath, sourcesDir, outDir) = args.take(3)
@@ -21,9 +23,9 @@ object ContactsMain {
 
     r.stages.foreach(s =>
       println(f"[stage] ${s.name}%-10s ${s.seconds}%8.2f s  ${s.rows}%8d rows"))
-    println(s"[result] cleaned=${r.cleaned.count()} rows, " +
-      s"fills=${r.changeLog.count()}, errors=${r.validationErrors.count()}, " +
-      s"passed=${r.passed}")
+    val rows = r.stages.map(s => s.name -> s.rows).toMap
+    println(s"[result] cleaned=${rows("dedup")} rows, " +
+      s"errors=${rows("validate")}, passed=${r.passed}")
     spark.stop()
     if (!r.passed) sys.exit(1)
   }

@@ -1,12 +1,19 @@
 package graft.pipeline
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** TSV sources / sinks with the reference's reader semantics
   * (SURVEY.md §2.1 S1-S7).
   *
   * - typed read = pandas dtype inference (reference clean_contacts.py:260)
-  * - allString read = `dtype=str` + `fillna('')` (fill_missing_contacts.py:150)
+  * - allString read = `dtype=str` + `fillna('')` (fill_missing_contacts.py:150);
+  *   its header is read on the driver ([[header]]), so building the frame
+  *   runs no Spark job
   * - chunked reads (fill_missing_contacts_large.py:47-66) are free: Spark file
   *   scans are partitioned and pipelined by construction; the 10k-row chunk
   *   knob becomes `spark.sql.files.maxPartitionBytes`.
@@ -31,10 +38,30 @@ object Tsv {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.options(Dialect).option("inferSchema", true).csv(path)
 
-  /** All-string TSV scan (S2): every cell StringType, nulls -> "". */
+  /** All-string TSV scan (S2): every cell StringType, nulls -> "". The
+    * schema is [[header]]'s, passed to the reader, so no header pass runs. */
   def readAllString(spark: SparkSession, path: String): DataFrame =
-    spark.read.options(Dialect).option("inferSchema", false).csv(path)
+    spark.read.options(Dialect).schema(header(spark, path)).csv(path)
       .na.fill("")
+
+  /** The all-string schema Spark's header pass would infer for `path`, read
+    * on the driver through the Hadoop FS: the first record, tokenized with
+    * [[Dialect]]'s quote and escape, named as Spark names it (blank ->
+    * `_c<i>`, duplicates under the session's case sensitivity suffixed with
+    * their index). A local directory takes the header of its first `.tsv`
+    * in [[listTsv]] (name) order: its files share one header, as stream
+    * drops do. An empty file has no columns. */
+  private[graft] def header(spark: SparkSession, path: String): StructType = {
+    val file = new Path(listTsv(path).headOption.getOrElse(path))
+    val conf = spark.sessionState.conf
+    val opts = new CSVOptions(Dialect, false, conf.sessionLocalTimeZone)
+    val parser = new CsvParser(opts.asParserSettings)
+    parser.beginParsing(
+      file.getFileSystem(spark.sessionState.newHadoopConf()).open(file), opts.charset)
+    val first = try Option(parser.parseNext()).toSeq finally parser.stopParsing()
+    StructType(first.flatMap(CSVUtils.makeSafeHeader(_, conf.caseSensitiveAnalysis, opts))
+      .map(StructField(_, StringType)))
+  }
 
   /** Enumerate `*.tsv` in a directory in deterministic sorted order (S4).
     * The reference iterates `os.listdir` order — platform-dependent; sorted

@@ -26,9 +26,10 @@ import graft.pipeline.Clean
   * reader. */
 object ContactsStream {
 
-  /** All-string schema probed from an existing sample file. */
+  /** All-string schema of an existing sample file (or of a directory's
+    * first `.tsv`), its header read on the driver: no Spark job. */
   def schemaOf(spark: SparkSession, samplePath: String): StructType =
-    graft.pipeline.Tsv.readAllString(spark, samplePath).schema
+    graft.pipeline.Tsv.header(spark, samplePath)
 
   /** `maxFilesPerTrigger` is the file-source backpressure bound: each
     * micro-batch admits at most that many files, so one giant directory

@@ -96,10 +96,11 @@ fi
 # artifacts must not depend on the core count. Generates the seed-1
 # contacts_batch input (a 2,500-row master and six sources, with
 # perfbench/gen.py imported read-only) and runs ContactsMain at
-# SPARK_GRAFT_CPUS=2 and 4; every artifact must match byte for byte.
-# ContactsMain exits 1 when the planted validation errors are critical,
-# so a run counts as done when it prints its [result] line. Run it
-# whenever Fill, the pipeline's stages or its sinks change.
+# SPARK_GRAFT_CPUS=2 and 4; every artifact must match byte for byte and
+# its recorded md5. ContactsMain exits 1 when the planted validation
+# errors are critical, so a run counts as done when it prints its
+# [result] line. Run it whenever Fill, the pipeline's stages or its
+# sinks change.
 if [ "${GATE_CONTACTS:-0}" = "1" ]; then
   cin=/tmp/gate_contacts_in
   rm -rf "$cin" /tmp/gate_contacts_c2 /tmp/gate_contacts_c4
@@ -117,7 +118,18 @@ $cin/master.tsv $cin/sources /tmp/gate_contacts_c$c" \
     cmp /tmp/gate_contacts_c2/$f /tmp/gate_contacts_c4/$f || {
       echo "[gate] contacts lane: $f differs between 2 and 4 cores"; exit 1; }
   done
-  echo "[gate] contacts lane green: artifacts identical at 2 and 4 cores"
+  # the recorded seed-1 md5s: a change across commits fails the lane too;
+  # a change that means to alter an artifact updates its digest here
+  for fd in cleaned_contacts.tsv:a4ddc7a330daa293cf92764acac3780c \
+      fill_missing_log.json:d0db69cf7e196e025f2ba8577ea98f4b \
+      validation_errors.json:e587e0c04d5059ca53828011a7d6b275; do
+    f=${fd%%:*}; want=${fd#*:}
+    got=$(md5sum /tmp/gate_contacts_c2/$f | cut -d' ' -f1)
+    [ "$got" = "$want" ] || {
+      echo "[gate] contacts lane: $f md5 $got, recorded $want"; exit 1; }
+  done
+  echo "[gate] contacts lane green: artifacts identical at 2 and 4 cores" \
+    "and equal to the recorded seed-1 digests"
 fi
 
 if [ "${GATE_NO_RECALL:-0}" = "1" ]; then
