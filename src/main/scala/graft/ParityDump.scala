@@ -63,14 +63,8 @@ object ParityFillDump {
     val master = pipeline.ContactsApp.withResolvedKeys(
       pipeline.ContactsApp.withRowIds(
         pipeline.Tsv.readAllString(spark, masterTsv)))
-    val sources = pipeline.Tsv.listTsv(sourcesDir).flatMap { path =>
-      val src = pipeline.ContactsApp.loadSource(spark, path)
-      val fm = pipeline.ContactsApp.fieldMap(master, src)
-      val roles = pipeline.Roles.resolve(src)
-      if (!roles.usable || fm.isEmpty) None
-      else Some((new java.io.File(path).getName, src, fm))
-    }
-    val r = pipeline.Fill.fillFromSources(master, sources)
+    val r = pipeline.Fill.fillFromSources(master,
+      pipeline.ContactsApp.loadSources(spark, master, sourcesDir))
     pipeline.Tsv.write(r.filled.drop("_name", "_email", "_phone"),
       s"$outPrefix.filled.tsv", singleFile = true)
     pipeline.Tsv.write(r.changeLog, s"$outPrefix.filllog.tsv",

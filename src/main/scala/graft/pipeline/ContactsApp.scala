@@ -64,6 +64,18 @@ object ContactsApp {
     withResolvedKeys(Tsv.readAllString(spark, path))
       .withColumn("src_order", monotonically_increasing_id())
 
+  /** The `*.tsv` files of `sourcesDir` in [[Tsv.listTsv]] order as
+    * [[Pipeline.run]] takes them: (file name, [[loadSource]], [[fieldMap]]).
+    * F6 guard: a file with no usable roles (or nothing to map) is skipped. */
+  def loadSources(spark: SparkSession, master: DataFrame,
+      sourcesDir: String): Seq[(String, DataFrame, Map[String, String])] =
+    Tsv.listTsv(sourcesDir).flatMap { path =>
+      val src = loadSource(spark, path)
+      val fm = fieldMap(master, src)
+      if (!Roles.resolve(src).usable || fm.isEmpty) None
+      else Some((new java.io.File(path).getName, src, fm))
+    }
+
   /** The merge_contacts_kindaworks entry point (SURVEY.md §3.3, J1): fill
     * the master's missing emails from a Mailchimp-style export by exact
     * (name, phone) match and missing phones by (name, email), first source
@@ -121,16 +133,7 @@ object ContactsApp {
       singleFileArtifacts: Boolean = true): Pipeline.RunResult = {
     val master = withResolvedKeys(withRowIds(Tsv.readAllString(spark, masterPath)))
 
-    val sources = Tsv.listTsv(sourcesDir).flatMap { path =>
-      val src = loadSource(spark, path)
-      val fm = fieldMap(master, src)
-      val roles = Roles.resolve(src)
-      // F6 guard: a file with no usable roles (or nothing to map) is skipped
-      if (!roles.usable || fm.isEmpty) None
-      else Some((new java.io.File(path).getName, src, fm))
-    }
-
-    val result = Pipeline.run(spark, master, sources,
+    val result = Pipeline.run(spark, master, loadSources(spark, master, sourcesDir),
       orderCols = Seq("row_id"))
 
     out.foreach { a =>

@@ -48,7 +48,7 @@ object Tsv {
     * on the driver through the Hadoop FS: the first record, tokenized with
     * [[Dialect]]'s quote and escape, named as Spark names it (blank ->
     * `_c<i>`, duplicates under the session's case sensitivity suffixed with
-    * their index). A local directory takes the header of its first `.tsv`
+    * their index). A directory takes the header of its first `.tsv`
     * in [[listTsv]] (name) order: its files share one header, as stream
     * drops do. An empty file has no columns. */
   private[graft] def header(spark: SparkSession, path: String): StructType = {
@@ -66,12 +66,16 @@ object Tsv {
   /** Enumerate `*.tsv` in a directory in deterministic sorted order (S4).
     * The reference iterates `os.listdir` order — platform-dependent; sorted
     * order is the explicit-determinism fix (SURVEY.md §4). Per-file schemas
-    * differ, so this cannot be one glob read. */
+    * differ, so this cannot be one glob read. Listed through the Hadoop FS:
+    * a URI lists what its path does, a plain path lists absolute paths, and
+    * a file or a missing path lists nothing. */
   def listTsv(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.toLowerCase.endsWith(".tsv"))
-      .map(_.getAbsolutePath).sorted.toSeq
+    val d = new Path(dir)
+    val fs = d.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+    val local = d.toUri.getScheme == null
+    (if (fs.exists(d) && fs.getFileStatus(d).isDirectory) fs.listStatus(d).toSeq else Nil)
+      .filter(f => f.isFile && f.getPath.getName.toLowerCase.endsWith(".tsv"))
+      .map(f => if (local) f.getPath.toUri.getPath else f.getPath.toString).sorted
   }
 
   /** TSV sink (S6). `singleFile=true` honors the reference's one-file

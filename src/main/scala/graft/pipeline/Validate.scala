@@ -129,7 +129,11 @@ object Validate {
     errs.groupBy("error").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("error").asc).limit(topN)
 
-  /** Exit policy: true = pass (no critical errors). */
-  def passes(errs: DataFrame): Boolean =
-    errs.filter(col("error").isin(CriticalErrors.toSeq: _*)).isEmpty
+  /** The rows of `errs` and the exit policy (true = pass: no critical
+    * error), from one aggregate. */
+  def verdict(errs: DataFrame): (Long, Boolean) = {
+    val r = errs.agg(count(lit(1)),
+      count_if(col("error").isin(CriticalErrors.toSeq: _*))).head()
+    (r.getLong(0), r.getLong(1) == 0)
+  }
 }

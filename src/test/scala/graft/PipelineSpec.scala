@@ -705,9 +705,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(!byRow.contains(1L))
     assert(byRow(2L) == 3L)
     assert(!byRow.contains(3L))
-    assert(!Validate.passes(errs)) // invalid email is critical
+    assert(Validate.verdict(errs) == (3L, false)) // invalid email is critical
     val ok = Validate.errors(df.filter(col("row_id") === 1L))
-    assert(Validate.passes(ok))
+    assert(Validate.verdict(ok) == (0L, true))
   }
 
   // ------------------------------------------------------------------- Tsv
@@ -755,26 +755,76 @@ class PipelineSpec extends AnyFunSuite {
 
   // -------------------------------------------------------------- Pipeline
 
-  test("end-to-end pipeline: fill -> clean -> dedup -> validate") {
+  /** The end-to-end test's master (three rows, two of them one contact once
+    * filled) and its one source. */
+  private def e2eInputs: (DataFrame, Seq[(String, DataFrame, Map[String, String])]) = {
     val m = Seq(
       ("Jo", "Do", "jo do", "", "5551234567", "2020-01-01 00:00:00", "y"),
       ("JO", "DO", "jo do", "jo@x.com", "5551234567", "2021-01-01 00:00:00", "Y"),
       ("Bo", "Bi", "bo bi", "bo@y.com", "5550000000", "2020-06-01 00:00:00", "n"))
       .toDF("FIRSTNAME", "LASTNAME", "FULLNAME", "EMAIL", "MOBILE",
         "LAST_UPDATED", "ISACTIVE")
-    val mk = Fill.withMatchKeys(m, col("FULLNAME"), col("EMAIL"), col("MOBILE"))
     val src = Fill.withMatchKeys(
       Seq((1L, "jo do", "jo@x.com", "5551234567"))
         .toDF("src_order", "name", "email", "phone"),
       col("name"), col("email"), col("phone"))
-    val r = Pipeline.run(spark, mk,
-      Seq(("s1", src, Map("EMAIL" -> "email"))),
-      orderCols = Seq("FULLNAME", "MOBILE", "EMAIL"))
+    (Fill.withMatchKeys(m, col("FULLNAME"), col("EMAIL"), col("MOBILE")),
+      Seq(("s1", src, Map("EMAIL" -> "email"))))
+  }
+
+  private def runE2E(mk: DataFrame,
+      srcs: Seq[(String, DataFrame, Map[String, String])]): Pipeline.RunResult =
+    Pipeline.run(spark, mk, srcs, orderCols = Seq("FULLNAME", "MOBILE", "EMAIL"))
+
+  test("end-to-end pipeline: fill -> clean -> dedup -> validate") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val (mk, srcs) = e2eInputs
+    val sc = spark.sparkContext
+    val group = "pipeline-e2e-executions"
+    val executions = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          executions.incrementAndGet()
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    val r = try {
+      sc.setJobGroup(group, "Pipeline.run SQL executions", interruptOnCancel = false)
+      try runE2E(mk, srcs) finally sc.clearJobGroup()
+    } finally {
+      org.apache.spark.graft.Listeners.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    // the golden table's count and the validation aggregate, nothing more
+    assert(executions.get == 2, s"Pipeline.run started ${executions.get} SQL executions")
     // both jo rows got email jo@x.com -> dedup key collapses them
     assert(r.cleaned.count() == 2)
-    assert(r.stages.map(_.name) == Seq("fill", "clean", "dedup", "validate"))
+    assert(r.stages.map(s => s.name -> s.rows) == Seq("fill" -> 3L, "clean" -> 3L,
+      "dedup" -> 2L, "validate" -> r.validationErrors.count()))
     assert(r.passed)
     val jo = r.cleaned.filter(col("EMAIL") === "jo@x.com").head()
     assert(jo.getAs[String]("ISACTIVE") == "Y")
+    r.release()
+  }
+
+  test("a second run over the same frames, unreleased, observes its own rows") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val (mk, srcs) = e2eInputs
+    // the second run's plans meet the first run's live pins: a count served
+    // from them would leave its observations unfilled and block forever
+    // (pins are per thread: the runs release in the thread that pinned)
+    val (a, b, errors) = Await.result(Future {
+      val runs = Seq(runE2E(mk, srcs), runE2E(mk, srcs))
+      val Seq(a, b) = runs.map(r => (r.stages.map(_.rows), r.passed))
+      val errors = runs.head.validationErrors.count()
+      runs.foreach(_.release())
+      (a, b, errors)
+    }, 2.minutes)
+    assert(a == b && a == (Seq(3L, 3L, 2L, errors), true), (a, b))
   }
 }

@@ -55,6 +55,19 @@ class TsvSpec extends AnyFunSuite {
     assert(columns("UTF-8 BOM") == Seq("a", "b"))
   }
 
+  test("listTsv names the same files for a directory and its file:// URI") {
+    val _ = spark // listTsv reads the active session's Hadoop conf
+    val d = Files.createTempDirectory("tsv-list")
+    Seq("b.tsv", "a.TSV", "notes.txt").foreach(n => write(d.resolve(n), "x\n"))
+    write(d.resolve("sub.tsv").resolve("c.tsv"), "x\n")
+    val plain = Tsv.listTsv(d.toString)
+    assert(plain == Seq("a.TSV", "b.tsv").map(n => d.resolve(n).toString))
+    assert(Tsv.listTsv("file://" + d).map(p => new java.net.URI(p).getPath) == plain)
+    // a file or a missing directory lists as empty
+    assert(Tsv.listTsv(d.resolve("b.tsv").toString).isEmpty)
+    assert(Tsv.listTsv(d.resolve("missing").toString).isEmpty)
+  }
+
   test("opening a contact file runs no Spark job; a source plan is one scan") {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}

@@ -97,7 +97,8 @@ fi
 # contacts_batch input (a 2,500-row master and six sources, with
 # perfbench/gen.py imported read-only) and runs ContactsMain at
 # SPARK_GRAFT_CPUS=2 and 4; every artifact must match byte for byte and
-# its recorded md5. ContactsMain exits 1 when the planted validation
+# its recorded md5, and each run's [stage] rows and [result] line their
+# recorded values. ContactsMain exits 1 when the planted validation
 # errors are critical, so a run counts as done when it prints its
 # [result] line. Run it whenever Fill, the pipeline's stages or its
 # sinks change.
@@ -118,6 +119,17 @@ $cin/master.tsv $cin/sources /tmp/gate_contacts_c$c" \
     cmp /tmp/gate_contacts_c2/$f /tmp/gate_contacts_c4/$f || {
       echo "[gate] contacts lane: $f differs between 2 and 4 cores"; exit 1; }
   done
+  # the recorded seed-1 stage rows and [result] line, at both core counts
+  want_rows="fill=2500 clean=2500 dedup=1506 validate=1093"
+  want_result="cleaned=1506 rows, errors=1093, passed=true"
+  for c in 2 4; do
+    log=/tmp/gate_sbt_contacts_c$c.log
+    got_rows=$(sed -n 's/.*\[stage\] *\([a-z]*\) .* \([0-9]*\) rows$/\1=\2/p' $log | xargs)
+    got_result=$(sed -n 's/.*\[result\] //p' $log)
+    [ "$got_rows" = "$want_rows" ] && [ "$got_result" = "$want_result" ] || {
+      echo "[gate] contacts lane at $c cores: stages '$got_rows', result" \
+        "'$got_result'; recorded '$want_rows', '$want_result'"; exit 1; }
+  done
   # the recorded seed-1 md5s: a change across commits fails the lane too;
   # a change that means to alter an artifact updates its digest here
   for fd in cleaned_contacts.tsv:a4ddc7a330daa293cf92764acac3780c \
@@ -129,7 +141,7 @@ $cin/master.tsv $cin/sources /tmp/gate_contacts_c$c" \
       echo "[gate] contacts lane: $f md5 $got, recorded $want"; exit 1; }
   done
   echo "[gate] contacts lane green: artifacts identical at 2 and 4 cores" \
-    "and equal to the recorded seed-1 digests"
+    "and equal to the recorded seed-1 digests, stage rows and result"
 fi
 
 if [ "${GATE_NO_RECALL:-0}" = "1" ]; then
